@@ -34,6 +34,7 @@ def main() -> None:
 
     from linkgraph.extract import extract_pages
     from linkgraph.normalize import build_edges, build_vertices, canonical_edges
+    from linkgraph.tables import committed_rows
 
     t0 = time.monotonic()
     pages = spark.read.parquet(args.pages)
@@ -63,7 +64,7 @@ def main() -> None:
             {
                 "pages": pages.count(),
                 "vertices": vertices.count(),
-                "edges": spark.read.parquet(f"{args.out}/edges").count(),
+                "edges": committed_rows(f"{args.out}/edges"),
                 "wall_s": round(time.monotonic() - t0, 2),
             }
         )

@@ -92,6 +92,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("linkgraph-gql").getOrCreate()
     from linkgraph.catalog import GraphCatalog
     from linkgraph.gql import compile_query
+    from linkgraph.tables import committed_rows
 
     with open(args.catalog) as f:
         cat = GraphCatalog(spark, json.load(f))
@@ -159,7 +160,7 @@ def main() -> None:
         df.explain("formatted")
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
+        n = committed_rows(args.out)
     else:
         rows = df.collect()
         n = len(rows)

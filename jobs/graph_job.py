@@ -84,6 +84,7 @@ def main() -> None:
     from linkgraph.algos.ppr import personalized_pagerank
     from linkgraph.algos.triangles import triangle_list
     from linkgraph.algos.walks import random_walks
+    from linkgraph.tables import committed_rows
 
     edges = spark.read.parquet(args.edges)
     n_edges = edges.count()
@@ -93,7 +94,7 @@ def main() -> None:
         tl = triangle_list(edges)
         if args.out:
             tl.write.mode("overwrite").parquet(args.out)
-            info["rows"] = spark.read.parquet(args.out).count()
+            info["rows"] = committed_rows(args.out)
         else:
             info["rows"] = tl.count()
     else:
@@ -152,7 +153,7 @@ def main() -> None:
                                     max_iter=args.iters)
         if args.out:
             res.state.write.mode("overwrite").parquet(args.out)
-            info["rows"] = spark.read.parquet(args.out).count()
+            info["rows"] = committed_rows(args.out)
         else:
             info["rows"] = res.state.count()
         info["iterations"] = res.iterations

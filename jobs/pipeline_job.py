@@ -11,9 +11,15 @@ resumable Spark driver:
         --pages /path/pages --out /path/run1
 
 Every stage commits to a manifest (<out>/_manifest.json, written
-atomically) with its row counts and wall time, and appends one row to
-the <out>/metrics parquet table (stage, rows, wall_s, finished_at — the
-IExecutionRecorder/BuilderMetric analog). A killed job rerun with the
+atomically) with its row counts and wall time, and adds one row to the
+<out>/metrics parquet table (stage, rows, wall_s, finished_at — the
+IExecutionRecorder/BuilderMetric analog). This bookkeeping launches no
+Spark job: a stage's row count is read from the parquet footers of the
+part files its write just committed (``resolve``'s survivor count is an
+observed metric of its write), and the metrics row is a one-row parquet
+file <out>/metrics/<stage>.parquet written from the driver with pyarrow,
+under a ``.``-prefixed temporary name and then renamed into place, like
+the manifest. A killed job rerun with the
 same arguments skips committed stages; the PageRank stage additionally
 checkpoints supersteps through linkgraph.pregel.CheckpointStore, so a
 kill MID-ITERATION resumes mid-iteration (see test_pregel_resume).
@@ -29,7 +35,9 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+
+from linkgraph.tables import committed_rows, write_rows
 
 
 STAGES = ("extract", "normalize", "host_graph", "pagerank", "dedup", "resolve")
@@ -51,17 +59,24 @@ def _commit(out: str, manifest: dict) -> None:
     os.replace(tmp, path)  # atomic: a kill never leaves a torn manifest
 
 
-def _record(spark: SparkSession, out: str, stage: str, metrics: dict) -> None:
-    row = {
-        "stage": stage,
-        "rows": int(metrics.get("rows", 0)),
-        "wall_s": float(metrics.get("wall_s", 0.0)),
-        "finished_at": float(metrics.get("finished_at", time.time())),
-    }
-    spark.createDataFrame(
-        [tuple(row.values())],
-        "stage string, rows bigint, wall_s double, finished_at double",
-    ).write.mode("append").parquet(os.path.join(out, "metrics"))
+def _record(out: str, stage: str, metrics: dict) -> None:
+    import pyarrow as pa
+
+    write_rows(
+        os.path.join(out, "metrics", f"{stage}.parquet"),
+        [(
+            stage,
+            int(metrics.get("rows", 0)),
+            float(metrics.get("wall_s", 0.0)),
+            float(metrics.get("finished_at", time.time())),
+        )],
+        [
+            ("stage", pa.string()),
+            ("rows", pa.int64()),
+            ("wall_s", pa.float64()),
+            ("finished_at", pa.float64()),
+        ],
+    )
 
 
 def run_pipeline(
@@ -99,17 +114,20 @@ def run_pipeline(
     manifest["args"] = args_now
     # re-append metrics rows lost to a kill between manifest commit and
     # the metrics write (the manifest is the source of truth)
-    mpath = os.path.join(out, "metrics")
     if done:
+        import pyarrow.parquet as pq
+
         try:
-            have = {
-                r["stage"] for r in spark.read.parquet(mpath).collect()
-            }
-        except Exception:
+            have = set(
+                pq.read_table(os.path.join(out, "metrics"), columns=["stage"])
+                .column("stage")
+                .to_pylist()
+            )
+        except (OSError, ValueError):
             have = set()
         for name, m in done.items():
             if name not in have:
-                _record(spark, out, name, m)
+                _record(out, name, m)
 
     def stage(name: str, fn) -> None:
         if name in done:
@@ -123,7 +141,7 @@ def run_pipeline(
         }
         done[name] = m
         _commit(out, manifest)
-        _record(spark, out, name, m)
+        _record(out, name, m)
         if fail_after == name:
             raise RuntimeError(f"fail_after={name} (test hook)")
 
@@ -143,9 +161,8 @@ def run_pipeline(
             F.col("link.anchor").alias("anchor"),
         )
         raw_edges.write.mode("overwrite").parquet(f"{out}/raw_edges")
-        n = extracted.count()
         extracted.unpersist()
-        return n
+        return committed_rows(f"{out}/text")
 
     def _normalize() -> int:
         from linkgraph.normalize import build_edges, build_vertices, canonical_edges
@@ -159,14 +176,14 @@ def run_pipeline(
         canon.write.mode("overwrite").parquet(f"{out}/canon_edges")
         canon.unpersist()
         vertices.unpersist()
-        return spark.read.parquet(f"{out}/edges").count()
+        return committed_rows(f"{out}/edges")
 
     def _host_graph() -> int:
         from linkgraph.normalize import host_graph
 
         hg = host_graph(spark.read.parquet(f"{out}/canon_edges"))
         hg.write.mode("overwrite").parquet(f"{out}/host_graph")
-        return spark.read.parquet(f"{out}/host_graph").count()
+        return committed_rows(f"{out}/host_graph")
 
     def _pagerank() -> int:
         from linkgraph.algos import pagerank
@@ -180,7 +197,7 @@ def run_pipeline(
             checkpoint_every=2,
         )
         pr.state.write.mode("overwrite").parquet(f"{out}/pagerank")
-        return spark.read.parquet(f"{out}/pagerank").count()
+        return committed_rows(f"{out}/pagerank")
 
     def _dedup() -> int:
         from linkgraph.pipeline.dedup import minhash_lsh_pairs
@@ -188,7 +205,7 @@ def run_pipeline(
         text = spark.read.parquet(f"{out}/text")
         pairs = minhash_lsh_pairs(text, id_col="url", text_col="text")
         pairs.write.mode("overwrite").parquet(f"{out}/dedup_pairs")
-        return spark.read.parquet(f"{out}/dedup_pairs").count()
+        return committed_rows(f"{out}/dedup_pairs")
 
     def _resolve() -> int:
         from linkgraph.pipeline.dedup import near_dedup
@@ -199,13 +216,14 @@ def run_pipeline(
             pairs=spark.read.parquet(f"{out}/dedup_pairs"),
             id_col="url",
         )
-        canon.write.mode("overwrite").parquet(f"{out}/canonical_docs")
-        # row count = surviving docs (the deduped corpus size)
-        return (
-            spark.read.parquet(f"{out}/canonical_docs")
-            .where(F.col("url") == F.col("canonical_id"))
-            .count()
-        )
+        # row count = surviving docs (the deduped corpus size), observed
+        # on the write itself
+        survivors = Observation()
+        canon.observe(
+            survivors,
+            F.sum((F.col("url") == F.col("canonical_id")).cast("long")).alias("n"),
+        ).write.mode("overwrite").parquet(f"{out}/canonical_docs")
+        return int(survivors.get["n"] or 0)
 
     fns = {
         "extract": _extract,

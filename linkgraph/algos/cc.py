@@ -17,7 +17,7 @@ Two modes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
@@ -189,7 +189,11 @@ def connected_components(
     # materialization itself, zero extra jobs per superstep (r6; the
     # intermediate form ran a filter+count job over the materialized
     # state, still one job per superstep).
-    pending_obs: list[Observation] = []
+    #
+    # The observed flag-sum is the number of vertices whose label
+    # changed: least() only decreases, so new != old  ⟺  mmin <
+    # old.component  ⟺  _ch.
+    delta = pregel.ObservedDelta()
 
     def superstep(edges_df: DataFrame, state: DataFrame, i: int) -> DataFrame:
         s = F.broadcast(state) if broadcast_state else state
@@ -207,16 +211,7 @@ def connected_components(
             ).alias("component"),
             (F.col("mmin") < F.col("component")).alias("_ch"),
         )
-        obs = Observation()
-        pending_obs.append(obs)
-        return new.observe(obs, F.sum(F.col("_ch").cast("long")).alias("changed"))
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        # equivalent to changed_count(old, new): least() only decreases,
-        # so new != old  ⟺  mmin < old.component  ⟺  _ch. The metric was
-        # collected during the superstep's own materialization.
-        obs = pending_obs.pop()
-        return float(obs.get["changed"] or 0)
+        return delta.observe(new, F.sum(F.col("_ch").cast("long")))
 
     try:
         res = pregel.run_pregel(

@@ -16,7 +16,7 @@ Spark's partial aggregation + AQE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
@@ -67,7 +67,9 @@ def label_propagation(
 
     # changed-count collected as an observed metric of the superstep
     # plan itself (r6, as in cc.py): the delta costs zero extra jobs.
-    pending_obs: list[Observation] = []
+    # A label changed ⟺ the adopted newlabel was non-null and differed
+    # (null ⇒ excluded from the observed _ch sum).
+    delta = pregel.ObservedDelta()
 
     def superstep(edges_df: DataFrame, state: DataFrame, i: int) -> DataFrame:
         s = F.broadcast(state) if broadcast_state else state
@@ -89,17 +91,7 @@ def label_propagation(
             F.coalesce(F.col("newlabel"), F.col("label")).alias("label"),
             (F.col("newlabel") != F.col("label")).alias("_ch"),
         )
-        obs = Observation()
-        pending_obs.append(obs)
-        return new.observe(obs, F.sum(F.col("_ch").cast("long")).alias("changed"))
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        # equivalent to changed_count(old, new): label changed ⟺ the
-        # adopted newlabel was non-null and differed (null ⇒ excluded
-        # from the sum). Collected during the superstep's own
-        # materialization — no extra job.
-        obs = pending_obs.pop()
-        return float(obs.get["changed"] or 0)
+        return delta.observe(new, F.sum(F.col("_ch").cast("long")))
 
     try:
         res = pregel.run_pregel(

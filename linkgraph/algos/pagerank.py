@@ -15,10 +15,14 @@ groupBy, /root/reference/reasoner/runner/local-runner/.../rdg/LocalRDG.java:499-
 
 Physical plan (tuned via .explain — see docs/PLANS.md):
   * edges are cached hash-partitioned by ``dst``. When the rank state is
-    broadcastable, each superstep is then a single shuffle-free stage:
+    broadcastable, the message pass is then shuffle-free:
     BroadcastHashJoin (probe the V-row state) feeding partial+final
     HashAggregate on dst — ZERO exchange of the E-row side, per
-    iteration, ever.
+    iteration, ever. The V-row side does shuffle: the
+    ``localCheckpoint``-ed state scans with unknown partitioning
+    (``UnknownPartitioning(0)`` on Spark 4.1.2), so the state-update
+    join adds ``Exchange hashpartitioning(vid)`` + Sort + SortMergeJoin
+    each superstep (plans/r06/pagerank_superstep_after.txt).
   * when V is too large to broadcast (the 10^12-doc regime),
     ``broadcast_state=False`` switches to the exchange plan: edges stay
     cached partitioned on ``src`` (join key), only the V-row state and
@@ -29,9 +33,11 @@ Physical plan (tuned via .explain — see docs/PLANS.md):
     no per-iteration join against a separate degree table, and the
     vertex/url table is never touched inside the loop (the reference's
     NodeIdToEdgeProperty rewrite, optimizer/rules/NodeIdToEdgeProperty.scala:34).
-  * 1 action per superstep in fixed-iteration mode (the localCheckpoint;
-    the dangling-mass aggregate rides the same plan as a broadcast 1-row
-    frame); +1 (convergence delta) in tol mode.
+  * 1 action per superstep, the localCheckpoint, in both modes: the
+    dangling-mass aggregate rides the same plan as a broadcast 1-row
+    frame, and in tol mode the L∞ delta is an observed metric of that
+    materialization. AQE runs the action as 5 Spark jobs (its shuffle
+    and broadcast stages are jobs of their own).
 """
 
 from __future__ import annotations
@@ -68,7 +74,7 @@ def pagerank(
     ``tol=0`` + ``max_iter=k`` gives exactly-k synchronous iterations
     (what the fixed-iteration oracle checks); ``tol=1e-6`` is the
     convergence mode of BASELINE.md; ``tol=None`` skips the convergence
-    action (fixed-iteration benchmark mode).
+    delta (fixed-iteration benchmark mode).
 
     ``init_scores`` (vid, score) warm-starts the iteration — the
     incremental-crawl path: after appending a day's extracted edges,
@@ -144,9 +150,14 @@ def pagerank(
         init = base_state.select(
             "vid", F.lit(1.0 / n).alias("score"), "out_degree"
         )
-    # pin hash(vid, P) so every superstep's state-update merge join is
-    # co-partitioned with the hash(dst, P) message sums — no exchange
+    # lay the state out by hash(vid, P); the localCheckpoint-ed state
+    # does not report that partitioning, so the state-update join still
+    # exchanges it each superstep (see the module docstring)
     init = init.repartition(num_partitions, "vid")
+    # tol mode: the superstep carries the old score as ``_old`` and
+    # observes max |score - _old| on its own localCheckpoint, the same
+    # L∞ delta as pregel.linf_delta without its join and collect jobs
+    delta = pregel.ObservedDelta() if tol is not None else None
 
     def superstep(edges_df: DataFrame, state: DataFrame, i: int) -> DataFrame:
         # dangling mass rides the plan as a broadcast 1-row frame instead
@@ -179,24 +190,24 @@ def pagerank(
             + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
             + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
         ).alias("score")
-        # state update: merge-join state (hash(vid, P)) with sums — in the
-        # broadcast plan sums inherit the edge cache's hash(dst, P)
-        # partitioning from the exchange-free aggregate, so this join
-        # needs no exchange either; the merge hint stops AQE from
-        # building another serial driver-side broadcast per superstep.
-        return state.hint("merge").join(
+        # state update: merge-join state with sums; the merge hint stops
+        # AQE from building another serial driver-side broadcast per
+        # superstep (the state side is exchanged and sorted, see above)
+        new = state.hint("merge").join(
             sums, state["vid"] == sums["dst"], "left"
-        ).crossJoin(dangling).select("vid", newscore, "out_degree")
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        return pregel.linf_delta(old, new, "vid", "score")
+        ).crossJoin(dangling).select(
+            "vid", newscore, "out_degree", F.col("score").alias("_old")
+        )
+        if delta is not None:
+            new = delta.observe(new, F.max(F.abs(F.col("score") - F.col("_old"))))
+        return new.drop("_old")
 
     try:
         res = pregel.run_pregel(
             e,
             init,
             superstep,
-            delta if tol is not None else None,
+            delta,
             max_iter=max_iter,
             tol=tol if tol is not None else 0.0,
             checkpoint_dir=checkpoint_dir,

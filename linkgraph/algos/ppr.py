@@ -97,6 +97,9 @@ def personalized_pagerank(
             "vid", seed_col.alias("score"), "out_degree"
         )
     init = init.repartition(num_partitions, "vid")
+    # tol mode observes the L∞ delta on the superstep itself, as in
+    # pagerank.py
+    delta = pregel.ObservedDelta() if tol is not None else None
 
     def superstep(edges_df: DataFrame, state: DataFrame, i: int) -> DataFrame:
         # dangling mass rides the plan as a broadcast 1-row frame (r6;
@@ -124,19 +127,21 @@ def personalized_pagerank(
                 F.col("vid").isin(seed_list), teleport / F.lit(float(ns))
             ).otherwise(0.0)
         ).alias("score")
-        return state.hint("merge").join(
+        new = state.hint("merge").join(
             sums, state["vid"] == sums["dst"], "left"
-        ).crossJoin(dangling).select("vid", newscore, "out_degree")
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        return pregel.linf_delta(old, new, "vid", "score")
+        ).crossJoin(dangling).select(
+            "vid", newscore, "out_degree", F.col("score").alias("_old")
+        )
+        if delta is not None:
+            new = delta.observe(new, F.max(F.abs(F.col("score") - F.col("_old"))))
+        return new.drop("_old")
 
     try:
         res = pregel.run_pregel(
             e,
             init,
             superstep,
-            delta if tol is not None else None,
+            delta,
             max_iter=max_iter,
             tol=tol if tol is not None else 0.0,
             job_id="ppr",

@@ -18,11 +18,11 @@ Scale design:
   * ``localCheckpoint(eager=True)`` per superstep truncates lineage —
     without it the plan grows linearly with iterations and the driver
     OOMs long before 100 TB.
-  * durable checkpoints (parquet delta frames + metrics rows + a COMMIT
-    marker) every ``checkpoint_every`` supersteps make a killed job
-    resumable mid-iteration; the store is an interface so an Iceberg
-    snapshot-append backend can be dropped in when the runtime jars are
-    on the classpath.
+  * durable checkpoints (a parquet state frame, driver-written metrics
+    rows and a COMMIT marker) every ``checkpoint_every`` supersteps make
+    a killed job resumable mid-iteration; the store is an interface so
+    an Iceberg snapshot-append backend can be dropped in when the
+    runtime jars are on the classpath.
   * the edge table is partitioned by the join key once (normalize.py);
     only messages shuffle each superstep.
 """
@@ -36,8 +36,10 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from linkgraph.tables import part_rows, write_rows
 
 SuperstepFn = Callable[[DataFrame, DataFrame, int], DataFrame]
 DeltaFn = Callable[[DataFrame, DataFrame], float]
@@ -54,10 +56,17 @@ class PregelResult:
 class CheckpointStore:
     """Parquet-directory checkpoint store with commit markers.
 
-    Layout: ``<root>/<job_id>/superstep=<k>/{state/, metrics.json, _COMMITTED}``.
-    A checkpoint is visible only once ``_COMMITTED`` exists, so a job
-    killed mid-write never poisons resume. Metrics include per-partition
-    row counts (the lineage/metrics rows the north rule requires).
+    Layout: ``<root>/<job_id>/superstep=<k>/{state/, metrics.json,
+    metrics_rows/, partition_rows/, _COMMITTED}``. A checkpoint is
+    visible only once ``_COMMITTED`` exists, so a job killed mid-write
+    never poisons resume. Metrics include per-partition row counts (the
+    lineage/metrics rows the north rule requires).
+
+    A save launches one Spark job, the state write. The per-partition
+    row counts come from the footers of the part files that write
+    committed, and ``metrics.json``, ``metrics_rows`` and
+    ``partition_rows`` (one parquet file each) are written from the
+    driver; ``_COMMITTED`` is written last.
     """
 
     def __init__(self, root: str, job_id: str):
@@ -90,16 +99,19 @@ class CheckpointStore:
                 os.remove(p)
 
     def save(self, superstep: int, state: DataFrame, metrics: list[dict]) -> None:
+        import pyarrow as pa
+
         d = self._step_dir(superstep)
         if os.path.exists(d):
             shutil.rmtree(d)
-        state.write.mode("overwrite").parquet(os.path.join(d, "state"))
+        state_dir = os.path.join(d, "state")
+        state.write.mode("overwrite").parquet(state_dir)
+        # the state is a localCheckpoint-ed frame, so write task k is its
+        # partition k and the footers give the per-partition row counts
         per_part = [
-            {"partition": r["pid"], "rows": r["count"]}
-            for r in state.select(F.spark_partition_id().alias("pid"))
-            .groupBy("pid")
-            .count()
-            .collect()
+            {"partition": pid, "rows": n}
+            for pid, n in sorted(part_rows(state_dir).items())
+            if n
         ]
         with open(os.path.join(d, "metrics.json"), "w") as f:
             json.dump(
@@ -108,9 +120,9 @@ class CheckpointStore:
             )
         # queryable metrics/lineage rows (IExecutionRecorder analog):
         # one row per completed superstep + one per state partition
-        spark = state.sparkSession
         if metrics:
-            spark.createDataFrame(
+            write_rows(
+                os.path.join(d, "metrics_rows", "part-00000.parquet"),
                 [
                     (
                         m.get("job_id", ""),
@@ -121,13 +133,19 @@ class CheckpointStore:
                     )
                     for m in metrics
                 ],
-                "job_id string, superstep int, parent_superstep int, "
-                "wall_s double, delta double",
-            ).write.mode("overwrite").parquet(os.path.join(d, "metrics_rows"))
-        spark.createDataFrame(
+                [
+                    ("job_id", pa.string()),
+                    ("superstep", pa.int32()),
+                    ("parent_superstep", pa.int32()),
+                    ("wall_s", pa.float64()),
+                    ("delta", pa.float64()),
+                ],
+            )
+        write_rows(
+            os.path.join(d, "partition_rows", "part-00000.parquet"),
             [(superstep, p["partition"], p["rows"]) for p in per_part],
-            "superstep int, partition int, rows long",
-        ).write.mode("overwrite").parquet(os.path.join(d, "partition_rows"))
+            [("superstep", pa.int32()), ("partition", pa.int32()), ("rows", pa.int64())],
+        )
         with open(os.path.join(d, "_COMMITTED"), "w") as f:
             f.write("ok")
 
@@ -152,7 +170,9 @@ class CheckpointStore:
 
 
 def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
-    """max |new.value - old.value| over the key join — PageRank convergence."""
+    """max |new.value - old.value| over the key join: one join and one
+    collect. hits and wpagerank converge on it; pagerank and ppr observe
+    the same max inside the superstep instead (``ObservedDelta``)."""
     j = new.alias("n").join(old.alias("o"), key)
     row = j.select(
         F.max(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("d")
@@ -160,17 +180,27 @@ def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
     return float(row["d"]) if row["d"] is not None else 0.0
 
 
-def changed_count(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
-    """Number of vertices whose value changed — the generic (join-based)
-    convergence delta. cc.py/lpa.py no longer use it on their hot paths
-    (they collect an equivalent flag-sum as an observed metric of the
-    superstep plan — zero extra jobs); kept as the documented fallback
-    for algorithms whose "changed" predicate cannot be computed inside
-    the superstep itself."""
-    j = new.alias("n").join(old.alias("o"), key)
-    return float(
-        j.where(F.col(f"n.{value}") != F.col(f"o.{value}")).count()
-    )
+class ObservedDelta:
+    """A convergence delta observed on the superstep's own
+    materialization: zero extra Spark jobs per superstep.
+
+    The superstep function passes its result frame through ``observe``
+    with an aggregate over columns the frame already carries (cc/lpa: the
+    sum of a changed flag; pagerank/ppr: the max of |score - old score|).
+    ``run_pregel`` materializes that frame once, then calls this object
+    as its ``delta_fn``, which pops the collected value (see the call
+    protocol in ``run_pregel``)."""
+
+    def __init__(self) -> None:
+        self._pending: list[Observation] = []
+
+    def observe(self, df: DataFrame, metric: Column) -> DataFrame:
+        obs = Observation()
+        self._pending.append(obs)
+        return df.observe(obs, metric.alias("delta"))
+
+    def __call__(self, old: DataFrame, new: DataFrame) -> float:
+        return float(self._pending.pop().get["delta"] or 0)
 
 
 def run_pregel(
@@ -193,12 +223,12 @@ def run_pregel(
     decides convergence; pass ``None`` for fixed-iteration runs to skip
     it entirely (the benchmark mode).
 
-    CALL PROTOCOL (load-bearing for observed-metric deltas — cc.py and
-    lpa.py attach a pyspark ``Observation`` to each superstep's frame
-    and pop it in their delta_fn): per iteration this loop calls
-    ``superstep_fn`` exactly once, eagerly materializes its result via
-    ``localCheckpoint(eager=True)`` (which fires CollectMetrics), and
-    THEN calls ``delta_fn`` exactly once. Superstep results are never
+    CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa,
+    pagerank and ppr attach an ``ObservedDelta`` observation to each
+    superstep's frame, which the delta_fn pops): per iteration this
+    loop calls ``superstep_fn`` exactly once, eagerly materializes its
+    result via ``localCheckpoint(eager=True)`` (which fires
+    CollectMetrics), and THEN calls ``delta_fn`` exactly once. Superstep results are never
     discarded, retried, or evaluated lazily; any change to that
     one-superstep/one-materialization/one-delta alternation must audit
     the Observation-based delta implementations.

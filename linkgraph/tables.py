@@ -18,6 +18,7 @@ emulation; on Iceberg it is a genuine ``MERGE INTO``.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import threading
 import time
@@ -38,6 +39,50 @@ def iceberg_available(spark: SparkSession, catalog: str = "lg") -> bool:
         return True
     except Exception:
         return False
+
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def part_rows(path: str) -> dict[int, int]:
+    """Rows per write task of the Spark parquet output committed at the
+    local directory ``path``, read from the part files' footers: the
+    count of what the write just committed, without a Spark job."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        m = _PART_FILE.match(name)
+        if m:
+            pid = int(m.group(1))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return rows
+
+
+def committed_rows(path: str) -> int:
+    """Total rows of the Spark parquet output committed at ``path``."""
+    return sum(part_rows(path).values())
+
+
+def write_rows(path: str, rows: list[tuple], schema: list[tuple[str, object]]) -> None:
+    """Write a few driver-side ``rows`` as the one parquet file ``path``
+    (``schema`` is ``[(name, pyarrow type)]``). The file is written under
+    a ``.``-prefixed name, which Spark and pyarrow readers skip, and then
+    renamed into place, so a reader never sees a torn file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.table(
+        [pa.array(c, type=t) for c, (_, t) in zip(cols, schema)],
+        names=[name for name, _ in schema],
+    )
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
 
 
 class TableStore:

@@ -64,6 +64,9 @@ def test_kill_resume_skips_committed_stages(spark, pages_dir, tmp_path):
     assert manifest["completed"]["resolve"]["rows"] == survivors
 
 
+METRICS_SCHEMA = "struct<stage:string,rows:bigint,wall_s:double,finished_at:double>"
+
+
 def test_full_run_single_pass(spark, pages_dir, tmp_path):
     out = str(tmp_path / "run2")
     manifest = run_pipeline(spark, pages_dir, out, pagerank_iters=3)
@@ -72,6 +75,38 @@ def test_full_run_single_pass(spark, pages_dir, tmp_path):
     e = spark.read.parquet(f"{out}/edges").count()
     assert v > 0 and e > 0
     assert spark.read.parquet(f"{out}/pagerank").count() == v
+
+    # every manifest row count is what a Spark re-read of the output counts
+    def read(name):
+        return spark.read.parquet(f"{out}/{name}")
+
+    recount = {
+        "extract": read("text").count(),
+        "normalize": read("edges").count(),
+        "host_graph": read("host_graph").count(),
+        "pagerank": read("pagerank").count(),
+        "dedup": read("dedup_pairs").count(),
+        "resolve": read("canonical_docs").where("url = canonical_id").count(),
+    }
+    assert {s: m["rows"] for s, m in manifest["completed"].items()} == recount
+
+    # the driver-written metrics tables keep their Spark schemas
+    metrics = read("metrics")
+    assert metrics.schema.simpleString() == METRICS_SCHEMA
+    assert {r["stage"]: r["rows"] for r in metrics.collect()} == recount
+    step = os.path.join(out, "_checkpoints", "pipeline_pr", "superstep=2")
+    mrows = spark.read.parquet(os.path.join(step, "metrics_rows"))
+    assert mrows.schema.simpleString() == (
+        "struct<job_id:string,superstep:int,parent_superstep:int,"
+        "wall_s:double,delta:double>"
+    )
+    assert [r["superstep"] for r in mrows.orderBy("superstep").collect()] == [1, 2]
+    prows = spark.read.parquet(os.path.join(step, "partition_rows"))
+    assert prows.schema.simpleString() == (
+        "struct<superstep:int,partition:int,rows:bigint>"
+    )
+    state = spark.read.parquet(os.path.join(step, "state"))
+    assert sum(r["rows"] for r in prows.collect()) == state.count() == v
 
 
 def test_resume_with_different_args_rejected(spark, pages_dir, tmp_path):
@@ -96,3 +131,26 @@ def test_metrics_row_backfilled_from_manifest(spark, pages_dir, tmp_path):
     rows = spark.read.parquet(f"{out}/metrics").collect()
     assert {r["stage"] for r in rows} == set(STAGES)
     assert len(rows) == len(STAGES)
+
+
+def test_resume_over_spark_written_metrics(spark, pages_dir, tmp_path):
+    """A run directory whose metrics table holds a Spark-written part
+    file (the earlier format) resumes and backfills to one row per stage."""
+    import shutil
+
+    out = str(tmp_path / "run5")
+    with pytest.raises(RuntimeError, match="fail_after"):
+        run_pipeline(spark, pages_dir, out, fail_after="normalize",
+                     pagerank_iters=3)
+    with open(os.path.join(out, "_manifest.json")) as f:
+        m = json.load(f)["completed"]["extract"]
+    shutil.rmtree(os.path.join(out, "metrics"))
+    spark.createDataFrame(
+        [("extract", m["rows"], m["wall_s"], m["finished_at"])],
+        "stage string, rows bigint, wall_s double, finished_at double",
+    ).write.mode("append").parquet(f"{out}/metrics")
+    run_pipeline(spark, pages_dir, out, pagerank_iters=3)
+    metrics = spark.read.parquet(f"{out}/metrics")
+    assert metrics.schema.simpleString() == METRICS_SCHEMA
+    rows = metrics.collect()
+    assert sorted(r["stage"] for r in rows) == sorted(STAGES)
