@@ -1,10 +1,12 @@
 """Deduplication operators for large-scale text corpora.
 
-All hot paths are JVM-side Catalyst expressions (seeded affine hashes
-over Z_p + higher-order array functions — see ``phash.py``; the family
-is engine-portable so every operator here has an independent DuckDB
-oracle) — no Python in the per-document loop, so the same code runs at
-100 TB (the shuffles are on short hash keys, never full texts).
+Every operator hashes with the seeded affine family over Z_p in
+``phash.py``; the family is engine-portable, so every operator here has
+an independent DuckDB oracle. MinHash runs its per-document hashing as
+one numpy pass per Arrow batch (``mapInArrow`` over
+``phash.minhash_np``: a document crosses into Python once, never one
+row per shingle); simhash and the pair joins are Catalyst expressions.
+The shuffles are on short hash keys, never full texts.
 
 Spiritual parity: the reference's fusing strategies dedup vertices by
 business id (/root/reference/builder/core/src/main/java/com/antgroup/openspg/builder/core/strategy/fusing/impl/OverwriteFusing.java);
@@ -13,8 +15,14 @@ here we dedup documents by content hash / near-dup signature.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from linkgraph.pipeline import phash
 
@@ -110,18 +118,14 @@ def _norm_text(text_col: str) -> F.Column:
     return F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
 
 
-def _shingles(text_col: str, k: int = 5) -> F.Column:
-    """Character k-shingles of the lowercased, space-normalized text.
-
-    NOTE: project ``_norm_text`` into a real column first and pass that
-    column name here — expressions referenced inside a lambda are
-    re-evaluated per array element (the regex would run once per
-    shingle, ~100× the work)."""
-    norm = F.col(text_col)
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k)
-    )
+def _list_array(rows: np.ndarray, valid: np.ndarray) -> pa.ListArray:
+    """(n, width) int64 matrix -> list<bigint> column whose rows where
+    ``valid`` is False hold only nulls (a null text's signature, as the
+    min over no hashable shingle is)."""
+    n, width = rows.shape
+    offsets = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+    values = pa.array(rows.ravel(), pa.int64(), mask=np.repeat(~valid, width))
+    return pa.ListArray.from_arrays(offsets, values)
 
 
 def minhash_signature(
@@ -132,34 +136,45 @@ def minhash_signature(
     shingle_k: int = 5,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, sig array<bigint>): sig[i] = min over shingles of
+    """(id, sig array<bigint>): sig[i] = min over the character
+    k-shingles of the lowercased, space-normalized text of
     (a_i * x + b_i) mod P, x = portable polynomial shingle hash
     (phash.char_hash — same family DuckDB reproduces for the oracle).
 
-    Implemented as explode(shingles) + one shingle hash + num_hashes flat
-    min-aggregates (then re-packed into an array): flat aggregates stay
-    inside whole-stage codegen, ~20× faster than nested higher-order
-    array_min(transform(...)) expressions, and the groupBy's map-side
-    partial aggregation collapses each doc's shingles before any
-    shuffle — at 100 TB the exchange carries ~1 row per document."""
+    Normalization stays a Catalyst expression (JVM regex and case
+    mapping); hashing is one ``mapInArrow`` pass of ``phash.minhash_np``
+    per Arrow batch, so a document crosses into Python once instead of
+    becoming one Catalyst row per shingle. Rows that share an id merge
+    by element-wise min after one exchange on the id — a partial
+    ``collect_list`` below it keeps the exchange at ~1 row per
+    document."""
     coeffs = phash.seeded_coeffs(num_hashes, seed)
-    normed = docs.select(F.col(id_col), _norm_text(text_col).alias("__norm__"))
-    ex = normed.select(
-        F.col(id_col), F.explode(_shingles("__norm__", shingle_k)).alias("__sh__")
+    id_type = docs.schema[id_col].dataType
+    schema = T.StructType(
+        [T.StructField(id_col, id_type), T.StructField("sig", T.ArrayType(T.LongType()))]
     )
-    # hash the shingle ONCE; each family member is a multiply-add-mod
-    xed = ex.select(
-        F.col(id_col), phash.char_hash(F.col("__sh__"), shingle_k).alias("__x__")
-    )
-    aggd = xed.groupBy(id_col).agg(
-        *[
-            F.min(phash.affine(F.col("__x__"), a, b)).alias(f"__h{i}__")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    )
-    return aggd.select(
-        F.col(id_col),
-        F.array(*[F.col(f"__h{i}__") for i in range(num_hashes)]).alias("sig"),
+
+    def hash_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            sig, valid = phash.minhash_np(batch.column(1), coeffs, shingle_k)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), _list_array(sig, valid)], [id_col, "sig"]
+            )
+
+    hashed = docs.select(
+        F.col(id_col), _norm_text(text_col).alias("__norm__")
+    ).mapInArrow(hash_batches, schema)
+    return (
+        hashed.groupBy(id_col)
+        .agg(F.collect_list("sig").alias("__sigs__"))
+        .select(
+            F.col(id_col),
+            F.aggregate(
+                "__sigs__",
+                F.element_at("__sigs__", 1),
+                lambda acc, s: F.zip_with(acc, s, lambda x, y: F.least(x, y)),
+            ).alias("sig"),
+        )
     )
 
 
@@ -179,6 +194,11 @@ def minhash_lsh_pairs(
 
     shingle -> minhash -> band-hash -> bucket self-join (on the 8-byte
     band key only) -> verify. Returns (a, b, jaccard_est) with a < b.
+    ``bands`` must divide ``num_hashes`` (each band combines
+    ``num_hashes // bands`` signature rows), else ``ValueError``. Band
+    keys are ``phash.band_keys_np`` over Arrow batches of the merged
+    signatures, cached beside them and exploded into (id, band, bucket)
+    rows.
 
     Buckets larger than ``max_bucket_size`` are ANCHORED instead of
     self-joined: every member pairs with the bucket's min-id
@@ -192,30 +212,37 @@ def minhash_lsh_pairs(
     fell from 511 s (uncapped) to ~200 s. The cap never fires on a
     diverse corpus (the sf0.01/0.1 documents tables are unaffected).
     ``None`` disables the cap."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signature(
-        docs, id_col, text_col, num_hashes, shingle_k, seed
-    ).persist()
-    sigs.count()  # materialize: the self-join below reads it twice
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        phash.combine(
-                            [
-                                F.element_at("sig", b * rows_per_band + j + 1)
-                                for j in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
+    if bands < 1 or num_hashes % bands:
+        # a remainder would drop the trailing minhashes from every band,
+        # and bands > num_hashes would leave 0 rows per band (every doc
+        # in bucket 0, every pair a candidate)
+        raise ValueError(
+            f"minhash_lsh_pairs: bands={bands} must divide num_hashes={num_hashes}"
+        )
+    sigs = minhash_signature(docs, id_col, text_col, num_hashes, shingle_k, seed)
+    keyed_schema = T.StructType(
+        [*sigs.schema.fields, T.StructField("keys", T.ArrayType(T.LongType()))]
+    )
+
+    def key_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            values = batch.column(1).flatten()
+            # a null-text doc (all-null signature) gets null bucket keys,
+            # which never join
+            valid = values.is_valid().to_numpy(zero_copy_only=False)[::num_hashes]
+            keys = phash.band_keys_np(
+                pc.fill_null(values, 0).to_numpy().reshape(-1, num_hashes), bands
             )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, _list_array(keys, valid)], [*batch.schema.names, "keys"]
+            )
+
+    # cached, not counted: the hot-bucket count (or, uncapped, the
+    # write) fills it; both join sides and the verify re-read it
+    sigs = sigs.mapInArrow(key_batches, keyed_schema).persist()
+    banded = sigs.select(
+        F.col(id_col).alias("id"), F.posexplode("keys").alias("band", "bucket")
+    )
 
     anchored = None
     if max_bucket_size is not None:

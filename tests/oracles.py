@@ -110,3 +110,35 @@ def triangles_oracle(edges: set[tuple[int, int]]) -> tuple[int, dict[int, int]]:
                     per_vertex[u] += 1
                     per_vertex[w] += 1
     return total, dict(per_vertex)
+
+
+def minhash_oracle(text: str | None, coeffs: list[tuple[int, int]], k: int) -> list:
+    """MinHash signature of ``text`` in Python ints, straight from the
+    phash definitions: character k-shingles (code points; at least one
+    shingle, positions past the end count as 0), char_hash, then the
+    affine minima. Null text -> all-null signature."""
+    from linkgraph.pipeline.phash import BASE, P
+
+    if text is None:
+        return [None] * len(coeffs)
+    cps = [ord(c) for c in text] + [0] * k
+    xs = [
+        sum(cps[i + j] * pow(BASE, k - 1 - j, P) for j in range(k)) % P
+        for i in range(max(len(text) - k + 1, 1))
+    ]
+    return [min((a * x + b) % P for x in xs) for a, b in coeffs]
+
+
+def band_keys_oracle(sig: list[int], bands: int) -> list[int]:
+    """phash.combine_sql's fold over each band's consecutive signature
+    rows."""
+    from linkgraph.pipeline.phash import COMBINE, P
+
+    rows = len(sig) // bands
+    keys = []
+    for b in range(bands):
+        acc = 0
+        for v in sig[b * rows : (b + 1) * rows]:
+            acc = (acc * COMBINE + v) % P
+        keys.append(acc)
+    return keys

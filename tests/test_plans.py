@@ -128,17 +128,19 @@ def test_pagerank_broadcast_superstep_message_agg_is_exchange_free(
 
 
 def test_minhash_signature_has_map_side_combine(spark):
+    """MinHash hashes every document row in one Arrow-batch map — no
+    per-shingle Generate (explode) — BELOW the plan's only exchange, and
+    the duplicate-id merge partially aggregates before it: the exchange
+    carries one row per document row, never shingles."""
     docs = load_table(spark, SF_DIR, "documents")
     sig = dedup.minhash_signature(docs, num_hashes=8)
-    # simple physical plan shows partial_min before the exchange — the
-    # map-side combine that collapses each doc's shingles pre-shuffle
-    plan = plan_str(sig, mode="simple")
-    assert "partial_min" in plan, plan
-    partial_pos = plan.index("partial_min")
-    # plan prints top-down: the final agg's Exchange appears ABOVE
-    # (before) the partial HashAggregate feeding it
-    exchange_pos = plan.index("Exchange")
-    assert exchange_pos < partial_pos, plan
+    plan = plan_str(sig)
+    assert "Generate" not in plan, plan
+    assert n_exchanges(plan) == 1, plan
+    # plan prints top-down: the Exchange appears ABOVE (before) the map
+    assert plan.index("Exchange") < plan.index("MapInArrow"), plan
+    simple = plan_str(sig, mode="simple")
+    assert simple.index("Exchange") < simple.index("partial_collect_list"), simple
 
 
 def test_pagerank_exchange_plan_partially_aggregates_before_shuffle(

@@ -55,13 +55,18 @@ def test_pagerank_matches_power_iteration(spark, edges):
 def test_phash_cross_engine_parity_random_unicode(spark):
     """The portable hash family must agree between Spark and DuckDB on
     arbitrary text (the oracle contract) — including multibyte unicode,
-    whitespace runs, empties, and strings shorter than the window."""
+    whitespace runs, empties, and strings shorter than the window. The
+    MinHash kernel's signatures and band keys must match both a Python
+    reference and the DuckDB replica bit for bit."""
     import random
+    import re
 
     import duckdb
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from linkgraph.pipeline import phash
+    from linkgraph.pipeline import dedup, phash
+    from tests.oracles import band_keys_oracle, minhash_oracle
 
     rng = random.Random(424242)
     alphabet = (
@@ -86,3 +91,37 @@ def test_phash_cross_engine_parity_random_unicode(spark):
     for i, s in enumerate(samples):
         row = con.execute(f"SELECT {ch}, {th} FROM (SELECT ? AS s)", [s]).fetchone()
         assert got[i] == (row[0], row[1]), f"mismatch on {s!r}"
+
+    # the numpy MinHash kernel, run by Spark over Arrow batches, against
+    # a big-int Python reference and the DuckDB replica of the Catalyst
+    # form (shingles -> char_hash -> affine minima -> band fold)
+    k, num_hashes, bands = 7, 16, 4
+    coeffs = phash.seeded_coeffs(num_hashes, 7)
+    sigs = {
+        r["i"]: r["sig"]
+        for r in dedup.minhash_signature(
+            df, id_col="i", text_col="s", num_hashes=num_hashes, shingle_k=k
+        ).collect()
+    }
+    keys = phash.band_keys_np(np.array([sigs[i] for i in range(len(samples))]), bands)
+    mins = ", ".join(f"MIN({phash.affine_sql('x', a, b)})" for a, b in coeffs)
+    sig_sql = (
+        f"SELECT {mins} FROM (SELECT {phash.char_hash_sql('sh', k)} AS x FROM ("
+        f"SELECT unnest(list_transform(range(1, greatest(length(t) - {k - 1}, 1) + 1),"
+        f" i -> substring(t, i, {k}))) AS sh"
+        " FROM (SELECT regexp_replace(lower(?), '\\s+', ' ', 'g') AS t)))"
+    )
+    rpb = num_hashes // bands
+    for i, s in enumerate(samples):
+        ref = minhash_oracle(re.sub(r"\s+", " ", s.lower()), coeffs, k)
+        assert sigs[i] == ref, f"kernel signature mismatch on {s!r}"
+        assert list(con.execute(sig_sql, [s]).fetchone()) == ref, f"duckdb on {s!r}"
+        ref_keys = band_keys_oracle(ref, bands)
+        assert keys[i].tolist() == ref_keys, f"band keys mismatch on {s!r}"
+        key_sql = ", ".join(
+            phash.combine_sql(
+                [f"CAST({v} AS BIGINT)" for v in ref[b * rpb : (b + 1) * rpb]]
+            )
+            for b in range(bands)
+        )
+        assert list(con.execute(f"SELECT {key_sql}").fetchone()) == ref_keys
