@@ -414,7 +414,7 @@ def _g_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _g_wpagerank3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank, 3 fixed iterations, weight = parallel link
     count of the mod-997 graph (the host-graph shape)."""
-    from linkgraph.algos.wpagerank import weighted_pagerank
+    from linkgraph.algos.pagerank import weighted_pagerank
 
     li = load_table(spark, sf_dir, "lineitem")
     we = (
@@ -475,7 +475,7 @@ def _g_hits3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _g_ppr3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank, 3 fixed supersteps, teleport to the two
     smallest vids (seed set derived identically in the SQL oracle)."""
-    from linkgraph.algos.ppr import personalized_pagerank
+    from linkgraph.algos.pagerank import personalized_pagerank
 
     e = _edges(spark, sf_dir)
     verts = e.select(F.col("src").alias("vid")).union(e.select("dst")).distinct()

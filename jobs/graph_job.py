@@ -65,10 +65,10 @@ def main() -> None:
         raise SystemExit("--prior-edges only applies to cc with --init-scores")
     if args.iters is None:
         args.iters = {"kcore": 30, "walks": 10}.get(args.algo, 20)
-    if args.checkpoint_dir and args.algo in ("wpagerank", "ppr", "walks"):
+    if args.checkpoint_dir and args.algo == "walks":
         import sys as _sys
 
-        print(f"WARNING: --checkpoint-dir is not supported by {args.algo}; "
+        print("WARNING: --checkpoint-dir is not supported by walks; "
               "the run will not be resumable", file=_sys.stderr)
 
     spark = SparkSession.builder.appName(f"linkgraph-{args.algo}").getOrCreate()
@@ -81,7 +81,7 @@ def main() -> None:
     )
     from linkgraph.algos.hits import hits
     from linkgraph.algos.kcore import k_core
-    from linkgraph.algos.ppr import personalized_pagerank
+    from linkgraph.algos.pagerank import personalized_pagerank, weighted_pagerank
     from linkgraph.algos.triangles import triangle_list
     from linkgraph.algos.walks import random_walks
     from linkgraph.tables import committed_rows
@@ -125,20 +125,20 @@ def main() -> None:
             res = k_core(edges, k=args.k, max_iter=args.iters,
                          checkpoint_dir=args.checkpoint_dir)
         elif args.algo == "wpagerank":
-            from linkgraph.algos.wpagerank import weighted_pagerank
-
             if "weight" not in edges.columns:
                 raise SystemExit(
                     "wpagerank needs a 'weight' column in the edge table "
                     f"(found: {edges.columns})"
                 )
             res = weighted_pagerank(edges, max_iter=args.iters, tol=args.tol,
-                                    init_scores=init_scores)
+                                    init_scores=init_scores,
+                                    checkpoint_dir=args.checkpoint_dir)
         elif args.algo == "ppr":
             seeds = [int(x) for x in (args.seeds or "").split(",") if x != ""]
             res = personalized_pagerank(edges, seeds, tol=args.tol,
                                         max_iter=args.iters,
-                                        init_scores=init_scores)
+                                        init_scores=init_scores,
+                                        checkpoint_dir=args.checkpoint_dir)
         elif args.algo == "walks":
             from linkgraph.pregel import PregelResult
 

@@ -2,8 +2,7 @@
 
 from linkgraph.algos.cc import connected_components
 from linkgraph.algos.lpa import label_propagation
-from linkgraph.algos.pagerank import pagerank
-from linkgraph.algos.ppr import personalized_pagerank
+from linkgraph.algos.pagerank import pagerank, personalized_pagerank
 from linkgraph.algos.triangles import triangle_count
 
 __all__ = [

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
+from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -28,9 +29,6 @@ def _undirected(edges: DataFrame) -> DataFrame:
     return e.unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-
-
-BROADCAST_STATE_MAX_VERTICES = 20_000_000
 
 
 def connected_components(

@@ -171,8 +171,9 @@ class CheckpointStore:
 
 def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
     """max |new.value - old.value| over the key join: one join and one
-    collect. hits and wpagerank converge on it; pagerank and ppr observe
-    the same max inside the superstep instead (``ObservedDelta``)."""
+    collect. hits is the only engine caller; the random-walk kernel
+    (pagerank, ppr, wpagerank) observes the same max inside the
+    superstep instead (``ObservedDelta``)."""
     j = new.alias("n").join(old.alias("o"), key)
     row = j.select(
         F.max(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("d")
@@ -186,7 +187,8 @@ class ObservedDelta:
 
     The superstep function passes its result frame through ``observe``
     with an aggregate over columns the frame already carries (cc/lpa: the
-    sum of a changed flag; pagerank/ppr: the max of |score - old score|).
+    sum of a changed flag; the random-walk kernel: the max of
+    |score - old score|).
     ``run_pregel`` materializes that frame once, then calls this object
     as its ``delta_fn``, which pops the collected value (see the call
     protocol in ``run_pregel``)."""
@@ -223,8 +225,8 @@ def run_pregel(
     decides convergence; pass ``None`` for fixed-iteration runs to skip
     it entirely (the benchmark mode).
 
-    CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa,
-    pagerank and ppr attach an ``ObservedDelta`` observation to each
+    CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa
+    and the random-walk kernel attach an ``ObservedDelta`` observation to each
     superstep's frame, which the delta_fn pops): per iteration this
     loop calls ``superstep_fn`` exactly once, eagerly materializes its
     result via ``localCheckpoint(eager=True)`` (which fires

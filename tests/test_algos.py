@@ -206,7 +206,7 @@ def test_random_walks_deterministic_and_dead_ends(spark):
 def test_weighted_pagerank(spark):
     import numpy as np
 
-    from linkgraph.algos.wpagerank import weighted_pagerank
+    from linkgraph.algos.pagerank import weighted_pagerank
 
     # 0 links to 1 with weight 9 and to 2 with weight 1; 1,2 -> 0
     e = spark.createDataFrame(
@@ -230,12 +230,18 @@ def test_weighted_pagerank(spark):
 
 
 def test_weighted_pagerank_edge_cases(spark):
-    from linkgraph.algos.wpagerank import weighted_pagerank
+    from linkgraph.algos.pagerank import weighted_pagerank
 
-    # empty edges -> clean empty result
-    empty = spark.createDataFrame([], "src bigint, dst bigint, weight double")
-    res = weighted_pagerank(empty, max_iter=2)
-    assert res.state.count() == 0 and res.iterations == 0
+    # empty edges -> clean empty result, vid typed like the input's
+    # vertex column (pagerank takes the same empty-input path)
+    for kind in ("bigint", "string"):
+        empty = spark.createDataFrame([], f"src {kind}, dst {kind}, weight double")
+        for res in (
+            weighted_pagerank(empty, max_iter=2),
+            pagerank(empty.select("src", "dst"), max_iter=2),
+        ):
+            assert res.state.count() == 0 and res.iterations == 0
+            assert res.state.schema.simpleString() == f"struct<vid:{kind},score:double>"
     # zero-weight source == dangling: no divide-by-zero, mass conserved
     e = spark.createDataFrame(
         [(0, 1, 0.0), (1, 0, 1.0)], "src bigint, dst bigint, weight double"
@@ -251,6 +257,35 @@ def test_weighted_pagerank_edge_cases(spark):
     assert res3.state.count() == 2
     # fixed-iteration mode is not 'converged'
     assert res2.converged is False
+
+
+def test_random_walks_release_their_caches(spark, tiny_edges):
+    """Every frame pagerank, ppr and weighted_pagerank cache is released
+    on return and on error. Superstep states are not counted: each is a
+    localCheckpoint, whose RDD Spark persists and marks checkpointed
+    (the returned state is one of them)."""
+    from pyspark.sql import functions as F
+
+    from linkgraph.algos import personalized_pagerank
+    from linkgraph.algos.pagerank import weighted_pagerank
+
+    def cached_rdds():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for r in rdds if not r.rdd().isCheckpointed())
+
+    we = tiny_edges.withColumn("weight", (F.col("src") % 3).cast("double"))
+    for call in (
+        lambda: pagerank(tiny_edges, max_iter=2),
+        lambda: personalized_pagerank(tiny_edges, [0, 5], max_iter=2),
+        lambda: weighted_pagerank(we, max_iter=2),
+    ):
+        before = cached_rdds()
+        call()
+        assert cached_rdds() == before
+    before = cached_rdds()
+    with pytest.raises(ValueError, match="not present"):
+        personalized_pagerank(tiny_edges, [10**9])
+    assert cached_rdds() == before
 
 
 def test_kcore_and_hits_resume(spark, tmp_path):
@@ -292,7 +327,7 @@ def test_exchange_plan_matches_broadcast_plan(tiny_edges, spark):
 
     from linkgraph.algos import personalized_pagerank
     from linkgraph.algos.hits import hits
-    from linkgraph.algos.wpagerank import weighted_pagerank
+    from linkgraph.algos.pagerank import weighted_pagerank
 
     b = personalized_pagerank(
         tiny_edges, [0, 5], tol=0.0, max_iter=5, broadcast_state=True
@@ -384,8 +419,7 @@ def test_ppr_and_wpagerank_warm_start(spark, tiny_edges):
     """init_scores warm start on the seeded/weighted variants: the fixed
     point is unique, so re-seeding with the converged state returns the
     same scores in <= 2 supersteps."""
-    from linkgraph.algos.ppr import personalized_pagerank
-    from linkgraph.algos.wpagerank import weighted_pagerank
+    from linkgraph.algos.pagerank import personalized_pagerank, weighted_pagerank
 
     cold = personalized_pagerank(tiny_edges, seeds=[0], tol=1e-10)
     warm = personalized_pagerank(

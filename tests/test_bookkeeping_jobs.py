@@ -1,15 +1,26 @@
 """Bookkeeping launches no Spark jobs of its own: a checkpoint save is
-its state write, and a tol-mode PageRank/PPR superstep observes its L∞
-delta on its own materialization. Jobs are counted per job group
-through the status tracker."""
+its state write, and a tol-mode random-walk superstep (PageRank, PPR,
+weighted PageRank) observes its L∞ delta on its own materialization.
+Jobs are counted per job group through the status tracker."""
 
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos import pagerank
-from linkgraph.algos.ppr import personalized_pagerank
+from linkgraph.algos.pagerank import pagerank, personalized_pagerank, weighted_pagerank
+
+RANDOM_WALKS = ["pagerank", "ppr", "wpagerank"]
+
+
+def _run_walk(algo, edges, tol, max_iter):
+    if algo == "pagerank":
+        return pagerank(edges, tol=tol, max_iter=max_iter)
+    if algo == "ppr":
+        return personalized_pagerank(edges, [1, 2], tol=tol, max_iter=max_iter)
+    we = edges.withColumn("weight", (F.col("src") + F.col("dst") + 1).cast("double"))
+    return weighted_pagerank(we, tol=tol, max_iter=max_iter)
 
 
 def _group_jobs(spark, group: str) -> int:
@@ -63,23 +74,20 @@ def test_checkpoint_save_is_one_spark_job(spark, tmp_path):
 
 
 def test_tol_superstep_jobs_match_fixed_iteration(spark, tiny_edges, traced_supersteps):
-    pagerank(tiny_edges, tol=None, max_iter=3)
-    fixed = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
-    traced_supersteps.clear()
-    res = pagerank(tiny_edges, tol=1e-6, max_iter=3)
-    tol = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
-    assert not res.converged
-    assert tol == fixed
+    for algo in RANDOM_WALKS:
+        traced_supersteps.clear()
+        _run_walk(algo, tiny_edges, None, 3)
+        fixed = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
+        traced_supersteps.clear()
+        res = _run_walk(algo, tiny_edges, 1e-6, 3)
+        tol = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
+        assert not res.converged, algo
+        assert tol == fixed, algo
 
 
-@pytest.mark.parametrize("algo", ["pagerank", "ppr"])
+@pytest.mark.parametrize("algo", RANDOM_WALKS)
 def test_observed_delta_matches_linf_delta(spark, tiny_edges, traced_supersteps, algo):
-    def run(tol, max_iter):
-        if algo == "pagerank":
-            return pagerank(tiny_edges, tol=tol, max_iter=max_iter)
-        return personalized_pagerank(tiny_edges, [1, 2], tol=tol, max_iter=max_iter)
-
-    res = run(1e-6, 100)
+    res = _run_walk(algo, tiny_edges, 1e-6, 100)
     assert res.converged
     states = [s for _, s in traced_supersteps] + [res.state]
     deltas = [m["delta"] for m in res.metrics]
@@ -90,5 +98,5 @@ def test_observed_delta_matches_linf_delta(spark, tiny_edges, traced_supersteps,
     # it stops at the first superstep whose delta reaches tol ...
     assert res.iterations == 1 + next(k for k, d in enumerate(deltas) if d <= 1e-6)
     # ... with the scores of exactly that many fixed iterations
-    fixed = run(None, res.iterations)
+    fixed = _run_walk(algo, tiny_edges, None, res.iterations)
     assert dict(res.state.collect()) == dict(fixed.state.collect())

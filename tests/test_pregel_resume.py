@@ -4,7 +4,10 @@ checkpoint, converge to the identical result (FIXTURES.md §4)."""
 import math
 import os
 
-from linkgraph.algos import pagerank
+import pytest
+from pyspark.sql import functions as F
+
+from linkgraph.algos.pagerank import pagerank, personalized_pagerank, weighted_pagerank
 from linkgraph.pregel import CheckpointStore
 
 
@@ -39,6 +42,51 @@ def test_pagerank_resume_identical(tiny_edges, tmp_path):
     got = {r["vid"]: r["score"] for r in resumed.state.collect()}
     for v in expected:
         assert math.isclose(got[v], expected[v], rel_tol=0, abs_tol=1e-12)
+
+
+@pytest.mark.parametrize("algo", ["ppr", "wpagerank"])
+def test_random_walk_resume_identical(tiny_edges, tmp_path, algo):
+    """ppr and weighted_pagerank resume like pagerank. Both checkpoint
+    at the end of the killed run, so 3 supersteps leave superstep=3."""
+    ckpt = str(tmp_path / "checkpoints")
+    we = tiny_edges.withColumn("weight", (F.col("src") + F.col("dst") + 1).cast("double"))
+
+    def run(seeds=(0, 5), **kw):
+        if algo == "ppr":
+            return personalized_pagerank(tiny_edges, seeds, tol=1e-6, **kw)
+        return weighted_pagerank(we, tol=1e-6, **kw)
+
+    full = run(max_iter=100)
+    partial = run(max_iter=3, checkpoint_dir=ckpt)
+    assert not partial.converged
+    (job_id,) = os.listdir(ckpt)
+    assert CheckpointStore(ckpt, job_id).latest() == 3
+
+    # the seed set is keyed sorted and deduplicated, so this resumes too
+    resumed = run(seeds=(5, 0, 5), max_iter=100, checkpoint_dir=ckpt)
+    assert resumed.converged
+    assert resumed.iterations == full.iterations
+    assert resumed.metrics[:3] == partial.metrics
+    assert [m["superstep"] for m in resumed.metrics] == list(range(1, resumed.iterations + 1))
+    expected = {r["vid"]: r["score"] for r in full.state.collect()}
+    got = {r["vid"]: r["score"] for r in resumed.state.collect()}
+    assert got.keys() == expected.keys()
+    for v in expected:
+        assert math.isclose(got[v], expected[v], rel_tol=0, abs_tol=1e-12)
+
+
+def test_ppr_does_not_resume_another_seed_set(tiny_edges, tmp_path):
+    """run_pregel's fingerprint covers only the edges; a ppr checkpoint
+    is also keyed on the seed set, so a run with other seeds starts cold
+    instead of iterating on the old run's state."""
+    ckpt = str(tmp_path / "checkpoints")
+    personalized_pagerank(tiny_edges, [0, 5], tol=1e-6, max_iter=3, checkpoint_dir=ckpt)
+    other = personalized_pagerank(tiny_edges, [7], tol=1e-6, checkpoint_dir=ckpt)
+    fresh = personalized_pagerank(tiny_edges, [7], tol=1e-6)
+    assert other.metrics[0]["superstep"] == 1
+    assert [m["delta"] for m in other.metrics] == [m["delta"] for m in fresh.metrics]
+    assert dict(other.state.collect()) == dict(fresh.state.collect())
+    assert len(os.listdir(ckpt)) == 2
 
 
 def test_checkpoint_metrics_have_partition_rows(tiny_edges, tmp_path):
