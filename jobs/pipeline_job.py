@@ -24,6 +24,27 @@ same arguments skips committed stages; the PageRank stage additionally
 checkpoints supersteps through linkgraph.pregel.CheckpointStore, so a
 kill MID-ITERATION resumes mid-iteration (see test_pregel_resume).
 
+Stages run as a dependency graph (``DEPS``), each starting as soon as
+the stages whose output it reads have committed:
+
+    extract -> normalize -> {host_graph, pagerank}
+    extract -> dedup -> resolve
+
+Each stage runs in its own thread of a ``len(STAGES)``-thread pool, so
+dedup and resolve fill the cores normalize and PageRank leave idle
+(Spark schedules jobs from concurrent threads; the default FIFO
+scheduler). Every thread target is wrapped in
+``pyspark.inheritable_thread_target``, so the caller's Spark local
+properties (job description, job group) and tags reach every stage's
+jobs. The manifest dict, its commit and the metrics row are updated
+under one lock. ``STAGES`` stays the reporting order.
+
+Failure: a stage whose prerequisite failed does not start; independent
+stages run to their end and commit; ``run_pipeline`` then re-raises the
+first failure in ``STAGES`` order. Committed stages stay committed, so
+a rerun resumes. The ``fail_after=X`` test hook runs only X and the
+stages X depends on, and raises once X has committed.
+
 At 100 TB nothing here collects to the driver: stage boundaries are
 parquet writes, the manifest holds only counts.
 """
@@ -33,14 +54,35 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import threading
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession
 
 from linkgraph.tables import committed_rows, write_rows
 
 
 STAGES = ("extract", "normalize", "host_graph", "pagerank", "dedup", "resolve")
+# the stages each stage reads the committed output of
+DEPS = {
+    "extract": (),
+    "normalize": ("extract",),
+    "host_graph": ("normalize",),
+    "pagerank": ("normalize",),
+    "dedup": ("extract",),
+    "resolve": ("dedup",),
+}
+
+
+def _with_deps(name: str) -> tuple[str, ...]:
+    """``name`` and every stage it depends on, in STAGES order."""
+    need = {name}
+    for s in reversed(STAGES):
+        if s in need:
+            need.update(DEPS[s])
+    return tuple(s for s in STAGES if s in need)
 
 
 def _load_manifest(out: str) -> dict:
@@ -90,8 +132,8 @@ def run_pipeline(
     fail_after: str | None = None,
 ) -> dict:
     """Run (or resume) the pipeline; returns the manifest. ``fail_after``
-    aborts right after committing the named stage — the kill/resume
-    test hook."""
+    runs only the named stage and its prerequisites and aborts right
+    after committing it — the kill/resume test hook."""
     from pyspark.sql import functions as F
 
     os.makedirs(out, exist_ok=True)
@@ -129,6 +171,8 @@ def run_pipeline(
             if name not in have:
                 _record(out, name, m)
 
+    commit_lock = threading.Lock()
+
     def stage(name: str, fn) -> None:
         if name in done:
             return
@@ -139,9 +183,10 @@ def run_pipeline(
             "wall_s": round(time.monotonic() - t0, 3),
             "finished_at": time.time(),
         }
-        done[name] = m
-        _commit(out, manifest)
-        _record(out, name, m)
+        with commit_lock:
+            done[name] = m
+            _commit(out, manifest)
+            _record(out, name, m)
         if fail_after == name:
             raise RuntimeError(f"fail_after={name} (test hook)")
 
@@ -233,8 +278,26 @@ def run_pipeline(
         "dedup": _dedup,
         "resolve": _resolve,
     }
-    for name in STAGES:
+    wanted = _with_deps(fail_after) if fail_after else STAGES
+    futures: dict[str, Future] = {}
+
+    def start(name: str) -> None:
+        # .result() re-raises a prerequisite's failure, so a stage whose
+        # input is missing never starts
+        for dep in DEPS[name]:
+            futures[dep].result()
         stage(name, fns[name])
+
+    with ThreadPoolExecutor(max_workers=len(STAGES)) as pool:
+        # STAGES is topological: every prerequisite's future exists first
+        for name in wanted:
+            # wrapping clones the caller's local properties here, in its
+            # thread: one clone per stage, so a property a stage sets
+            # (a job group, a job description) stays in its own thread
+            target = inheritable_thread_target(spark)(start)
+            futures[name] = pool.submit(target, name)
+    for name in wanted:
+        futures[name].result()  # the first failure in STAGES order
     return manifest
 
 

@@ -86,9 +86,16 @@ def connected_components(
     plan for huge V via ``broadcast_state=False``.
     """
     if algorithm == "two-phase":
+        if checkpoint_dir is not None:
+            import warnings
+
+            warnings.warn(
+                "connected_components(algorithm='two-phase') does not "
+                "checkpoint; checkpoint_dir is ignored and the run is not "
+                "resumable"
+            )
         return _star_contraction(
-            edges, vertices=vertices, max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir, job_id=job_id,
+            edges, vertices=vertices, max_iter=max_iter, job_id=job_id
         )
     spark = edges.sparkSession
     if num_partitions is None:
@@ -236,7 +243,6 @@ def _star_contraction(
     *,
     vertices: DataFrame | None,
     max_iter: int,
-    checkpoint_dir: str | None,
     job_id: str,
 ) -> pregel.PregelResult:
     """Alternating large-star / small-star until the edge set is stable.

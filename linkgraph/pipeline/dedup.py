@@ -193,7 +193,9 @@ def minhash_lsh_pairs(
     estimated Jaccard (fraction of agreeing minhashes).
 
     shingle -> minhash -> band-hash -> bucket self-join (on the 8-byte
-    band key only) -> verify. Returns (a, b, jaccard_est) with a < b.
+    band key only) -> verify. Returns (a, b, jaccard_est) with a < b,
+    materialized by ``localCheckpoint`` so the signature cache is
+    released before the call returns (or raises).
     ``bands`` must divide ``num_hashes`` (each band combines
     ``num_hashes // bands`` signature rows), else ``ValueError``. Band
     keys are ``phash.band_keys_np`` over Arrow batches of the merged
@@ -238,47 +240,56 @@ def minhash_lsh_pairs(
             )
 
     # cached, not counted: the hot-bucket count (or, uncapped, the
-    # write) fills it; both join sides and the verify re-read it
+    # pair materialization) fills it; both join sides and the verify
+    # re-read it
     sigs = sigs.mapInArrow(key_batches, keyed_schema).persist()
-    banded = sigs.select(
-        F.col(id_col).alias("id"), F.posexplode("keys").alias("band", "bucket")
-    )
-
-    anchored = None
-    if max_bucket_size is not None:
-        banded, anchored = _anchor_hot_buckets(
-            banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_pairs"
+    try:
+        banded = sigs.select(
+            F.col(id_col).alias("id"), F.posexplode("keys").alias("band", "bucket")
         )
 
-    # candidate generation shuffles only (band, bucket, id) — signatures
-    # re-join after the (a, b) dedup, so wide arrays never hit the
-    # bucket-join shuffle (matters when one bucket is hot)
-    left = banded.select("band", "bucket", F.col("id").alias("a"))
-    right = banded.select("band", "bucket", F.col("id").alias("b"))
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    if anchored is not None:
-        cand = cand.unionByName(anchored)
-    cand = cand.dropDuplicates(["a", "b"])
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("sig").alias("sig_b"))
-    jacc = cand.join(sa, "a").join(sb, "b").select(
-        "a",
-        "b",
-        (
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda eq: eq,
-                )
+        anchored = None
+        if max_bucket_size is not None:
+            banded, anchored = _anchor_hot_buckets(
+                banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_pairs"
             )
-            / F.lit(float(num_hashes))
-        ).alias("jaccard_est"),
-    )
-    return jacc.where(F.col("jaccard_est") >= jaccard_threshold)
+
+        # candidate generation shuffles only (band, bucket, id) —
+        # signatures re-join after the (a, b) dedup, so wide arrays never
+        # hit the bucket-join shuffle (matters when one bucket is hot)
+        left = banded.select("band", "bucket", F.col("id").alias("a"))
+        right = banded.select("band", "bucket", F.col("id").alias("b"))
+        cand = (
+            left.join(right, ["band", "bucket"])
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b")
+        )
+        if anchored is not None:
+            cand = cand.unionByName(anchored)
+        cand = cand.dropDuplicates(["a", "b"])
+        sa = sigs.select(F.col(id_col).alias("a"), F.col("sig").alias("sig_a"))
+        sb = sigs.select(F.col(id_col).alias("b"), F.col("sig").alias("sig_b"))
+        jacc = cand.join(sa, "a").join(sb, "b").select(
+            "a",
+            "b",
+            (
+                F.size(
+                    F.filter(
+                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                        lambda eq: eq,
+                    )
+                )
+                / F.lit(float(num_hashes))
+            ).alias("jaccard_est"),
+        )
+        # materialize the verified pairs so the signature cache can go
+        # now, on success and on error, instead of leaking for the
+        # session's lifetime
+        return jacc.where(F.col("jaccard_est") >= jaccard_threshold).localCheckpoint(
+            eager=True
+        )
+    finally:
+        sigs.unpersist()
 
 
 def _bit_value(i: int) -> int:

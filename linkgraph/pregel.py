@@ -205,6 +205,17 @@ class ObservedDelta:
         return float(self._pending.pop().get["delta"] or 0)
 
 
+def _release(state: DataFrame) -> None:
+    """Unpersist the RDD behind a superseded ``localCheckpoint`` state.
+    Spark persists a local checkpoint's RDD to checkpoint it and would
+    otherwise keep it until JVM GC runs the ContextCleaner.
+    ``SparkContext.unpersistRDD`` is what ``RDD.unpersist`` calls, minus
+    its WARN line per call that a local checkpoint cannot be recomputed
+    (the loop never reads a superseded state again)."""
+    rdd_id = state._jdf.queryExecution().logical().rdd().id()
+    state.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
+
+
 def run_pregel(
     edges: DataFrame,
     init_state: DataFrame,
@@ -234,6 +245,11 @@ def run_pregel(
     discarded, retried, or evaluated lazily; any change to that
     one-superstep/one-materialization/one-delta alternation must audit
     the Observation-based delta implementations.
+
+    Each superseded state (the loop's own ``localCheckpoint``, never
+    ``init_state`` itself) is released once the next state is
+    materialized, its delta taken and any checkpoint saved; the returned
+    state stays cached.
     """
     spark = edges.sparkSession
     store = CheckpointStore(checkpoint_dir, job_id) if checkpoint_dir else None
@@ -305,9 +321,10 @@ def run_pregel(
                 "parent_superstep": i - 1,
             }
         )
-        state = new_state
         if store and (i % checkpoint_every == 0):
-            store.save(i, state, metrics)
+            store.save(i, new_state, metrics)
+        _release(state)
+        state = new_state
         if delta is not None and delta <= tol:
             converged = True
             break

@@ -3,6 +3,7 @@
 counts exact — FIXTURES.md §3)."""
 
 import math
+import os
 
 import pytest
 
@@ -72,6 +73,14 @@ def test_connected_components_star_contraction(tiny_edges, graph):
     res = connected_components(tiny_edges, algorithm="two-phase")
     got = {r["vid"]: r["component"] for r in res.state.collect()}
     assert got == expected
+
+
+def test_star_contraction_warns_that_it_does_not_checkpoint(tiny_edges, tmp_path):
+    with pytest.warns(UserWarning, match="does not checkpoint"):
+        connected_components(
+            tiny_edges, algorithm="two-phase", max_iter=1, checkpoint_dir=str(tmp_path)
+        )
+    assert not os.listdir(tmp_path)
 
 
 def test_label_propagation_fixed_rounds(tiny_edges, graph):
@@ -260,32 +269,45 @@ def test_weighted_pagerank_edge_cases(spark):
 
 
 def test_random_walks_release_their_caches(spark, tiny_edges):
-    """Every frame pagerank, ppr and weighted_pagerank cache is released
-    on return and on error. Superstep states are not counted: each is a
-    localCheckpoint, whose RDD Spark persists and marks checkpointed
-    (the returned state is one of them)."""
+    """Every frame pagerank, ppr, weighted_pagerank and
+    minhash_lsh_pairs cache is released on return and on error.
+    Superstep states are counted apart: each is a localCheckpoint, whose
+    RDD Spark persists and marks checkpointed. run_pregel releases every
+    superseded state, so a call keeps at most one (the returned state;
+    minhash_lsh_pairs' materialized pairs)."""
     from pyspark.sql import functions as F
 
     from linkgraph.algos import personalized_pagerank
     from linkgraph.algos.pagerank import weighted_pagerank
+    from linkgraph.pipeline.dedup import minhash_lsh_pairs
 
-    def cached_rdds():
-        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
-        return sum(1 for r in rdds if not r.rdd().isCheckpointed())
+    def persisted():
+        rdds = [r.rdd() for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
+        checkpointed = sum(1 for r in rdds if r.isCheckpointed())
+        return len(rdds) - checkpointed, checkpointed
 
     we = tiny_edges.withColumn("weight", (F.col("src") % 3).cast("double"))
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [(i, base + " " + "xyz"[i % 3]) for i in range(6)]
+        + [(10 + i, f"unrelated document number {i} about topic {i * i}") for i in range(4)],
+        "doc_id bigint, text string",
+    )
     for call in (
-        lambda: pagerank(tiny_edges, max_iter=2),
-        lambda: personalized_pagerank(tiny_edges, [0, 5], max_iter=2),
-        lambda: weighted_pagerank(we, max_iter=2),
+        lambda: pagerank(tiny_edges, max_iter=6),
+        lambda: personalized_pagerank(tiny_edges, [0, 5], max_iter=6),
+        lambda: weighted_pagerank(we, max_iter=6),
+        lambda: minhash_lsh_pairs(docs).collect(),
     ):
-        before = cached_rdds()
+        cached, checkpointed = persisted()
         call()
-        assert cached_rdds() == before
-    before = cached_rdds()
+        now_cached, now_checkpointed = persisted()
+        assert now_cached == cached
+        assert now_checkpointed - checkpointed <= 1
+    cached, _ = persisted()
     with pytest.raises(ValueError, match="not present"):
         personalized_pagerank(tiny_edges, [10**9])
-    assert cached_rdds() == before
+    assert persisted()[0] == cached
 
 
 def test_kcore_and_hits_resume(spark, tmp_path):

@@ -35,16 +35,20 @@ def _clear_group(spark) -> None:
 @pytest.fixture
 def traced_supersteps(spark, monkeypatch):
     """Wrap run_pregel: each superstep runs under its own job group (its
-    materialization and delta fall in it too), and each superstep's
-    input state is kept. Yields the list of (group, state) pairs."""
+    materialization and delta fall in it too), and a copy of each
+    superstep's input state is kept (run_pregel releases superseded
+    states; the copy is collected outside every superstep's group).
+    Yields the list of (group, state) pairs."""
     seen: list[tuple[str, object]] = []
     run_pregel = pregel.run_pregel
 
     def traced(edges, init_state, superstep_fn, delta_fn, **kw):
         def step(e, s, i):
+            _clear_group(spark)
+            copy = spark.createDataFrame(s.collect(), s.schema)
             group = f"superstep-{uuid.uuid4().hex}"
             spark.sparkContext.setJobGroup(group, group)
-            seen.append((group, s))
+            seen.append((group, copy))
             return superstep_fn(e, s, i)
 
         try:

@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from jobs.pipeline_job import STAGES, run_pipeline
+from jobs.pipeline_job import DEPS, STAGES, run_pipeline
 from linkgraph.datagen import write_pages_parquet
 
 
@@ -153,4 +153,48 @@ def test_resume_over_spark_written_metrics(spark, pages_dir, tmp_path):
     metrics = spark.read.parquet(f"{out}/metrics")
     assert metrics.schema.simpleString() == METRICS_SCHEMA
     rows = metrics.collect()
+    assert sorted(r["stage"] for r in rows) == sorted(STAGES)
+
+
+def _window(m: dict) -> tuple[float, float]:
+    return m["finished_at"] - m["wall_s"], m["finished_at"]
+
+
+def test_independent_stages_overlap(spark, pages_dir, tmp_path):
+    """dedup reads only extract's output, so it runs beside normalize
+    instead of after the normalize -> PageRank chain."""
+    done = run_pipeline(spark, pages_dir, str(tmp_path / "run6"), pagerank_iters=3)[
+        "completed"
+    ]
+    dedup, normalize = _window(done["dedup"]), _window(done["normalize"])
+    assert dedup[0] < normalize[1] and normalize[0] < dedup[1], done
+    # no stage starts before the stages it reads have committed
+    for stage, deps in DEPS.items():
+        for dep in deps:
+            assert done[dep]["finished_at"] <= _window(done[stage])[0] + 1e-3, done
+
+
+def test_failed_stage_stops_only_its_dependents(spark, pages_dir, tmp_path, monkeypatch):
+    """normalize raising leaves host_graph and PageRank unstarted, while
+    dedup and resolve run to their end and commit; the rerun resumes
+    without recomputing them."""
+    import linkgraph.normalize
+
+    def broken(*args, **kwargs):
+        raise ArithmeticError("normalize broke")
+
+    out = str(tmp_path / "run7")
+    monkeypatch.setattr(linkgraph.normalize, "build_edges", broken)
+    with pytest.raises(ArithmeticError, match="normalize broke"):
+        run_pipeline(spark, pages_dir, out, pagerank_iters=3)
+    with open(os.path.join(out, "_manifest.json")) as f:
+        m1 = json.load(f)["completed"]
+    assert set(m1) == {"extract", "dedup", "resolve"}
+
+    monkeypatch.undo()
+    manifest = run_pipeline(spark, pages_dir, out, pagerank_iters=3)
+    assert set(manifest["completed"]) == set(STAGES)
+    for stage in m1:
+        assert manifest["completed"][stage]["finished_at"] == m1[stage]["finished_at"]
+    rows = spark.read.parquet(f"{out}/metrics").collect()
     assert sorted(r["stage"] for r in rows) == sorted(STAGES)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,8 +41,6 @@ def n_exchanges(plan: str) -> int:
     """Shuffle-exchange tree nodes only: formatted mode prints each node
     twice ("+- Exchange (4)" in the tree, "(4) Exchange" in the detail),
     and Broadcast/ReusedExchange are not data shuffles."""
-    import re
-
     return len(re.findall(r"(?<![A-Za-z])Exchange \(\d+\)", plan))
 
 
@@ -66,8 +65,6 @@ def test_global_topk_is_take_ordered_not_full_sort(spark):
     # no Sort operator node anywhere — TakeOrderedAndProject keeps k
     # rows per partition and merges on the driver (formatted mode
     # prints operator nodes as "Sort (<n>)")
-    import re
-
     assert not re.search(r"(?<![A-Za-z])Sort \(\d+\)", plan), plan
 
 
@@ -93,38 +90,47 @@ def test_small_dim_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
+def _random_walk_superstep_plan(monkeypatch, edges, **kw) -> str:
+    """``explain(simple)`` of the superstep frame pagerank's kernel
+    builds, captured inside the real ``run_pregel`` loop while the
+    kernel's caches are live. The second superstep is the steady state:
+    the first is planned before the edge cache is filled, when Spark
+    does not yet know its partitioning."""
+    from linkgraph import pregel
+    from linkgraph.algos import pagerank
+
+    run_pregel = pregel.run_pregel
+    plans = {}
+
+    def capture(e, init_state, superstep_fn, delta_fn, **run_kw):
+        def step(edges_df, state, i):
+            new = superstep_fn(edges_df, state, i)
+            plans[i] = plan_str(new, mode="simple")
+            return new
+
+        return run_pregel(e, init_state, step, delta_fn, **run_kw)
+
+    monkeypatch.setattr(pregel, "run_pregel", capture)
+    pagerank(edges, max_iter=2, tol=None, num_partitions=4, **kw)
+    return plans[1]
+
+
+# the message aggregation's own shuffle (the cache's one-time repartition
+# is a REPARTITION_BY_NUM exchange)
+_MSG_EXCHANGE = re.compile(r"Exchange hashpartitioning\(dst#\d+L?, \d+\), ENSURE_REQUIREMENTS")
+
+
 def test_pagerank_broadcast_superstep_message_agg_is_exchange_free(
-    spark, tiny_edges
+    spark, tiny_edges, monkeypatch
 ):
-    """The broadcast-plan superstep shape (algos/pagerank.py:117-151):
-    edges cached hash(dst, P); state broadcast; message aggregation on
-    dst must add ZERO exchanges beyond the cache's one-time repartition
-    — the groupBy(dst) inherits the cache partitioning."""
-    e = tiny_edges.select("src", "dst").repartition(4, "dst").persist()
-    e.count()  # materialize so the test measures the steady-state plan
-    try:
-        # the cache's one-time repartition appears TWICE in a
-        # materialized AQE plan (== Initial Plan == and == Final Plan ==
-        # inside InMemoryRelation) — measure it so the assertion below
-        # is "zero exchanges beyond the cache lineage", however printed
-        base_exchanges = n_exchanges(plan_str(e))
-        active = F.broadcast(
-            tiny_edges.select(
-                F.col("src").alias("vid"), F.lit(1.0).alias("contrib")
-            )
-        )
-        sums = (
-            e.join(active, e["src"] == active["vid"])
-            .select("dst", "contrib")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("msum"))
-        )
-        plan = plan_str(sums)
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert n_exchanges(plan) == base_exchanges, plan
-    finally:
-        e.unpersist()
+    """The broadcast-plan superstep (docs/PLANS.md): edges cached
+    hash(dst, P); state broadcast; the message aggregation on dst adds NO
+    exchange of the E-row stream — groupBy(dst) inherits the cache
+    partitioning."""
+    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, broadcast_state=True)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "partial_sum(contrib" in plan, plan
+    assert not _MSG_EXCHANGE.search(plan), plan
 
 
 def test_minhash_signature_has_map_side_combine(spark):
@@ -144,27 +150,18 @@ def test_minhash_signature_has_map_side_combine(spark):
 
 
 def test_pagerank_exchange_plan_partially_aggregates_before_shuffle(
-    spark, tiny_edges
+    spark, tiny_edges, monkeypatch
 ):
     """The exchange-plan superstep (pagerank broadcast_state=False, the
     10^12-doc regime): messages groupBy(dst) over a src-partitioned edge
     cache must show a PARTIAL HashAggregate below its exchange — the
     E-row stream collapses to ~|V| partial sums per partition before
     anything crosses the wire."""
-    e = tiny_edges.select("src", "dst").repartition(4, "src").persist()
-    e.count()
-    try:
-        state = tiny_edges.select(
-            F.col("src").alias("vid"), F.lit(1.0).alias("contrib")
-        )
-        joined = e.join(state, e["src"] == state["vid"]).select("dst", "contrib")
-        sums = joined.groupBy("dst").agg(F.sum("contrib").alias("msum"))
-        plan = plan_str(sums, mode="simple")
-        assert "partial_sum" in plan, plan
-        # top-down print: final agg's Exchange is ABOVE the partial agg
-        assert plan.index("Exchange") < plan.index("partial_sum"), plan
-    finally:
-        e.unpersist()
+    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, broadcast_state=False)
+    exchange = _MSG_EXCHANGE.search(plan)
+    assert exchange, plan
+    # top-down print: the final agg's Exchange is ABOVE the partial agg
+    assert exchange.start() < plan.index("partial_sum(contrib"), plan
 
 
 def test_two_phase_agg_is_two_exchanges_salted_then_keyed(spark):
