@@ -65,10 +65,10 @@ def main() -> None:
         raise SystemExit("--prior-edges only applies to cc with --init-scores")
     if args.iters is None:
         args.iters = {"kcore": 30, "walks": 10}.get(args.algo, 20)
-    if args.checkpoint_dir and args.algo in ("walks", "cc-two-phase"):
+    if args.checkpoint_dir and args.algo == "walks":
         import sys as _sys
 
-        print(f"WARNING: --checkpoint-dir is not supported by {args.algo}; "
+        print("WARNING: --checkpoint-dir is not supported by walks; "
               "the run will not be resumable", file=_sys.stderr)
 
     spark = SparkSession.builder.appName(f"linkgraph-{args.algo}").getOrCreate()
@@ -115,6 +115,7 @@ def main() -> None:
                                        prior_edges=prior_edges)
         elif args.algo == "cc-two-phase":
             res = connected_components(edges, algorithm="two-phase",
+                                       checkpoint_dir=args.checkpoint_dir,
                                        max_iter=args.iters)
         elif args.algo == "hits":
             res = hits(edges, max_iter=args.iters, tol=args.tol,

@@ -17,6 +17,9 @@ Two modes:
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -84,19 +87,22 @@ def connected_components(
     broadcastable state each superstep is BroadcastHashJoin -> exchange-
     free min-aggregate -> co-partitioned merge-join update. Exchange
     plan for huge V via ``broadcast_state=False``.
-    """
-    if algorithm == "two-phase":
-        if checkpoint_dir is not None:
-            import warnings
 
-            warnings.warn(
-                "connected_components(algorithm='two-phase') does not "
-                "checkpoint; checkpoint_dir is ignored and the run is not "
-                "resumable"
-            )
-        return _star_contraction(
-            edges, vertices=vertices, max_iter=max_iter, job_id=job_id
-        )
+    ``algorithm="two-phase"`` checkpoints under ``<job_id>-two-phase``.
+    """
+    run = functools.partial(
+        pregel.run_pregel,
+        max_iter=max_iter,
+        tol=0.0,
+        checkpoint_dir=checkpoint_dir,
+        # the two algorithms' states differ in shape: their checkpoints
+        # must not resume each other
+        job_id=f"{job_id}-two-phase" if algorithm == "two-phase" else job_id,
+        checkpoint_every=checkpoint_every,
+        resume=resume,
+    )
+    if algorithm == "two-phase":
+        return _star_contraction(edges, vertices, run)
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -219,18 +225,7 @@ def connected_components(
         return delta.observe(new, F.sum(F.col("_ch").cast("long")))
 
     try:
-        res = pregel.run_pregel(
-            und,
-            init,
-            superstep,
-            delta,
-            max_iter=max_iter,
-            tol=0.0,
-            checkpoint_dir=checkpoint_dir,
-            job_id=job_id,
-            checkpoint_every=checkpoint_every,
-            resume=resume,
-        )
+        res = run(und, init, superstep, delta)
         res.state = res.state.select("vid", "component")
         return res
     finally:
@@ -240,34 +235,26 @@ def connected_components(
 
 def _star_contraction(
     edges: DataFrame,
-    *,
     vertices: DataFrame | None,
-    max_iter: int,
-    job_id: str,
+    run: Callable[..., pregel.PregelResult],
 ) -> pregel.PregelResult:
-    """Alternating large-star / small-star until the edge set is stable.
+    """Alternating large-star / small-star until the edge set is stable,
+    on ``run`` (``run_pregel`` with the caller's loop options bound).
 
-    State here is the evolving parent-pointer edge set; converges in
-    O(log² n) rounds, robust to long path graphs where hash-min needs
+    State here is the evolving parent-pointer edge set (u, v); converges
+    in O(log² n) rounds, robust to long path graphs where hash-min needs
     O(diameter) rounds.
     """
-    spark = edges.sparkSession
-    e = (
+    init = (
         _undirected(edges)
         .where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    metrics: list[dict] = []
-    import time
 
-    it = 0
-    converged = False
-    while it < max_iter:
-        t0 = time.monotonic()
+    def superstep(edges_df: DataFrame, e: DataFrame, i: int) -> DataFrame:
         # large-star: every neighbor larger than u links to u's min neighbor
         nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
@@ -284,40 +271,30 @@ def _star_contraction(
             large.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).where(F.col("v") < F.col("u"))
         mins2 = nbrs2.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             nbrs2.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionAll(mins2.select(F.col("u"), F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        changed = small.exceptAll(e).count() + e.exceptAll(small).count()
-        it += 1
-        metrics.append(
-            {"job_id": job_id, "superstep": it, "wall_s": round(time.monotonic() - t0, 4), "delta": float(changed)}
-        )
-        e = small
-        if changed == 0:
-            # explicit flag: a run whose edge set stabilises exactly on the
-            # final allowed round is still converged (it == max_iter here)
-            converged = True
-            break
 
-    # e is now a forest pointing each vertex at its component min.
+    def changed(old: DataFrame, new: DataFrame) -> float:
+        return float(new.exceptAll(old).count() + old.exceptAll(new).count())
+
+    res = run(edges.select("src", "dst"), init, superstep, changed)
+    # the state is now a forest pointing each vertex at its component min
     if vertices is None:
         verts = (
             _undirected(edges).select(F.col("src").alias("vid")).distinct()
         )
     else:
         verts = vertices.select("vid")
-    comp = verts.join(e, verts["vid"] == e["u"], "left").select(
+    comp = verts.join(res.state, verts["vid"] == res.state["u"], "left").select(
         "vid", F.coalesce(F.col("v"), F.col("vid")).alias("component")
     )
-    return pregel.PregelResult(
-        state=comp.localCheckpoint(eager=True),
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-    )
+    comp = comp.localCheckpoint(eager=True)
+    pregel._release(res.state)
+    res.state = comp
+    return res

@@ -30,16 +30,13 @@ E rows inside the loop; at 10^12-doc scale that trade is strictly
 right (E-row exchange per iteration dwarfs one extra cached copy that
 can spill to disk).
 
-The loop is hand-rolled rather than pregel.run_pregel because one HITS
-superstep is TWO half-steps with a mid-superstep scalar collect and a
-two-column delta; durable checkpoint/resume comes from reusing
-pregel.CheckpointStore directly (commit-markered state + metrics rows,
-final state always saved).
+One superstep is both half-steps on ``pregel.run_pregel``, which owns
+iteration, checkpoint/resume and metrics. The old hub and auth ride
+along through the half-steps, so tol mode observes its L∞ delta on the
+superstep's own materialization: zero extra jobs.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,7 +60,8 @@ def hits(
 ) -> pregel.PregelResult:
     """Returns state (vid, hub, auth), L2-normalized per iteration.
     ``checkpoint_dir`` enables commit-markered durable checkpoints of
-    the (vid, hub, auth) state with cross-run resume.
+    the (vid, hub, auth) state; a later run resumes them only over the
+    same edges (``run_pregel``'s input fingerprint).
 
     ``init_state`` (vid, hub, auth) warm-starts the power iteration from
     a previous converged state (incremental-crawl path, as in
@@ -75,150 +73,128 @@ def hits(
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    store = (
-        pregel.CheckpointStore(checkpoint_dir, job_id) if checkpoint_dir else None
-    )
     e0 = edges.select("src", "dst").distinct()
-    metrics: list[dict] = []
-    it = 0
-    state = None
-    if store is not None and resume:
-        last = store.latest()
-        if last is not None:
-            loaded, metrics = store.load(spark, last)
-            state = loaded.repartition(num_partitions, "vid").localCheckpoint(
-                eager=True
-            )
-            it = last
-    if state is None:
-        verts = (
-            e0.select(F.col("src").alias("vid"))
-            .unionAll(e0.select("dst"))
-            .distinct()
-            .repartition(num_partitions, "vid")
+    verts = (
+        e0.select(F.col("src").alias("vid"))
+        .unionAll(e0.select("dst"))
+        .distinct()
+        .repartition(num_partitions, "vid")
+        .persist()
+    )
+    cached = [verts]
+    # the newest half-step checkpoint (raw sums): each one supersedes the
+    # one before it (the hub half-step reads the auth half-step's; the
+    # next auth half-step reads the state run_pregel materialized from
+    # the hub half-step's)
+    internal: list[DataFrame] = []
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        if internal:
+            pregel._release(internal.pop())
+        internal.append(df)
+        return df
+
+    try:
+        if broadcast_state is None:
+            broadcast_state = verts.count() <= BROADCAST_STATE_MAX_VERTICES
+        # broadcast plan: one dst-partitioned cache serves both half-steps
+        # (the state side is broadcast, the auth groupBy(dst) is exchange-
+        # free). Exchange plan: one cache per join orientation so neither
+        # half-step ever exchanges E rows (see module docstring).
+        e_dst = e0.repartition(num_partitions, "dst").persist()
+        e_src = (
+            e_dst if broadcast_state else e0.repartition(num_partitions, "src").persist()
         )
+        cached += [e_dst, e_src]
         if init_state is not None:
             prior = init_state.select(
                 "vid", F.col("hub").alias("_h"), F.col("auth").alias("_a")
             )
-            state = verts.join(prior, "vid", "left").select(
+            init = verts.join(prior, "vid", "left").select(
                 "vid",
                 F.coalesce("_h", F.lit(1.0)).alias("hub"),
                 F.coalesce("_a", F.lit(1.0)).alias("auth"),
-            ).localCheckpoint(eager=True)
+            )
         else:
-            state = verts.select(
+            init = verts.select(
                 "vid", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-            ).localCheckpoint(eager=True)
-    if broadcast_state is None:
-        # state is localCheckpoint-materialized: this count is a cheap scan
-        broadcast_state = state.count() <= BROADCAST_STATE_MAX_VERTICES
-    # broadcast plan: one dst-partitioned cache serves both half-steps
-    # (the state side is broadcast, the auth groupBy(dst) is exchange-
-    # free). Exchange plan: one cache per join orientation so neither
-    # half-step ever exchanges E rows (see module docstring).
-    e_dst = e0.repartition(num_partitions, "dst").persist()
-    e_src = e_dst if broadcast_state else e0.repartition(
-        num_partitions, "src"
-    ).persist()
+            )
+        delta = pregel.ObservedDelta() if tol is not None else None
 
-    converged = False
-    saved = False  # final-state durability check after the loop
-    while it < max_iter:
-        t0 = time.monotonic()
-        hubs = state.select("vid", "hub")
-        if broadcast_state:
-            hubs = F.broadcast(hubs)
-        asum = (
-            e_src.join(hubs, e_src["src"] == hubs["vid"])
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("araw"))
-        )
-        # checkpoint the raw sums BEFORE the norm aggregate: otherwise
-        # the norm aggregate and the downstream plan would each execute
-        # the expensive join+aggregate once (2x per half-step). The norm
-        # itself rides the next half-step's plan as a broadcast 1-row
-        # frame over the checkpointed sums (r6) — no driver collect per
-        # half-step; `sqrt(sum x²) or 1.0` becomes
-        # coalesce(nullif(sqrt(...), 0.0), 1.0), bit-identical (IEEE
-        # sqrt is correctly rounded in both engines).
-        a_unnorm = (
-            state.hint("merge")
-            .join(asum, state["vid"] == asum["dst"], "left")
-            .select("vid", "hub", F.coalesce("araw", F.lit(0.0)).alias("araw"))
-            .localCheckpoint(eager=True)
-        )
-        a_norm = F.broadcast(
-            a_unnorm.agg(
-                F.coalesce(
-                    F.nullif(
-                        F.sqrt(F.sum(F.col("araw") * F.col("araw"))), F.lit(0.0)
+        def half_step(
+            state: DataFrame, e: DataFrame, frm: str, to: str, value: str, out: str
+        ) -> DataFrame:
+            """out(v) = Σ value(u) over the edges whose ``frm`` end is u
+            and ``to`` end is v, L2-normalized; the old ``out`` column is
+            kept as ``_<out>`` for the delta."""
+            vals = state.select("vid", value)
+            if broadcast_state:
+                vals = F.broadcast(vals)
+            sums = (
+                e.join(vals, e[frm] == vals["vid"])
+                .groupBy(to)
+                .agg(F.sum(value).alias("_raw"))
+            )
+            # checkpoint the raw sums BEFORE the norm aggregate: otherwise
+            # the norm aggregate and the downstream plan would each execute
+            # the expensive join+aggregate once (2x per half-step). The norm
+            # itself rides the next half-step's plan as a broadcast 1-row
+            # frame over the checkpointed sums (r6) — no driver collect per
+            # half-step; `sqrt(sum x²) or 1.0` becomes
+            # coalesce(nullif(sqrt(...), 0.0), 1.0), bit-identical (IEEE
+            # sqrt is correctly rounded in both engines).
+            cols = [F.col(c).alias(f"_{c}") if c == out else c for c in state.columns]
+            unnorm = checkpoint(
+                state.hint("merge")
+                .join(sums, state["vid"] == sums[to], "left")
+                .select(*cols, F.coalesce("_raw", F.lit(0.0)).alias("_raw"))
+            )
+            norm = F.broadcast(
+                unnorm.agg(
+                    F.coalesce(
+                        F.nullif(
+                            F.sqrt(F.sum(F.col("_raw") * F.col("_raw"))), F.lit(0.0)
+                        ),
+                        F.lit(1.0),
+                    ).alias("_norm")
+                )
+            )
+            return unnorm.crossJoin(norm).select(
+                *[c for c in unnorm.columns if c != "_raw"],
+                (F.col("_raw") / F.col("_norm")).alias(out),
+            )
+
+        def superstep(edges_df: DataFrame, state: DataFrame, i: int) -> DataFrame:
+            mid = half_step(state, e_src, "src", "dst", "hub", "auth")
+            new = half_step(mid, edges_df, "dst", "src", "auth", "hub")
+            if delta is not None:
+                new = delta.observe(
+                    new,
+                    F.max(
+                        F.greatest(
+                            F.abs(F.col("hub") - F.col("_hub")),
+                            F.abs(F.col("auth") - F.col("_auth")),
+                        )
                     ),
-                    F.lit(1.0),
-                ).alias("_anorm")
-            )
-        )
-        mid = a_unnorm.crossJoin(a_norm).select(
-            "vid", "hub", (F.col("araw") / F.col("_anorm")).alias("auth")
-        )
+                )
+            return new.select("vid", "hub", "auth")
 
-        auths = mid.select("vid", "auth")
-        if broadcast_state:
-            auths = F.broadcast(auths)
-        hsum = (
-            e_dst.join(auths, e_dst["dst"] == auths["vid"])
-            .groupBy("src")
-            .agg(F.sum("auth").alias("hraw"))
+        # fixed-iteration mode reports converged=False (run_pregel semantics)
+        return pregel.run_pregel(
+            e_dst,
+            init,
+            superstep,
+            delta,
+            max_iter=max_iter,
+            tol=tol if tol is not None else 0.0,
+            checkpoint_dir=checkpoint_dir,
+            job_id=job_id,
+            checkpoint_every=checkpoint_every,
+            resume=resume,
         )
-        h_unnorm = (
-            mid.hint("merge")
-            .join(hsum, mid["vid"] == hsum["src"], "left")
-            .select("vid", F.coalesce("hraw", F.lit(0.0)).alias("hraw"), "auth")
-            .localCheckpoint(eager=True)
-        )
-        h_norm = F.broadcast(
-            h_unnorm.agg(
-                F.coalesce(
-                    F.nullif(
-                        F.sqrt(F.sum(F.col("hraw") * F.col("hraw"))), F.lit(0.0)
-                    ),
-                    F.lit(1.0),
-                ).alias("_hnorm")
-            )
-        )
-        new_state = h_unnorm.crossJoin(h_norm).select(
-            "vid", (F.col("hraw") / F.col("_hnorm")).alias("hub"), "auth"
-        )
-
-        it += 1
-        delta = None
-        if tol is not None:
-            delta = max(
-                pregel.linf_delta(state, new_state, "vid", "hub"),
-                pregel.linf_delta(state, new_state, "vid", "auth"),
-            )
-        metrics.append(
-            {
-                "job_id": job_id,
-                "superstep": it,
-                "wall_s": round(time.monotonic() - t0, 4),
-                "delta": float(delta) if delta is not None else float("nan"),
-            }
-        )
-        state = new_state
-        saved = False
-        if store is not None and it % checkpoint_every == 0:
-            store.save(it, state, metrics)
-            saved = True
-        if tol is not None and delta is not None and delta <= tol:
-            converged = True
-            break
-    if store is not None and it > 0 and not saved:
-        store.save(it, state, metrics)  # final state always durable
-    e_dst.unpersist()
-    if e_src is not e_dst:
-        e_src.unpersist()
-    # fixed-iteration mode reports converged=False (run_pregel semantics)
-    return pregel.PregelResult(
-        state=state, iterations=it, converged=converged, metrics=metrics
-    )
+    finally:
+        if internal:
+            pregel._release(internal.pop())
+        for df in cached:
+            df.unpersist()

@@ -6,13 +6,13 @@ Each round drops vertices below k and the edges touching them; rounds
 are idempotent once stable, so a FIXED round count is exact whenever it
 exceeds the peel depth (the same determinism trick the CC oracle uses).
 
-Each round = one degree aggregation + two semi-joins, all on (src, dst)
-pairs; nothing wider ever shuffles, and the edge set only shrinks.
+Each round = one degree aggregation + two joins against it, all on
+(src, dst) pairs; nothing wider ever shuffles, and the edge set only
+shrinks. The rounds run on ``pregel.run_pregel`` with the edge set as
+the state.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,86 +34,48 @@ def k_core(
     """Returns state = (vid) rows of the k-core's surviving vertices.
 
     ``checkpoint_dir`` enables durable per-round checkpoints of the
-    shrinking edge set (commit-markered, CheckpointStore layout); a
-    killed run resumes from the last committed round — peeling is
+    shrinking edge set (commit-markered); a killed run over the same
+    edges resumes from the last committed round — peeling is
     idempotent, so a resumed run is bit-identical to an uninterrupted
-    one."""
+    one. ``job_id`` defaults to ``kcore<k>``."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    store = (
-        pregel.CheckpointStore(checkpoint_dir, job_id or f"kcore{k}")
-        if checkpoint_dir
-        else None
+    und = (
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .repartition(num_partitions, "src")
     )
-    metrics: list[dict] = []
-    it = 0
-    und = None
-    if store is not None and resume:
-        last = store.latest()
-        if last is not None:
-            loaded, metrics = store.load(spark, last)
-            und = loaded.repartition(num_partitions, "src").localCheckpoint(
-                eager=True
-            )
-            it = last
-    if und is None:
-        und = (
-            edges.select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .unionAll(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .repartition(num_partitions, "src")
-            .localCheckpoint(eager=True)
-        )
-    converged = False
-    saved = False  # final-state durability check after the loop
-    n_edges = und.count()  # carried forward; equals last round's pruned count
-    while it < max_iter:
-        t0 = time.monotonic()
-        alive = (
-            und.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("vid"))
-        )
-        pruned = (
-            und.join(alive, und["src"] == alive["vid"], "left_semi")
-            .join(
-                alive.select(F.col("vid").alias("__d__")),
-                und["dst"] == F.col("__d__"),
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_pruned = pruned.count()
-        removed = n_edges - n_pruned
-        n_edges = n_pruned
-        it += 1
-        metrics.append(
-            {
-                "job_id": f"kcore{k}",
-                "superstep": it,
-                "wall_s": round(time.monotonic() - t0, 4),
-                "delta": float(removed),
-            }
-        )
-        und = pruned
-        saved = False
-        if store is not None and (it % checkpoint_every == 0 or removed == 0):
-            store.save(it, und, metrics)
-            saved = True
-        if removed == 0:
-            converged = True
-            break
-    if store is not None and it > 0 and not saved:
-        store.save(it, und, metrics)  # final round always durable
-    core = und.select(F.col("src").alias("vid")).distinct()
-    return pregel.PregelResult(
-        state=core.localCheckpoint(eager=True),
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
+    # the delta is the number of removed edges: flag them on the degree
+    # joins and observe the flag count on the round's own
+    # materialization, so no round counts its edges
+    delta = pregel.ObservedDelta()
+
+    def superstep(edges_df: DataFrame, und: DataFrame, i: int) -> DataFrame:
+        # und is symmetric, so every dst is also a src with a degree row
+        ok = und.groupBy("src").agg((F.count(F.lit(1)) >= k).alias("_ok"))
+        ok_dst = ok.select(F.col("src").alias("dst"), F.col("_ok").alias("_ok_dst"))
+        flagged = und.join(ok, "src").join(ok_dst, "dst")
+        keep = F.col("_ok") & F.col("_ok_dst")
+        flagged = delta.observe(flagged, F.count_if(~keep))
+        return flagged.where(keep).select("src", "dst")
+
+    res = pregel.run_pregel(
+        edges.select("src", "dst"),
+        und,
+        superstep,
+        delta,
+        max_iter=max_iter,
+        tol=0.0,
+        checkpoint_dir=checkpoint_dir,
+        job_id=job_id or f"kcore{k}",
+        checkpoint_every=checkpoint_every,
+        resume=resume,
     )
+    core = res.state.select(F.col("src").alias("vid")).distinct()
+    core = core.localCheckpoint(eager=True)
+    pregel._release(res.state)
+    res.state = core
+    return res

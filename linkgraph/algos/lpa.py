@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
+from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def label_propagation(
@@ -62,7 +63,7 @@ def label_propagation(
     else:
         verts = vertices.select("vid")
     verts = verts.persist()
-    broadcast_state = verts.count() <= 20_000_000
+    broadcast_state = verts.count() <= BROADCAST_STATE_MAX_VERTICES
     init = verts.select("vid", F.col("vid").alias("label"))
 
     # changed-count collected as an observed metric of the superstep

@@ -169,26 +169,15 @@ class CheckpointStore:
         return state, meta.get("history", [])
 
 
-def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
-    """max |new.value - old.value| over the key join: one join and one
-    collect. hits is the only engine caller; the random-walk kernel
-    (pagerank, ppr, wpagerank) observes the same max inside the
-    superstep instead (``ObservedDelta``)."""
-    j = new.alias("n").join(old.alias("o"), key)
-    row = j.select(
-        F.max(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("d")
-    ).collect()[0]
-    return float(row["d"]) if row["d"] is not None else 0.0
-
-
 class ObservedDelta:
     """A convergence delta observed on the superstep's own
     materialization: zero extra Spark jobs per superstep.
 
     The superstep function passes its result frame through ``observe``
     with an aggregate over columns the frame already carries (cc/lpa: the
-    sum of a changed flag; the random-walk kernel: the max of
-    |score - old score|).
+    sum of a changed flag; k_core: the sum of a removed-edge flag; the
+    random-walk kernel: the max of |score - old score|; hits: the max of
+    |hub - old hub| and |auth - old auth|).
     ``run_pregel`` materializes that frame once, then calls this object
     as its ``delta_fn``, which pops the collected value (see the call
     protocol in ``run_pregel``)."""
@@ -236,9 +225,9 @@ def run_pregel(
     decides convergence; pass ``None`` for fixed-iteration runs to skip
     it entirely (the benchmark mode).
 
-    CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa
-    and the random-walk kernel attach an ``ObservedDelta`` observation to each
-    superstep's frame, which the delta_fn pops): per iteration this
+    CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa,
+    k_core, hits and the random-walk kernel attach an ``ObservedDelta``
+    observation to each superstep's frame, which the delta_fn pops): per iteration this
     loop calls ``superstep_fn`` exactly once, eagerly materializes its
     result via ``localCheckpoint(eager=True)`` (which fires
     CollectMetrics), and THEN calls ``delta_fn`` exactly once. Superstep results are never

@@ -3,7 +3,6 @@
 counts exact — FIXTURES.md §3)."""
 
 import math
-import os
 
 import pytest
 
@@ -75,12 +74,31 @@ def test_connected_components_star_contraction(tiny_edges, graph):
     assert got == expected
 
 
-def test_star_contraction_warns_that_it_does_not_checkpoint(tiny_edges, tmp_path):
-    with pytest.warns(UserWarning, match="does not checkpoint"):
-        connected_components(
-            tiny_edges, algorithm="two-phase", max_iter=1, checkpoint_dir=str(tmp_path)
-        )
-    assert not os.listdir(tmp_path)
+def test_star_contraction_resume_identical(tiny_edges, tmp_path):
+    """A two-phase run stopped after one round resumes from its committed
+    checkpoint and ends with the labels of an uninterrupted run. A
+    hash-min run under the same job_id keeps its checkpoints apart."""
+    from linkgraph.pregel import CheckpointStore
+
+    ckpt = str(tmp_path / "ck")
+    full = connected_components(tiny_edges, algorithm="two-phase")
+    connected_components(tiny_edges, checkpoint_dir=ckpt, job_id="cc")
+    part = connected_components(
+        tiny_edges, algorithm="two-phase", max_iter=1, checkpoint_dir=ckpt,
+        job_id="cc", checkpoint_every=1,
+    )
+    assert not part.converged
+    assert CheckpointStore(ckpt, "cc-two-phase").latest() == 1
+    resumed = connected_components(
+        tiny_edges, algorithm="two-phase", checkpoint_dir=ckpt,
+        job_id="cc", checkpoint_every=1,
+    )
+    assert resumed.converged
+    # continued, not restarted: round 1 comes from the checkpoint's history
+    assert resumed.iterations == full.iterations > 1
+    assert resumed.metrics[:1] == part.metrics
+    assert [m["superstep"] for m in resumed.metrics] == list(range(1, resumed.iterations + 1))
+    assert dict(resumed.state.collect()) == dict(full.state.collect())
 
 
 def test_label_propagation_fixed_rounds(tiny_edges, graph):
@@ -181,9 +199,14 @@ def test_k_core_peeling(spark):
     res = k_core(e, k=3)
     assert res.converged
     assert {r["vid"] for r in res.state.collect()} == {0, 1, 2, 3}
+    # the delta is the number of removed directed edges per round:
+    # round 1 drops 3-4, 4-5 both ways; round 2 removes nothing
+    assert [m["delta"] for m in res.metrics] == [4.0, 0.0]
+    assert {m["job_id"] for m in res.metrics} == {"kcore3"}
     # peeling cascades: removing 5 drops 4's degree below 1? (k=2 case)
-    res2 = k_core(e, k=2)
+    res2 = k_core(e, k=2, job_id="core")
     assert {r["vid"] for r in res2.state.collect()} == {0, 1, 2, 3}
+    assert {m["job_id"] for m in res2.metrics} == {"core"}
     # k=1: everything with at least one edge survives
     res1 = k_core(e, k=1)
     assert {r["vid"] for r in res1.state.collect()} == {0, 1, 2, 3, 4, 5}
@@ -269,15 +292,19 @@ def test_weighted_pagerank_edge_cases(spark):
 
 
 def test_random_walks_release_their_caches(spark, tiny_edges):
-    """Every frame pagerank, ppr, weighted_pagerank and
-    minhash_lsh_pairs cache is released on return and on error.
-    Superstep states are counted apart: each is a localCheckpoint, whose
-    RDD Spark persists and marks checkpointed. run_pregel releases every
-    superseded state, so a call keeps at most one (the returned state;
-    minhash_lsh_pairs' materialized pairs)."""
+    """Every frame pagerank, ppr, weighted_pagerank, hits, k_core,
+    two-phase cc and minhash_lsh_pairs cache is released on return and
+    on error. Superstep states are counted apart: each is a
+    localCheckpoint, whose RDD Spark persists and marks checkpointed.
+    run_pregel releases every superseded state, and the kernels release
+    their own intermediate checkpoints, so a call keeps at most one (the
+    returned state; minhash_lsh_pairs' materialized pairs)."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from linkgraph.algos import personalized_pagerank
+    from linkgraph.algos.hits import hits
+    from linkgraph.algos.kcore import k_core
     from linkgraph.algos.pagerank import weighted_pagerank
     from linkgraph.pipeline.dedup import minhash_lsh_pairs
 
@@ -298,6 +325,11 @@ def test_random_walks_release_their_caches(spark, tiny_edges):
         lambda: personalized_pagerank(tiny_edges, [0, 5], max_iter=6),
         lambda: weighted_pagerank(we, max_iter=6),
         lambda: minhash_lsh_pairs(docs).collect(),
+        lambda: hits(tiny_edges, max_iter=6),
+        lambda: hits(tiny_edges, max_iter=6, tol=1e-30),
+        lambda: hits(tiny_edges, max_iter=3, broadcast_state=False),
+        lambda: k_core(tiny_edges, k=2),
+        lambda: connected_components(tiny_edges, algorithm="two-phase"),
     ):
         cached, checkpointed = persisted()
         call()
@@ -307,6 +339,10 @@ def test_random_walks_release_their_caches(spark, tiny_edges):
     cached, _ = persisted()
     with pytest.raises(ValueError, match="not present"):
         personalized_pagerank(tiny_edges, [10**9])
+    assert persisted()[0] == cached
+    # an init_state without hub/auth fails after hits cached its inputs
+    with pytest.raises(AnalysisException):
+        hits(tiny_edges, init_state=tiny_edges)
     assert persisted()[0] == cached
 
 

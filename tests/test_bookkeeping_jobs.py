@@ -1,26 +1,42 @@
 """Bookkeeping launches no Spark jobs of its own: a checkpoint save is
 its state write, and a tol-mode random-walk superstep (PageRank, PPR,
-weighted PageRank) observes its L∞ delta on its own materialization.
-Jobs are counted per job group through the status tracker."""
+weighted PageRank) or HITS superstep observes its L∞ delta on its own
+materialization. Jobs are counted per job group through the status
+tracker."""
 
 import uuid
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
+from linkgraph.algos.hits import hits
 from linkgraph.algos.pagerank import pagerank, personalized_pagerank, weighted_pagerank
 
-RANDOM_WALKS = ["pagerank", "ppr", "wpagerank"]
+OBSERVED = ["pagerank", "ppr", "wpagerank", "hits"]
+DELTA_COLS = {"hits": ("hub", "auth")}
 
 
-def _run_walk(algo, edges, tol, max_iter):
+def _run(algo, edges, tol, max_iter):
+    if algo == "hits":
+        return hits(edges, tol=tol, max_iter=max_iter)
     if algo == "pagerank":
         return pagerank(edges, tol=tol, max_iter=max_iter)
     if algo == "ppr":
         return personalized_pagerank(edges, [1, 2], tol=tol, max_iter=max_iter)
     we = edges.withColumn("weight", (F.col("src") + F.col("dst") + 1).cast("double"))
     return weighted_pagerank(we, tol=tol, max_iter=max_iter)
+
+
+def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
+    """max |new.value - old.value| over the key join: one join and one
+    collect. The reference the observed deltas are checked against."""
+    j = new.alias("n").join(old.alias("o"), key)
+    row = j.select(
+        F.max(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("d")
+    ).collect()[0]
+    return float(row["d"]) if row["d"] is not None else 0.0
 
 
 def _group_jobs(spark, group: str) -> int:
@@ -78,29 +94,30 @@ def test_checkpoint_save_is_one_spark_job(spark, tmp_path):
 
 
 def test_tol_superstep_jobs_match_fixed_iteration(spark, tiny_edges, traced_supersteps):
-    for algo in RANDOM_WALKS:
+    for algo in OBSERVED:
         traced_supersteps.clear()
-        _run_walk(algo, tiny_edges, None, 3)
+        _run(algo, tiny_edges, None, 3)
         fixed = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
         traced_supersteps.clear()
-        res = _run_walk(algo, tiny_edges, 1e-6, 3)
+        res = _run(algo, tiny_edges, 1e-6, 3)
         tol = [_group_jobs(spark, g) for g, _ in traced_supersteps[1:]]
         assert not res.converged, algo
-        assert tol == fixed, algo
+        assert len(fixed) == 2 and tol == fixed, algo
 
 
-@pytest.mark.parametrize("algo", RANDOM_WALKS)
+@pytest.mark.parametrize("algo", OBSERVED)
 def test_observed_delta_matches_linf_delta(spark, tiny_edges, traced_supersteps, algo):
-    res = _run_walk(algo, tiny_edges, 1e-6, 100)
+    res = _run(algo, tiny_edges, 1e-6, 100)
     assert res.converged
     states = [s for _, s in traced_supersteps] + [res.state]
     deltas = [m["delta"] for m in res.metrics]
+    # hits' delta is the larger of its two columns' deltas
     assert deltas == [
-        pregel.linf_delta(old, new, "vid", "score")
+        max(linf_delta(old, new, "vid", v) for v in DELTA_COLS.get(algo, ("score",)))
         for old, new in zip(states, states[1:])
     ]
     # it stops at the first superstep whose delta reaches tol ...
     assert res.iterations == 1 + next(k for k, d in enumerate(deltas) if d <= 1e-6)
     # ... with the scores of exactly that many fixed iterations
-    fixed = _run_walk(algo, tiny_edges, None, res.iterations)
-    assert dict(res.state.collect()) == dict(fixed.state.collect())
+    fixed = _run(algo, tiny_edges, None, res.iterations)
+    assert sorted(res.state.collect()) == sorted(fixed.state.collect())

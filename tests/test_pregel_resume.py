@@ -111,7 +111,36 @@ def test_checkpoint_metrics_have_partition_rows(tiny_edges, tmp_path):
     assert sum(r["rows"] for r in prows.collect()) > 0
 
 
-def test_resume_rejects_checkpoints_from_different_input(spark, tiny_edges, tmp_path):
+def _run_cc(edges, **kw):
+    from linkgraph.algos import connected_components
+
+    res = connected_components(edges, max_iter=50, **kw)
+    return {r["vid"]: r["component"] for r in res.state.collect()}
+
+
+def _run_cc2(edges, **kw):
+    from linkgraph.algos import connected_components
+
+    res = connected_components(edges, algorithm="two-phase", **kw)
+    return {r["vid"]: r["component"] for r in res.state.collect()}
+
+
+def _run_hits(edges, **kw):
+    from linkgraph.algos.hits import hits
+
+    res = hits(edges, max_iter=5, **kw)
+    return {r["vid"]: (r["hub"], r["auth"]) for r in res.state.collect()}
+
+
+def _run_kcore(edges, **kw):
+    from linkgraph.algos.kcore import k_core
+
+    return {r["vid"] for r in k_core(edges, k=2, **kw).state.collect()}
+
+
+@pytest.mark.parametrize("run", [_run_cc, _run_hits, _run_kcore, _run_cc2],
+                         ids=["cc", "hits", "kcore", "cc-two-phase"])
+def test_resume_rejects_checkpoints_from_different_input(spark, tiny_edges, tmp_path, run):
     """A checkpoint under a job_id is only resumable for the SAME edge
     set (order-insensitive input fingerprint): re-running with different
     edges warns, clears the stale checkpoints, and produces the same
@@ -121,31 +150,26 @@ def test_resume_rejects_checkpoints_from_different_input(spark, tiny_edges, tmp_
 
     from pyspark.sql import functions as F
 
-    from linkgraph.algos import connected_components
-
     ckpt = str(tmp_path / "ck")
-    a = connected_components(tiny_edges, max_iter=50, checkpoint_dir=ckpt,
-                             job_id="cc", checkpoint_every=1)
-    assert CheckpointStore(ckpt, "cc").latest() is not None
+    run(tiny_edges, checkpoint_dir=ckpt, job_id="j", checkpoint_every=1)
+    (job,) = os.listdir(ckpt)
+    assert CheckpointStore(ckpt, job).latest() is not None
 
     other = tiny_edges.select(
         (F.col("src") + 100).alias("src"), (F.col("dst") + 100).alias("dst")
     )
-    fresh = connected_components(other, max_iter=50)
-    expected = {r["vid"]: r["component"] for r in fresh.state.collect()}
+    expected = run(other)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        b = connected_components(other, max_iter=50, checkpoint_dir=ckpt,
-                                 job_id="cc", checkpoint_every=1)
+        b = run(other, checkpoint_dir=ckpt, job_id="j", checkpoint_every=1)
     assert any("different edge set" in str(x.message) for x in w)
-    assert {r["vid"]: r["component"] for r in b.state.collect()} == expected
+    assert b == expected
     # same-input resume still works (fingerprint matches, no warning)
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
-        c = connected_components(other, max_iter=50, checkpoint_dir=ckpt,
-                                 job_id="cc", checkpoint_every=1)
+        c = run(other, checkpoint_dir=ckpt, job_id="j", checkpoint_every=1)
     assert not any("different edge set" in str(x.message) for x in w2)
-    assert {r["vid"]: r["component"] for r in c.state.collect()} == expected
+    assert c == expected
 
 
 def test_resume_rejects_unfingerprinted_checkpoints(spark, tiny_edges, tmp_path):
