@@ -1085,10 +1085,10 @@ def _d_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pigeonhole hamming join (dedup.hamming_pairs, shared by text
-    simhash / image dhash / audio fingerprints) — oracle-checked: band
-    chunks, equi-join, popcount verify are all replicated in DuckDB
-    (arithmetic >> then mask gives identical chunks in both engines)."""
+    """The pigeonhole hamming join (dedup.hamming_pairs behind
+    dedup.simhash_pairs) — oracle-checked: band chunks, equi-join,
+    popcount verify are all replicated in DuckDB (arithmetic >> then
+    mask gives identical chunks in both engines)."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_pairs(docs, max_hamming=3)
 

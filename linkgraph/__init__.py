@@ -17,8 +17,7 @@ Layout (SURVEY.md §7):
   kgdsl.py      KGDSL native dialect (GraphStructure/Rule/Action, Define
                 derived predicates, Action DDL, multi-statement scripts)
   functions.py  scalar/aggregate function registry (reference UDF parity)
-  pipeline/     training-data ops: dedup, similarity search, text stats,
-                multimodal plumbing
+  pipeline/     training-data ops: dedup, similarity search, text stats
   datagen.py    deterministic synthetic Common-Crawl-style pages + graphs
 """
 

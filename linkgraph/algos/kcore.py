@@ -37,14 +37,15 @@ def k_core(
     shrinking edge set (commit-markered); a killed run over the same
     edges resumes from the last committed round — peeling is
     idempotent, so a resumed run is bit-identical to an uninterrupted
-    one. ``job_id`` defaults to ``kcore<k>``."""
+    one. A checkpoint written for another ``k`` is not resumed.
+    ``job_id`` defaults to ``kcore<k>``. Self-loops are ignored."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     und = (
         edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
         .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .where(F.col("src") != F.col("dst"))
         .distinct()
         .repartition(num_partitions, "src")
     )
@@ -62,8 +63,11 @@ def k_core(
         flagged = delta.observe(flagged, F.count_if(~keep))
         return flagged.where(keep).select("src", "dst")
 
+    # the superstep never reads run_pregel's edges argument; it is only
+    # fingerprinted, so k rides in it and a checkpoint of another k
+    # under the same job_id is cleared instead of resumed
     res = pregel.run_pregel(
-        edges.select("src", "dst"),
+        edges.select("src", "dst", F.lit(k).alias("k")),
         und,
         superstep,
         delta,

@@ -106,8 +106,7 @@ def extract_links(html_bytes: bytes, base_url: str) -> list[tuple[str, str]]:
 # Spark operators (Arrow-batched)
 # ---------------------------------------------------------------------------
 
-# the input_hint page-table shape (FIXTURES.md §1): what both the batch
-# jobs and the streaming file source expect
+# the input_hint page-table shape (FIXTURES.md §1) the crawl jobs read
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 EXTRACTED_SCHEMA = (

@@ -1,2 +1,2 @@
 """Training-data pipeline operators over document/embedding tables:
-deduplication, similarity search, text analysis, multimodal plumbing."""
+deduplication, similarity search, text analysis."""

@@ -379,7 +379,7 @@ def simhash_pairs(
     sims = simhash(docs, id_col, text_col)
     return hamming_pairs(
         sims, id_col=id_col, hash_col="simhash", max_hamming=max_hamming,
-        bands=bands, max_bucket_size=max_bucket_size, caller="simhash_pairs",
+        bands=bands, max_bucket_size=max_bucket_size,
     )
 
 
@@ -390,26 +390,23 @@ def hamming_pairs(
     max_hamming: int = 3,
     bands: int | None = None,
     max_bucket_size: int | None = None,
-    caller: str = "hamming_pairs",
-    materialize: bool | None = None,
 ) -> DataFrame:
-    """Generic pigeonhole near-dup join over ANY (id, 64-bit hash)
-    frame: band the hash into chunks, equi-join on chunk keys, verify by
-    exact popcount. Returns (a, b, hamming) with a < b and hamming ≤
-    ``max_hamming``. Backs both text simhash and image dhash — NULL
-    hashes (null text, undecodable images) are dropped up front, so
-    they never form a shared-null bucket.
+    """Pigeonhole near-dup join over an (id, 64-bit hash) frame: band
+    the hash into chunks, equi-join on chunk keys, verify by exact
+    popcount. Returns (a, b, hamming) with a < b and hamming ≤
+    ``max_hamming``. The join behind ``simhash_pairs``: NULL hashes
+    (null text) are dropped up front, so they never form a shared-null
+    bucket.
 
-    ``materialize`` controls whether the verified pair set is eagerly
+    Up to 10M hashed rows, the verified pair set is eagerly
     localCheckpoint-ed (which lets the cached (id, hash) frame be
     released immediately, but pins the pairs in executor memory/disk
-    and is not fault-tolerant). Default ``None`` decides from the input
-    size: materialize up to 10M hashed rows; above that the pair set is
-    only "small" by assumption (a near-dup-heavy corpus can make it
-    huge), so the LAZY frame is returned and the (id, hash) cache is
-    released immediately too — each action on the result recomputes the
-    hash branches from lineage (fault-tolerant, nothing pinned; callers
-    that run several actions should persist the result themselves)."""
+    and is not fault-tolerant). Above that the pair set is only "small"
+    by assumption (a near-dup-heavy corpus can make it huge), so the
+    LAZY frame is returned and the (id, hash) cache is released
+    immediately too — each action on the result recomputes the hash
+    branches from lineage (fault-tolerant, nothing pinned; callers that
+    run several actions should persist the result themselves)."""
     if bands is None:
         bands = next(b for b in (1, 2, 4, 8, 16, 32, 64) if b > max_hamming)
     assert max_hamming < bands and 64 % bands == 0, (
@@ -422,8 +419,6 @@ def hamming_pairs(
         .persist()
     )
     n_sims = sims.count()  # materialize: the self-join below reads it twice
-    if materialize is None:
-        materialize = n_sims <= 10_000_000
     chunked = sims.select(
         "id",
         "__h__",
@@ -442,7 +437,7 @@ def hamming_pairs(
     anchored = None
     if max_bucket_size is not None:
         chunked, anchored = _anchor_hot_buckets(
-            chunked, ["band", "chunk"], max_bucket_size, caller,
+            chunked, ["band", "chunk"], max_bucket_size, "simhash_pairs",
             carry=("__h__",),
         )
         if anchored is not None:
@@ -464,11 +459,10 @@ def hamming_pairs(
     out = cand.select("a", "b", hamming.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
-    if materialize:
+    if n_sims <= 10_000_000:
         # materialize the (bounded-by-gate) verified pair set so the
         # cached (id, hash) frame can be released now instead of
-        # leaking for the session lifetime — text/image/audio call
-        # sites each invoke this once per corpus
+        # leaking for the session lifetime
         out = out.localCheckpoint(eager=True)
     # both paths release the cache: the lazy path recomputes the two
     # hash-branch reads from lineage per action instead of pinning

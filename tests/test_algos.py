@@ -210,6 +210,10 @@ def test_k_core_peeling(spark):
     # k=1: everything with at least one edge survives
     res1 = k_core(e, k=1)
     assert {r["vid"] for r in res1.state.collect()} == {0, 1, 2, 3, 4, 5}
+    # a self-loop adds nothing to its vertex's degree
+    for loops, core in (([(7, 7)], set()), ([(1, 1), (2, 3)], {2, 3})):
+        sl = spark.createDataFrame(loops, "src bigint, dst bigint")
+        assert {r["vid"] for r in k_core(sl, k=1).state.collect()} == core
 
 
 def test_random_walks_deterministic_and_dead_ends(spark):

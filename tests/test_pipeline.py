@@ -1,11 +1,9 @@
-"""Training-data pipeline ops: dedup, similarity search, text stats,
-multimodal plumbing."""
+"""Training-data pipeline ops: dedup, similarity search, text stats."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from linkgraph.pipeline import dedup, multimodal, simsearch, textstats
+from linkgraph.pipeline import dedup, simsearch, textstats
 
 
 @pytest.fixture(scope="module")
@@ -185,25 +183,6 @@ def test_pq_encode_is_projection_only(vectors):
     assert "EvalPython" not in plan, plan  # no Batch/ArrowEvalPython nodes
 
 
-def test_multimodal_fake_decode(spark):
-    rows = [
-        (i, multimodal.encode_fake_image(8 + i, 6, 3, seed=i)) for i in range(4)
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["id", "image"]), "id bigint, image binary"
-    )
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert got[2]["width"] == 10 and got[2]["height"] == 6 and got[2]["channels"] == 3
-    assert got[2]["n_bytes"] == len(rows[2][1])
-    assert 0 < got[2]["mean_value"] < 255
-
-
-def test_multimodal_stub_raises(spark):
-    df = spark.createDataFrame([(1, b"notanimage")], "id bigint, image binary")
-    with pytest.raises(Exception, match="NotImplementedError|FAKEIMG|codec|Pillow"):
-        multimodal.image_metadata(df).collect()
-
-
 def test_simhash_pairs(docs):
     got = {(r["a"], r["b"]): r["hamming"] for r in dedup.simhash_pairs(docs, max_hamming=3).collect()}
     assert got.get((0, 1)) == 0  # exact dup
@@ -370,199 +349,6 @@ def test_cosine_pairs_lsh_hot_bucket_anchoring(spark):
     assert not any(a >= 100 or b >= 100 for a, b in capped)
 
 
-def test_audio_stats_real_wav(spark):
-    """The audio path is a REAL decoder (stdlib wave): synthesize PCM
-    WAVs with known properties and verify duration/RMS/peak."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal
-
-    def make_wav(freq, seconds, rate=8000, amp=0.5):
-        t = np.arange(int(rate * seconds)) / rate
-        pcm = (amp * np.sin(2 * math.pi * freq * t) * 32767).astype("<i2")
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(rate)
-            w.writeframes(pcm.tobytes())
-        return buf.getvalue()
-
-    rows = [(1, make_wav(440, 0.5)), (2, make_wav(220, 2.0, amp=0.25))]
-    df = spark.createDataFrame(rows, "id bigint, audio binary")
-    got = {r["id"]: r for r in multimodal.audio_stats(df).collect()}
-    assert got[1]["sample_rate"] == 8000 and got[1]["n_channels"] == 1
-    assert abs(got[1]["duration_s"] - 0.5) < 1e-9
-    assert abs(got[2]["duration_s"] - 2.0) < 1e-9
-    # sine RMS = amp/sqrt(2)
-    assert abs(got[1]["rms"] - 0.5 / math.sqrt(2)) < 0.01
-    assert abs(got[2]["rms"] - 0.25 / math.sqrt(2)) < 0.01
-    assert got[1]["peak"] <= 0.5 + 0.01 and got[2]["peak"] <= 0.25 + 0.01
-
-
-def test_audio_aiff_decode_cross_container():
-    """AIFF (big-endian PCM, 80-bit-float sample rate) decodes through
-    the same kernel as WAV: identical stats for the same signal, and a
-    0-bit fingerprint distance across containers."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    from linkgraph.pipeline import audiofp, multimodal
-
-    def make_wav(sig, rate=8000):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(rate)
-            w.writeframes((sig * 32767).astype("<i2").tobytes())
-        return buf.getvalue()
-
-    def make_aiff(sig, rate=8000):
-        pcm = (sig * 32767).astype(">i2").tobytes()
-        exp, mant = 16383 + 63, rate
-        while mant < (1 << 63):
-            mant <<= 1
-            exp -= 1
-        ext = bytes([(exp >> 8) & 0x7F, exp & 0xFF]) + mant.to_bytes(8, "big")
-        comm = struct.pack(">HIH", 1, sig.size, 16) + ext
-        ssnd = struct.pack(">II", 0, 0) + pcm
-
-        def chunk(tag, d):
-            return tag + struct.pack(">I", len(d)) + d + (b"\x00" if len(d) & 1 else b"")
-
-        body = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-        return b"FORM" + struct.pack(">I", len(body)) + body
-
-    t = np.arange(16000) / 8000.0
-    sig = (0.6 * np.sin(2 * np.pi * (200 + 150 * t) * t)
-           * (0.5 + 0.5 * np.sin(2 * np.pi * 1.3 * t)))
-    wv, af = make_wav(sig), make_aiff(sig)
-    sw, sa = multimodal.decode_wav_bytes(wv), multimodal.decode_wav_bytes(af)
-    assert (sa["sample_rate"], sa["n_channels"], sa["n_frames"]) == (8000, 1, 16000)
-    assert abs(sw["rms"] - sa["rms"]) < 1e-9 and abs(sw["peak"] - sa["peak"]) < 1e-9
-    hw = audiofp.audio_fingerprint_bytes(wv)
-    ha = audiofp.audio_fingerprint_bytes(af)
-    assert bin(hw ^ ha).count("1") == 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError, match="compression"):
-        comm22 = struct.pack(">HIH", 1, 4, 16) + b"\x40\x0c" + b"\x00" * 8 + b"ulaw"
-        body = (b"AIFC"
-                + b"COMM" + struct.pack(">I", 22) + comm22
-                + b"SSND" + struct.pack(">I", 8) + struct.pack(">II", 0, 0))
-        multimodal.pcm_samples(b"FORM" + struct.pack(">I", len(body)) + body)
-
-
-def test_audio_fingerprint_and_neardup_pairs(spark):
-    """Spectral-delta fingerprint: the same clip as 16-bit vs 8-bit PCM
-    or volume-scaled hashes within a few bits (frame-to-frame band
-    comparisons are gain-invariant); different material is far; the
-    pair generator reuses the pigeonhole machinery and null-pads
-    undecodable blobs."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from linkgraph.pipeline import audiofp
-
-    def make_wav(sig, width=2, rate=8000):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(width)
-            w.setframerate(rate)
-            if width == 2:
-                w.writeframes((sig * 32767).astype("<i2").tobytes())
-            else:
-                w.writeframes(
-                    ((sig * 127) + 128).clip(0, 255).astype(np.uint8).tobytes()
-                )
-        return buf.getvalue()
-
-    def ham(a, b):
-        return bin(a ^ b).count("1")
-
-    t = np.arange(16000) / 8000.0
-    sig = (0.6 * np.sin(2 * np.pi * (200 + 150 * t) * t)
-           * (0.5 + 0.5 * np.sin(2 * np.pi * 1.3 * t)))
-    other = (0.5 * np.sin(2 * np.pi * (700 - 300 * t) * t)
-             * (0.5 + 0.5 * np.cos(2 * np.pi * 0.7 * t)))
-    h16 = audiofp.audio_fingerprint_bytes(make_wav(sig))
-    assert ham(h16, audiofp.audio_fingerprint_bytes(make_wav(sig, width=1))) <= 4
-    assert ham(h16, audiofp.audio_fingerprint_bytes(make_wav(sig * 0.3))) <= 4
-    assert ham(h16, audiofp.audio_fingerprint_bytes(make_wav(other))) > 12
-
-    rows = [
-        (1, bytearray(make_wav(sig))),
-        (2, bytearray(make_wav(sig, width=1))),
-        (3, bytearray(make_wav(other))),
-        (4, bytearray(b"RIFFnot-a-wav")),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, audio binary")
-    pairs = audiofp.audio_neardup_pairs(df, max_hamming=6).collect()
-    assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
-    fps = {r["id"]: r["afp"] for r in
-           audiofp.audio_fingerprint(df, on_error="null").collect()}
-    assert fps[4] is None and fps[1] is not None
-
-
-def test_image_metadata_real_bmp(spark):
-    """Uncompressed BMP is decoded for real (pure header math)."""
-    import struct
-
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal
-
-    def make_bmp(w, h, value):
-        c = 3
-        stride = (w * c + 3) & ~3
-        px_size = stride * h
-        header = b"BM" + struct.pack("<IHHI", 54 + px_size, 0, 0, 54)
-        info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, px_size, 2835, 2835, 0, 0)
-        row = bytes([value] * (w * c)) + b"\x00" * (stride - w * c)
-        return header + info + row * h
-
-    rows = [(1, make_bmp(5, 4, 100)), (2, make_bmp(3, 3, 200))]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (5, 4, 3)
-    assert got[1]["mean_value"] == 100.0  # padding excluded from the mean
-    assert (got[2]["width"], got[2]["height"]) == (3, 3)
-    assert got[2]["mean_value"] == 200.0
-
-
-def test_multimodal_on_error_null(spark):
-    from linkgraph.pipeline import multimodal
-
-    good = multimodal.encode_fake_image(2, 2, 1, seed=3)
-    corrupt_bmp = b"BM" + b"\x00" * 60  # claims nothing valid
-    df = spark.createDataFrame(
-        [(1, good), (2, corrupt_bmp), (3, b"\x89PNG....")],
-        "id bigint, image binary",
-    )
-    rows = {r["id"]: r for r in multimodal.image_metadata(df, on_error="null").collect()}
-    assert rows[1]["width"] == 2 and rows[2]["width"] is None and rows[3]["width"] is None
-    import pytest
-
-    with pytest.raises(Exception):
-        multimodal.image_metadata(df).collect()  # default raises
-
-    adf = spark.createDataFrame([(1, b"RIFFnotawav")], "id bigint, audio binary")
-    arows = multimodal.audio_stats(adf, on_error="null").collect()
-    assert arows[0]["sample_rate"] is None
-
-
 def test_simhash_preserves_null_text_rows(spark):
     from linkgraph.pipeline import dedup
 
@@ -671,136 +457,6 @@ def test_line_dedup_boilerplate(spark):
     }
 
 
-def test_image_metadata_real_png(spark):
-    """Real 8-bit PNG decode via stdlib zlib: round-trips our filter-0
-    writer, and the unfilter path reconstructs Sub/Up/Average/Paeth rows
-    (a reference PNG built by filtering known pixels forward)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal
-
-    rng = np.random.default_rng(5)
-    rgb = rng.integers(0, 256, size=(4, 5, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, size=(3, 7), dtype=np.uint8)
-    blob_rgb = multimodal.encode_png(rgb)
-    blob_gray = multimodal.encode_png(gray)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob_rgb)), (2, bytearray(blob_gray))],
-        "id bigint, image binary",
-    )
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (5, 4, 3)
-    assert abs(got[1]["mean_value"] - float(rgb.mean())) < 1e-9
-    assert (got[2]["width"], got[2]["height"], got[2]["channels"]) == (7, 3, 1)
-    assert abs(got[2]["mean_value"] - float(gray.mean())) < 1e-9
-
-    # forward-filter known pixels with each filter type, then decode
-    px = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)  # gray w=6
-    c, stride = 1, 6
-    lines = []
-    prev = np.zeros(stride, dtype=np.int64)
-    for r, ftype in enumerate([1, 2, 3, 4]):
-        cur = px[r].astype(np.int64)
-        filt = np.zeros(stride, dtype=np.int64)
-        for x in range(stride):
-            a = cur[x - c] if x >= c else 0
-            b = prev[x]
-            cc = prev[x - c] if x >= c else 0
-            if ftype == 1:
-                filt[x] = (cur[x] - a) % 256
-            elif ftype == 2:
-                filt[x] = (cur[x] - b) % 256
-            elif ftype == 3:
-                filt[x] = (cur[x] - (a + b) // 2) % 256
-            else:
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                filt[x] = (cur[x] - pred) % 256
-        lines.append(bytes([ftype]) + bytes(filt.astype(np.uint8)))
-        prev = cur
-    scan = b"".join(lines)
-
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", 6, 4, 8, 0, 0, 0, 0)
-    blob = (multimodal.PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b""))
-    meta = multimodal.decode_image_bytes(blob)
-    assert abs(meta["mean_value"] - float(px.mean())) < 1e-9
-
-    # 16-bit gray decodes for real now (big-endian samples, spec §7.1)
-    vals16 = np.array([[0, 65535], [256, 512]], dtype=np.uint16)
-    raw16 = b"".join(b"\x00" + vals16[r].astype(">u2").tobytes() for r in range(2))
-    ihdr16 = struct.pack(">IIBBBBB", 2, 2, 16, 0, 0, 0, 0)
-    blob16 = (multimodal.PNG_MAGIC + chunk(b"IHDR", ihdr16)
-              + chunk(b"IDAT", zlib.compress(raw16)) + chunk(b"IEND", b""))
-    meta16 = multimodal.decode_image_bytes(blob16)
-    assert (meta16["width"], meta16["height"], meta16["channels"]) == (2, 2, 1)
-    assert abs(meta16["mean_value"] - float(vals16.mean())) < 1e-9
-
-
-def test_png_palette_subbyte_and_adam7():
-    """The PNG decoder covers every legal IHDR: 4-bit palette images map
-    through PLTE to RGB, 1-bit gray unpacks MSB-first, and an Adam7
-    stream scatters its seven passes back to the right pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal
-
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    def png(ihdr_fields, raw, plte=None):
-        out = multimodal.PNG_MAGIC + chunk(b"IHDR", struct.pack(">IIBBBBB", *ihdr_fields))
-        if plte is not None:
-            out += chunk(b"PLTE", plte)
-        return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-    # 4-bit palette, 3x2: indices 0..5 packed two per byte, MSB-first
-    pal = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255],
-                    [10, 20, 30], [40, 50, 60], [70, 80, 90]], dtype=np.uint8)
-    idx = np.array([[0, 1, 2], [3, 4, 5]], dtype=np.uint8)
-    rows = []
-    for r in range(2):
-        packed = bytes([idx[r, 0] << 4 | idx[r, 1], idx[r, 2] << 4])
-        rows.append(b"\x00" + packed)
-    meta = multimodal.decode_image_bytes(
-        png((3, 2, 4, 3, 0, 0, 0), b"".join(rows), plte=pal.tobytes()))
-    assert (meta["width"], meta["height"], meta["channels"]) == (3, 2, 3)
-    assert abs(meta["mean_value"] - float(pal[idx].mean())) < 1e-9
-
-    # 1-bit gray, 10x2 (stride crosses a byte boundary)
-    bits = np.array([[1, 0, 1, 0, 1, 0, 1, 0, 1, 0],
-                     [0, 0, 0, 0, 1, 1, 1, 1, 0, 1]], dtype=np.uint8)
-    raw1 = b"".join(
-        b"\x00" + np.packbits(bits[r]).tobytes() for r in range(2))
-    meta1 = multimodal.decode_image_bytes(png((10, 2, 1, 0, 0, 0, 0), raw1))
-    assert (meta1["width"], meta1["height"]) == (10, 2)
-    assert abs(meta1["mean_value"] - float(bits.mean())) < 1e-9
-
-    # Adam7 interlaced 8-bit gray 4x4: forward-scatter known pixels into
-    # the seven passes, then expect the decoder to reassemble them
-    px = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    passes = []
-    for x0, y0, dx, dy in multimodal._ADAM7:
-        sub = px[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        passes.append(b"".join(b"\x00" + sub[r].tobytes() for r in range(sub.shape[0])))
-    meta7 = multimodal.decode_image_bytes(png((4, 4, 8, 0, 0, 0, 1), b"".join(passes)))
-    assert abs(meta7["mean_value"] - float(px.mean())) < 1e-9
-
-
 def test_repetition_stats(spark):
     """Gopher-style duplicate-n-gram fractions: a looping doc scores
     high, a diverse doc scores 0, NULL text yields zeros (cardinality
@@ -830,368 +486,6 @@ def test_repetition_stats(spark):
     r4_ = got[4]
     assert r4_["n_words"] == 1 and r4_["n_2grams"] == 0
     assert r4_["max_2gram_frac"] == 0.0
-
-
-def test_image_metadata_real_jpeg(spark):
-    """Real baseline JPEG decode (T.81 Huffman + IDCT): round-trips the
-    near-lossless all-ones-quant encoder in gray, RGB 4:4:4, 4:2:0
-    (exercises chroma upsample) and with restart markers."""
-    import numpy as np
-
-    from linkgraph.pipeline import jpeg, multimodal
-
-    rng = np.random.default_rng(3)
-    g = rng.integers(0, 256, size=(13, 21), dtype=np.uint8)
-    rgb = rng.integers(0, 256, size=(17, 19, 3), dtype=np.uint8)
-    flat = np.repeat(
-        rng.integers(0, 256, size=(20, 28, 1), dtype=np.uint8), 3, axis=2
-    )  # chroma-flat so 4:2:0 subsampling loses nothing
-    rows = [
-        (1, bytearray(jpeg.encode_jpeg(g))),
-        (2, bytearray(jpeg.encode_jpeg(rgb))),
-        (3, bytearray(jpeg.encode_jpeg(flat, subsampling="420"))),
-        (4, bytearray(jpeg.encode_jpeg(rgb, restart_interval=2))),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (21, 13, 1)
-    assert abs(got[1]["mean_value"] - float(g.mean())) < 0.5
-    assert (got[2]["width"], got[2]["height"], got[2]["channels"]) == (19, 17, 3)
-    assert abs(got[2]["mean_value"] - float(rgb.mean())) < 1.0
-    assert (got[3]["width"], got[3]["height"]) == (28, 20)
-    assert abs(got[3]["mean_value"] - float(flat.mean())) < 1.0
-    assert abs(got[4]["mean_value"] - got[2]["mean_value"]) < 0.5
-
-
-def test_jpeg_progressive_roundtrip():
-    """Progressive (SOF2) decode: spectral-selection and
-    successive-approximation scan scripts reconstruct bit-identically
-    to the baseline decode of the same image (identical quantized
-    coefficients, identical IDCT), across restart intervals and band
-    splits."""
-    import numpy as np
-
-    from linkgraph.pipeline import jpeg
-
-    rng = np.random.default_rng(7)
-    g = rng.integers(0, 256, size=(13, 21), dtype=np.uint8)
-    rgb = rng.integers(0, 256, size=(17, 19, 3), dtype=np.uint8)
-    for img in (g, rgb):
-        base = jpeg.decode_jpeg(jpeg.encode_jpeg(img))
-        for kw in (
-            {},
-            {"successive": True},
-            {"restart_interval": 2},
-            {"successive": True, "restart_interval": 2},
-            {"successive": True, "bands": ((1, 1), (2, 9), (10, 63))},
-        ):
-            got = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(img, **kw))
-            assert np.array_equal(got, base), kw
-        assert np.abs(base.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_progressive_420_smooth_and_corrupt():
-    """4:2:0 progressive (subsampled own-grid AC scans vs MCU-grid DC
-    scan), long EOB runs on a smooth gradient (exact reconstruction),
-    and clean rejection of truncated/invalid scan scripts."""
-    import numpy as np
-    import pytest as _pytest
-
-    from linkgraph.pipeline import jpeg
-
-    rng = np.random.default_rng(11)
-    flat = np.repeat(
-        rng.integers(0, 256, size=(20, 28, 1), dtype=np.uint8), 3, axis=2
-    )
-    for kw in ({}, {"successive": True}):
-        got = jpeg.decode_jpeg(
-            jpeg.encode_jpeg_progressive(flat, subsampling="420", **kw)
-        )
-        assert np.abs(got.astype(int) - flat.astype(int)).max() <= 1
-
-    smooth = (np.add.outer(np.arange(120), np.arange(200)) % 256).astype(np.uint8)
-    for kw in ({}, {"successive": True}, {"successive": True, "restart_interval": 3}):
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(smooth, **kw))
-        assert np.array_equal(got, smooth), kw
-
-    with _pytest.raises(ValueError):
-        jpeg.encode_jpeg_progressive(smooth, bands=((0, 63),))
-    blob = jpeg.encode_jpeg_progressive(smooth, successive=True)
-    for cut in range(40, len(blob), 997):
-        try:
-            jpeg.decode_jpeg(blob[:cut])  # partial decode is legal...
-        except (ValueError, NotImplementedError):
-            pass  # ...and so is a clean raise; anything else fails
-
-
-def test_image_metadata_progressive_jpeg(spark):
-    """image_metadata decodes progressive JPEG for real now: dimensions
-    AND mean_value populated, matching the baseline encoding."""
-    import numpy as np
-
-    from linkgraph.pipeline import jpeg, multimodal
-
-    rng = np.random.default_rng(5)
-    rgb = rng.integers(0, 256, size=(17, 19, 3), dtype=np.uint8)
-    rows = [
-        (1, bytearray(jpeg.encode_jpeg(rgb))),
-        (2, bytearray(jpeg.encode_jpeg_progressive(rgb))),
-        (3, bytearray(jpeg.encode_jpeg_progressive(rgb, successive=True))),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    for i in (1, 2, 3):
-        assert (got[i]["width"], got[i]["height"], got[i]["channels"]) == (19, 17, 3)
-        assert got[i]["mean_value"] == got[1]["mean_value"]
-
-
-def test_image_metadata_jpeg_header_dims(spark):
-    """The SOF header-walk degrade (T.81 §B.2.2: dimensions real,
-    mean_value null) applies ONLY to structurally valid JPEGs whose
-    coding process the decoder does not implement (NotImplementedError:
-    arithmetic-coded, lossless, hierarchical). Corrupt or headers-only
-    streams raise ValueError and follow on_error instead — the degrade
-    must not mask corruption under on_error='raise'."""
-    import struct
-
-    import pytest as _pytest
-
-    from linkgraph.pipeline import multimodal
-
-    def make_jpeg(w, h, comps, sof=0xC0, fill=False):
-        soi = b"\xff\xd8"
-        # 3 bytes per component: id, sampling factors, qtable (T.81 B.2.2)
-        comp_list = b"".join(
-            bytes([c + 1, 0x11, 0x00]) for c in range(comps)
-        )
-        sof_payload = struct.pack(">BHHB", 8, h, w, comps) + comp_list
-        sof_seg = bytes([0xFF, sof]) + struct.pack(
-            ">H", 2 + len(sof_payload)
-        ) + sof_payload
-        fillb = b"\xff" if fill else b""  # 0xFF fill bytes before a marker
-        return soi + app0() + fillb + sof_seg + b"\xff\xd9"
-
-    def app0():
-        return b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-
-    rows = [
-        (1, make_jpeg(640, 480, 3, sof=0xC9)),  # arithmetic SOF9 -> degrade
-        (2, make_jpeg(31, 17, 1, sof=0xCB)),    # arithmetic prog SOF11
-        (3, make_jpeg(8, 8, 3, sof=0xC9, fill=True)),  # fill bytes tolerated
-    ]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (640, 480, 3)
-    assert got[1]["mean_value"] is None
-    assert (got[2]["width"], got[2]["height"], got[2]["channels"]) == (31, 17, 1)
-    assert (got[3]["width"], got[3]["height"]) == (8, 8)
-    assert got[1]["n_bytes"] == len(rows[0][1])
-    # a headers-only BASELINE jpeg (supported process, no scan data) is
-    # corrupt, not unsupported: on_error='raise' surfaces it...
-    truncated = spark.createDataFrame(
-        [(9, make_jpeg(16, 16, 3))], "id bigint, image binary"
-    )
-    with _pytest.raises(Exception, match="no SOS"):
-        multimodal.image_metadata(truncated).collect()
-    # ...and on_error='null' null-pads it rather than returning header
-    # dims that would masquerade as a successful decode
-    (r,) = multimodal.image_metadata(truncated, on_error="null").collect()
-    assert r["width"] is None and r["mean_value"] is None
-
-
-def test_image_metadata_jpeg_truncated_null_pads(spark):
-    from linkgraph.pipeline import multimodal
-
-    # SOS before any SOF -> not parseable without a codec -> on_error null
-    bad = b"\xff\xd8\xff\xda\x00\x04\x01\x00"
-    df = spark.createDataFrame([(1, bad)], "id bigint, image binary")
-    (r,) = multimodal.image_metadata(df, on_error="null").collect()
-    assert r["width"] is None and r["n_bytes"] is None
-
-
-def test_image_metadata_real_gif(spark):
-    """Real GIF decode (stdlib LZW): round-trips our writer both plain
-    and interlaced, maps indices through the color table, and rejects
-    truncated streams cleanly."""
-    import numpy as np
-    import pytest as _pytest
-
-    from linkgraph.pipeline import multimodal
-
-    rng = np.random.default_rng(11)
-    pal = rng.integers(0, 256, size=(8, 3), dtype=np.uint8)
-    idx = rng.integers(0, 8, size=(9, 13), dtype=np.uint8)
-    blob = multimodal.encode_gif(idx, pal)
-    blob_i = multimodal.encode_gif(idx, pal, interlaced=True)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, bytearray(blob_i))], "id bigint, image binary"
-    )
-    got = {r["id"]: r for r in multimodal.image_metadata(df).collect()}
-    want = float(pal[idx].mean())
-    for i in (1, 2):
-        assert (got[i]["width"], got[i]["height"], got[i]["channels"]) == (13, 9, 3)
-        assert abs(got[i]["mean_value"] - want) < 1e-9
-
-    with _pytest.raises(ValueError, match="corrupt GIF"):
-        multimodal.decode_image_bytes(blob[: len(blob) // 2])
-
-    # a big frame forces LZW code-width growth past 9 bits in the writer
-    big = rng.integers(0, 8, size=(40, 40), dtype=np.uint8)
-    meta = multimodal.decode_image_bytes(multimodal.encode_gif(big, pal))
-    assert abs(meta["mean_value"] - float(pal[big].mean())) < 1e-9
-
-
-def test_video_frame_sampling_real_avi(spark):
-    """Real AVI frame sampling: RIFF container walk, every-Nth-frame
-    selection, MJPEG frames via the baseline JPEG decoder and raw-DIB
-    frames via BMP row math; corrupt blobs null-pad under on_error."""
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal, video
-
-    rng = np.random.default_rng(21)
-    frames = [rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-              for _ in range(7)]
-    rows = [
-        (1, bytearray(video.encode_avi(frames, codec="mjpeg"))),
-        (2, bytearray(video.encode_avi(frames, codec="dib"))),
-        (3, bytearray(b"RIFF\x00\x00\x00\x00AVI corrupt")),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, video binary")
-    out = multimodal.frame_sample(df, every_n=3, on_error="null").collect()
-    by_id: dict = {}
-    for r in out:
-        by_id.setdefault(r["id"], []).append(r)
-    # 7 frames, every 3rd -> indices 0, 3, 6
-    for vid in (1, 2):
-        got = sorted(by_id[vid], key=lambda r: r["frame_index"])
-        assert [r["frame_index"] for r in got] == [0, 3, 6]
-        for r in got:
-            assert (r["width"], r["height"], r["channels"]) == (24, 16, 3)
-            want = float(frames[r["frame_index"]].mean())
-            assert abs(r["mean_value"] - want) < 1.0
-    # DIB is bit-exact; MJPEG is near-lossless
-    for r in by_id[2]:
-        assert abs(r["mean_value"] - float(frames[r["frame_index"]].mean())) < 1e-9
-    assert len(by_id[3]) == 1 and by_id[3][0]["frame_index"] is None
-
-
-def test_image_dhash_invariance_and_neardup_pairs(spark):
-    """dHash: the same photo through PNG vs near-lossless JPEG hashes
-    within a few bits; unrelated images are far; the pair generator
-    (shared pigeonhole machinery) finds exactly the near-dup pair and
-    null-pads undecodable blobs out of the banding."""
-    import numpy as np
-
-    from linkgraph.pipeline import imagededup, jpeg, multimodal
-
-    def hamming(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    # smooth structured image (gradient signs stable under ±2 JPEG noise)
-    yy, xx = np.meshgrid(np.arange(32), np.arange(48), indexing="ij")
-    base = (
-        96 + 80 * np.sin(xx / 7.0) * np.cos(yy / 5.0) + xx / 2.0
-    ).clip(0, 255).astype(np.uint8)
-    photo = np.stack([base, base // 2 + 40, 255 - base], axis=-1)
-    h_png = imagededup.dhash_bytes(multimodal.encode_png(photo))
-    h_jpg = imagededup.dhash_bytes(jpeg.encode_jpeg(photo))
-    assert hamming(h_png, h_jpg) <= 4
-    # resize invariance: dhash samples the same relative grid
-    half = photo[::2, ::2]
-    assert hamming(h_png, imagededup.dhash_bytes(multimodal.encode_png(half))) <= 8
-
-    rng = np.random.default_rng(41)
-    other = rng.integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
-    h_other = imagededup.dhash_bytes(multimodal.encode_png(other))
-    assert hamming(h_png, h_other) > 12
-
-    rows = [
-        (1, bytearray(multimodal.encode_png(photo))),
-        (2, bytearray(jpeg.encode_jpeg(photo))),
-        (3, bytearray(multimodal.encode_png(other))),
-        (4, bytearray(b"\x89PNG\r\n\x1a\nbroken")),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    pairs = imagededup.image_neardup_pairs(df, max_hamming=6).collect()
-    assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
-    # undecodable blob got a NULL hash, not a crash and not a bucket
-    hashes = {r["id"]: r["dhash"] for r in
-              imagededup.image_dhash(df, on_error="null").collect()}
-    assert hashes[4] is None and hashes[1] is not None
-
-
-def test_resize_images_real(spark):
-    """Real nearest-neighbor resize: decode any supported format,
-    resample, re-encode as PNG; identity-size round-trips bit-equal
-    pixels, downscale keeps exact source pixels (nearest semantics)."""
-    import numpy as np
-
-    from linkgraph.pipeline import jpeg, multimodal
-
-    rng = np.random.default_rng(31)
-    rgb = rng.integers(0, 256, size=(8, 12, 3), dtype=np.uint8)
-    rows = [
-        (1, bytearray(multimodal.encode_png(rgb))),
-        (2, bytearray(jpeg.encode_jpeg(rgb))),
-        (3, bytearray(b"\x89PNG\r\n\x1a\njunk")),
-    ]
-    df = spark.createDataFrame(rows, "id bigint, image binary")
-    out = {r["id"]: r for r in
-           multimodal.resize_images(df, 6, 4, on_error="null").collect()}
-    assert (out[1]["width"], out[1]["height"]) == (6, 4)
-    px = multimodal.decode_image_pixels(bytes(out[1]["image"]))
-    assert px.shape == (4, 6, 3)
-    # nearest-neighbor: every output pixel is some exact source pixel
-    ys = np.minimum((np.arange(4) * 8) // 4, 7)
-    xs = np.minimum((np.arange(6) * 12) // 6, 11)
-    assert np.array_equal(px, rgb[ys][:, xs])
-    assert out[3]["image"] is None and out[3]["width"] is None
-
-    # identity size on a PNG source is a lossless pixel round-trip
-    same = {r["id"]: r for r in
-            multimodal.resize_images(df.filter("id = 1"), 12, 8).collect()}
-    assert np.array_equal(
-        multimodal.decode_image_pixels(bytes(same[1]["image"])), rgb)
-
-    # bilinear: identity size is also lossless (weights collapse to the
-    # source grid); 2x upscale of a constant image stays constant, and a
-    # step edge gets an intermediate value (actual interpolation)
-    assert np.array_equal(multimodal.resize_pixels(rgb, 12, 8, "bilinear"), rgb)
-    const = np.full((4, 4, 3), 77, dtype=np.uint8)
-    assert np.array_equal(
-        multimodal.resize_pixels(const, 8, 8, "bilinear"), np.full((8, 8, 3), 77))
-    step = np.zeros((1, 2, 1), dtype=np.uint8)
-    step[0, 1, 0] = 200
-    mid = multimodal.resize_pixels(step, 4, 1, "bilinear")[0, :, 0]
-    assert mid[0] == 0 and mid[3] == 200 and 0 < mid[1] < 200
-
-
-def test_extract_frames_to_image_blobs(spark):
-    """Video→image leg: sampled AVI frames come out as standalone PNG
-    blobs that feed straight back into the image operators; optional
-    in-task bilinear resize."""
-    import numpy as np
-
-    from linkgraph.pipeline import multimodal, video
-
-    rng = np.random.default_rng(51)
-    frames = [rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-              for _ in range(5)]
-    df = spark.createDataFrame(
-        [(1, bytearray(video.encode_avi(frames, codec="dib")))],
-        "id bigint, video binary",
-    )
-    out = sorted(video.extract_frames(df, every_n=2).collect(),
-                 key=lambda r: r["frame_index"])
-    assert [r["frame_index"] for r in out] == [0, 2, 4]
-    for r in out:
-        px = multimodal.decode_image_pixels(bytes(r["image"]))
-        assert np.array_equal(px, frames[r["frame_index"]])  # DIB is lossless
-
-    small = video.extract_frames(df, every_n=2, resize_to=(12, 8)).collect()
-    px = multimodal.decode_image_pixels(bytes(small[0]["image"]))
-    assert px.shape == (8, 12, 3)
 
 
 def test_minhash_hot_bucket_anchoring(spark):

@@ -89,6 +89,23 @@ def test_ppr_does_not_resume_another_seed_set(tiny_edges, tmp_path):
     assert len(os.listdir(ckpt)) == 2
 
 
+def test_k_core_does_not_resume_another_k(spark, tmp_path):
+    """run_pregel fingerprints only its edges argument, and an explicit
+    job_id is not keyed on k: k_core folds k into that argument, so a
+    k=2 run after a k=3 run under one job_id starts cold instead of
+    peeling the 3-core further."""
+    from linkgraph.algos.kcore import k_core
+
+    ckpt = str(tmp_path / "checkpoints")
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    e = spark.createDataFrame(k4 + [(3, 4), (4, 5), (3, 5)], "src bigint, dst bigint")
+    k_core(e, k=3, job_id="x", checkpoint_dir=ckpt, checkpoint_every=1)
+    with pytest.warns(UserWarning, match="different edge set"):
+        res = k_core(e, k=2, job_id="x", checkpoint_dir=ckpt, checkpoint_every=1)
+    assert {r["vid"] for r in res.state.collect()} == set(range(6))
+    assert res.metrics[0]["superstep"] == 1
+
+
 def test_checkpoint_metrics_have_partition_rows(tiny_edges, tmp_path):
     import json
 
