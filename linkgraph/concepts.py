@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.pregel import saturate
+
 
 def concept_closure(isa: DataFrame, max_depth: int = 20) -> DataFrame:
     """Reflexive-transitive closure of the isA taxonomy.
@@ -35,34 +37,23 @@ def concept_closure(isa: DataFrame, max_depth: int = 20) -> DataFrame:
         .distinct()
         .select("concept", F.col("concept").alias("ancestor"))
     )
-    full = refl.unionByName(
-        isa.select(F.col("child").alias("concept"), F.col("parent").alias("ancestor"))
-    ).distinct().localCheckpoint(eager=True)
-    delta = full
-    converged = False
-    for _ in range(max_depth):
-        up = isa.select(
-            F.col("child").alias("ancestor"), F.col("parent").alias("__p__")
+    up = isa.select(F.col("child").alias("ancestor"), "parent")
+
+    def derive(_full: DataFrame, delta: DataFrame, _i: int) -> DataFrame:
+        return delta.join(up, "ancestor").select(
+            "concept", F.col("parent").alias("ancestor")
         )
-        new = (
-            delta.join(up, "ancestor")
-            .select("concept", F.col("__p__").alias("ancestor"))
-            .distinct()
-            .join(full, ["concept", "ancestor"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if new.isEmpty():
-            converged = True
-            break
-        full = full.unionByName(new).localCheckpoint(eager=True)
-        delta = new
-    if not converged:
-        # fail loudly: a silently-truncated closure would make
-        # concept_edge_expand miss matches with no signal
-        raise RuntimeError(
-            f"taxonomy deeper than max_depth={max_depth}; raise the limit"
-        )
-    return full
+
+    # raises past max_depth: a silently-truncated closure would make
+    # concept_edge_expand miss matches with no signal
+    return saturate(
+        refl.unionByName(
+            isa.select(F.col("child").alias("concept"), F.col("parent").alias("ancestor"))
+        ),
+        derive,
+        max_iter=max_depth,
+        job_id="concept_closure",
+    )
 
 
 def concept_edge_expand(

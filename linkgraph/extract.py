@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 from urllib.parse import urljoin
 
 import pandas as pd
@@ -106,9 +106,6 @@ def extract_links(html_bytes: bytes, base_url: str) -> list[tuple[str, str]]:
 # Spark operators (Arrow-batched)
 # ---------------------------------------------------------------------------
 
-# the input_hint page-table shape (FIXTURES.md §1) the crawl jobs read
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
 EXTRACTED_SCHEMA = (
     "url string, text string, "
     "links array<struct<href: string, anchor: string>>"
@@ -157,8 +154,3 @@ def extracted_edges(pages: DataFrame) -> DataFrame:
         F.col("link.href").alias("dst_url"),
         F.col("link.anchor").alias("anchor"),
     )
-
-
-def extract_rows(rows: Sequence[tuple[str, bytes]]) -> list[tuple[str, str]]:
-    """Driver-side helper for tests: [(url, html)] -> [(url, text)]."""
-    return [(u, extract_text(h)) for u, h in rows]

@@ -176,13 +176,6 @@ def build_edges(
     return e.repartition(num_buckets, "src")
 
 
-def out_degrees(edges: DataFrame) -> DataFrame:
-    """(vid, out_degree) for vertices with ≥1 out-edge."""
-    return edges.groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
-
-
 def degrees(edges: DataFrame) -> DataFrame:
     """(vid, degree) — undirected degree over the simple graph."""
     und = edges.select("src", "dst").unionAll(

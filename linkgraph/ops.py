@@ -5,12 +5,10 @@ Parity map (SURVEY.md §2.1; contract:
 /root/reference/reasoner/lube-physical/src/main/scala/com/antgroup/openspg/reasoner/lube/physical/rdg/RDG.scala;
 execution: /root/reference/reasoner/runner/local-runner/.../rdg/LocalRDG.java):
 
-  start/scan_vertices   Start (RDG seeds, LocalRDG.java:200-235)
+  start_from_ids        Start (RDG seeds, LocalRDG.java:200-235)
   expand / expand_into  PatternScan/ExpandInto (RDG.scala:41,50; LocalRDG.java:238-333,499-610)
   var_len_expand        BoundedVarLenExpand (PhysicalPlanner unrolling)
-  filter_rows           Filter (RDG.scala:65)
-  add_fields/drop_fields  Project → AddInto + Drop (LocalRDG.java:924-963)
-  group_agg / two_phase_agg  Aggregate + AggregatePushDown skew form
+  two_phase_agg         Aggregate + AggregatePushDown skew form
                         (RDG.scala:86; optimizer/rules/AggregatePushDown.scala)
   top_k / order_limit   OrderAndLimit incl. per-group top-k (RDG.scala:76)
   pattern_join          Join inner/left/full (RDG.scala:144, LocalRDG.java:1206-1311)
@@ -19,8 +17,6 @@ execution: /root/reference/reasoner/runner/local-runner/.../rdg/LocalRDG.java):
   pattern_union         PatternUnion (unimplemented in LocalRDG:1338 — we
                         choose unionByName + dropDuplicates)
   fold / unfold         Fold/Unfold (RDG.scala:163,171; LocalRDG.java:1314-1360)
-  distinct_rows         DistinctGet rewrite (optimizer/rules/DistinctGet.scala)
-  cache                 Cache (RDG.scala:134)
 
 Everything here lowers to Catalyst-native plans — predicate pushdown,
 column pruning, broadcast selection and AQE skew handling come for free
@@ -35,18 +31,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
-# seeds / scans
+# seeds
 # --------------------------------------------------------------------------
 
 
 def start_from_ids(spark, ids: Sequence, id_col: str = "vid") -> DataFrame:
     """Start from an explicit id list (reference startIdList seeds)."""
     return spark.createDataFrame([(i,) for i in ids], f"{id_col} bigint")
-
-
-def scan_vertices(vertices: DataFrame, predicate: Column | str | None = None) -> DataFrame:
-    """Start: all vertices, optionally filtered (label/type pushdown)."""
-    return vertices.where(predicate) if predicate is not None else vertices
 
 
 # --------------------------------------------------------------------------
@@ -197,45 +188,8 @@ def var_len_expand_paths(
 
 
 # --------------------------------------------------------------------------
-# row ops
-# --------------------------------------------------------------------------
-
-
-def filter_rows(df: DataFrame, predicate: Column | str) -> DataFrame:
-    return df.where(predicate)
-
-
-def add_fields(df: DataFrame, **cols: Column) -> DataFrame:
-    return df.withColumns(dict(cols))
-
-
-def drop_fields(df: DataFrame, *names: str) -> DataFrame:
-    return df.drop(*names)
-
-
-def select_cols(df: DataFrame, mapping: dict[str, Column | str]) -> DataFrame:
-    """Select: final projection to a named-column table (RDG.scala:58)."""
-    return df.select(
-        *[
-            (F.col(c) if isinstance(c, str) else c).alias(name)
-            for name, c in mapping.items()
-        ]
-    )
-
-
-def distinct_rows(df: DataFrame, *cols: str) -> DataFrame:
-    return df.select(*cols).distinct() if cols else df.distinct()
-
-
-# --------------------------------------------------------------------------
 # aggregation
 # --------------------------------------------------------------------------
-
-
-def group_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
-    """Aggregate: partial/final two-phase is native in Spark (the
-    reference's BaseUdaf.update/merge/evaluate lifecycle)."""
-    return df.groupBy(*keys).agg(*aggs)
 
 
 def two_phase_agg(
@@ -294,10 +248,6 @@ def top_k(
     )
 
 
-def limit_rows(df: DataFrame, n: int) -> DataFrame:
-    return df.limit(n)
-
-
 # --------------------------------------------------------------------------
 # joins / set ops
 # --------------------------------------------------------------------------
@@ -342,7 +292,7 @@ def pattern_union(*dfs: DataFrame, distinct: bool = True) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# fold / unfold / cache
+# fold / unfold
 # --------------------------------------------------------------------------
 
 
@@ -358,10 +308,6 @@ def unfold(df: DataFrame, col: str) -> DataFrame:
     exploded = df.withColumn("__e__", F.explode(col)).drop(col)
     inner = exploded.select("*", "__e__.*").drop("__e__")
     return inner.dropDuplicates()
-
-
-def cache(df: DataFrame) -> DataFrame:
-    return df.persist()
 
 
 def linked_expand(

@@ -28,14 +28,6 @@ def _r4(c: Column) -> Column:
     return F.floor(c * 10000) / 10000
 
 
-def bpe_ish_token_count(text_col: str | Column) -> Column:
-    """Sub-word-ish token count: split on whitespace AND punctuation
-    boundaries (a cheap regex proxy for BPE pre-tokenization)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    pieces = F.split(F.trim(c), r"\s+|(?=[^\w\s])|(?<=[^\w\s])")
-    return F.size(F.filter(pieces, lambda p: p != ""))
-
-
 def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, n_chars, n_tokens, avg_token_len, punct_ratio, digit_ratio,
     stopword_ratio, quality_score)."""

@@ -177,7 +177,8 @@ class ObservedDelta:
     with an aggregate over columns the frame already carries (cc/lpa: the
     sum of a changed flag; k_core: the sum of a removed-edge flag; the
     random-walk kernel: the max of |score - old score|; hits: the max of
-    |hub - old hub| and |auth - old auth|).
+    |hub - old hub| and |auth - old auth|; ``saturate``: the sum of its
+    new-fact flag).
     ``run_pregel`` materializes that frame once, then calls this object
     as its ``delta_fn``, which pops the collected value (see the call
     protocol in ``run_pregel``)."""
@@ -226,8 +227,9 @@ def run_pregel(
     it entirely (the benchmark mode).
 
     CALL PROTOCOL (load-bearing for observed-metric deltas — cc, lpa,
-    k_core, hits and the random-walk kernel attach an ``ObservedDelta``
-    observation to each superstep's frame, which the delta_fn pops): per iteration this
+    k_core, hits, the random-walk kernel and ``saturate`` attach an
+    ``ObservedDelta`` observation to each superstep's frame, which the
+    delta_fn pops): per iteration this
     loop calls ``superstep_fn`` exactly once, eagerly materializes its
     result via ``localCheckpoint(eager=True)`` (which fires
     CollectMetrics), and THEN calls ``delta_fn`` exactly once. Superstep results are never
@@ -321,3 +323,42 @@ def run_pregel(
     if store and metrics and (i % checkpoint_every != 0 or not os.path.isdir(store._step_dir(i))):
         store.save(i, state, metrics)
     return PregelResult(state=state, iterations=i, converged=converged, metrics=metrics)
+
+
+def saturate(
+    base: DataFrame, derive: SuperstepFn, *, max_iter: int, job_id: str
+) -> DataFrame:
+    """Semi-naive fixpoint on ``run_pregel``: ``base`` plus every fact
+    ``derive`` adds, until a round adds none.
+
+    The state is the distinct facts plus a ``__new__`` flag on the rows
+    the last round derived (round 0 flags every base fact). Round ``i``
+    calls ``derive(full, delta, i)`` with the facts and the flagged
+    rows, keeps the distinct candidates not already in ``full`` and adds
+    them flagged; their count is the superstep's observed delta. Raises
+    ``RuntimeError`` if ``max_iter`` rounds end with a non-empty delta.
+    """
+    cols = base.columns
+    new = F.col("__new__")
+    count_new = ObservedDelta()
+
+    def step(_base: DataFrame, state: DataFrame, i: int) -> DataFrame:
+        full = state.select(*cols)
+        fresh = derive(full, state.where(new).select(*cols), i)
+        fresh = fresh.distinct().join(full, cols, "left_anti")
+        grown = full.withColumn("__new__", F.lit(False)).unionByName(
+            fresh.withColumn("__new__", F.lit(True))
+        )
+        return count_new.observe(grown, F.sum(new.cast("long")))
+
+    res = run_pregel(
+        base,
+        base.distinct().withColumn("__new__", F.lit(True)),
+        step,
+        count_new,
+        max_iter=max_iter,
+        job_id=job_id,
+    )
+    if not res.converged:
+        raise RuntimeError(f"{job_id} reached no fixpoint in {max_iter} rounds")
+    return res.state.drop("__new__")

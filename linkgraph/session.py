@@ -95,11 +95,3 @@ def get_spark(
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-provided parquet table (column-pruned by Catalyst)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

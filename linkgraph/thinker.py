@@ -25,9 +25,12 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from linkgraph.pregel import saturate
 
 
 @dataclass(frozen=True)
@@ -112,34 +115,29 @@ def infer(
     """Semi-naive fixpoint: round k derives only from joins where at
     least one body atom binds to round k-1's delta (the others bind to
     the accumulated set), so per-round shuffle volume tracks the new
-    facts. Converges when the delta is empty (or at ``max_iter``).
+    facts. Converges when the delta is empty; raises ``RuntimeError``
+    if it is not empty after ``max_iter`` rounds.
 
     ``triples``: DataFrame (s, p, o). Returns base ∪ derived, distinct.
     """
-    full = triples.select("s", "p", "o").distinct().localCheckpoint(eager=True)
-    delta = full
-    for _ in range(max_iter):
-        new_parts = []
-        for rule in rules:
-            n = len(rule.body)
-            for di in range(n):
-                frames = [
-                    _bind_atom(delta if i == di else full, atom, i)
-                    for i, atom in enumerate(rule.body)
-                ]
-                new_parts.append(_eval_rule(frames, rule))
-        derived = new_parts[0]
-        for p in new_parts[1:]:
-            derived = derived.unionByName(p)
-        delta = (
-            derived.distinct()
-            .join(full, ["s", "p", "o"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if delta.isEmpty():
-            break
-        full = full.unionByName(delta).localCheckpoint(eager=True)
-    return full
+
+    def derive(full: DataFrame, delta: DataFrame, _i: int) -> DataFrame:
+        parts = [
+            _eval_rule(
+                [
+                    _bind_atom(delta if k == di else full, atom, k)
+                    for k, atom in enumerate(rule.body)
+                ],
+                rule,
+            )
+            for rule in rules
+            for di in range(len(rule.body))
+        ]
+        return reduce(DataFrame.unionByName, parts)
+
+    return saturate(
+        triples.select("s", "p", "o"), derive, max_iter=max_iter, job_id="thinker.infer"
+    )
 
 
 def find(

@@ -63,11 +63,13 @@ delta restriction does not apply here).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import gql, kgdsl
+from linkgraph.pregel import saturate
 
 
 # ---------------------------------------------------------------------------
@@ -772,44 +774,30 @@ def infer_thinker(
     condition). Round 1 derives every rule; later rounds re-derive only
     rules whose static read-set (concept refs, hits(), body-pattern
     predicates) intersects what some rule PRODUCES — a rule reading only
-    base properties/tags runs exactly once. This is rule-level
+    base properties/tags runs exactly once (with no such rule, round 2
+    derives nothing and ends the fixpoint). This is rule-level
     incrementality (the conditions are not pure Horn joins, so fact-
     level semi-naive as in thinker.infer does not apply); per round the
-    new facts are isolated with one distinct + anti-join. Priority rules
-    derive nothing here."""
+    new facts are isolated with one distinct + anti-join. Raises
+    ``RuntimeError`` if round ``max_iter`` still derives new facts.
+    Priority rules derive nothing here."""
     derive = [r for r in rules if not isinstance(r, PriorityRule)]
     produced_all: set = set()
     for r in derive:
         produced_all |= _rule_produces(r)
     affected = [r for r in derive if _rule_reads(r) & produced_all]
-    full = triples.select("s", "p", "o").distinct().localCheckpoint(eager=True)
-    active = derive
-    for _ in range(max_iter):
-        parts = []
-        for r in active:
-            parts.append(
-                _eval_concept_rule(r, full, isa)
-                if isinstance(r, ConceptRule)
-                else _eval_relation_rule(r, full, isa)
-            )
-        if not parts:
-            return full
-        derived = parts[0]
-        for p in parts[1:]:
-            derived = derived.unionByName(p)
-        delta = (
-            derived.distinct()
-            .join(full, ["s", "p", "o"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if delta.isEmpty():
-            return full
-        full = full.unionByName(delta).localCheckpoint(eager=True)
-        active = affected
-        if not active:
-            return full
-    raise RuntimeError(
-        f"thinker rules did not converge in {max_iter} rounds"
+
+    def derive_round(full: DataFrame, _delta: DataFrame, i: int) -> DataFrame:
+        parts = [
+            _eval_concept_rule(r, full, isa)
+            if isinstance(r, ConceptRule)
+            else _eval_relation_rule(r, full, isa)
+            for r in (affected if i else derive)
+        ]
+        return reduce(DataFrame.unionByName, parts, full.limit(0))
+
+    return saturate(
+        triples.select("s", "p", "o"), derive_round, max_iter=max_iter, job_id="infer_thinker"
     )
 
 

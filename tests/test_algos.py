@@ -297,8 +297,9 @@ def test_weighted_pagerank_edge_cases(spark):
 
 def test_random_walks_release_their_caches(spark, tiny_edges):
     """Every frame pagerank, ppr, weighted_pagerank, hits, k_core,
-    two-phase cc and minhash_lsh_pairs cache is released on return and
-    on error. Superstep states are counted apart: each is a
+    two-phase cc, minhash_lsh_pairs and the reasoner's fixpoints
+    (concept_closure, thinker.infer, infer_thinker) cache is released
+    on return and on error. Superstep states are counted apart: each is a
     localCheckpoint, whose RDD Spark persists and marks checkpointed.
     run_pregel releases every superseded state, and the kernels release
     their own intermediate checkpoints, so a call keeps at most one (the
@@ -310,7 +311,10 @@ def test_random_walks_release_their_caches(spark, tiny_edges):
     from linkgraph.algos.hits import hits
     from linkgraph.algos.kcore import k_core
     from linkgraph.algos.pagerank import weighted_pagerank
+    from linkgraph.concepts import concept_closure
     from linkgraph.pipeline.dedup import minhash_lsh_pairs
+    from linkgraph.thinker import infer, parse_rule
+    from linkgraph.thinker_dsl import infer_thinker, parse_thinker
 
     def persisted():
         rdds = [r.rdd() for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
@@ -324,6 +328,31 @@ def test_random_walks_release_their_caches(spark, tiny_edges):
         + [(10 + i, f"unrelated document number {i} about topic {i * i}") for i in range(4)],
         "doc_id bigint, text string",
     )
+    isa = spark.createDataFrame(
+        [(f"c{i}", f"c{i + 1}") for i in range(4)], "child string, parent string"
+    )
+    links = spark.createDataFrame(
+        [("a", "link", "b"), ("b", "link", "c"), ("c", "link", "a")],
+        "s string, p string, o string",
+    )
+    reach = [
+        parse_rule("(?x, reach, ?y) <- (?x, link, ?y)"),
+        parse_rule("(?x, reach, ?z) <- (?x, link, ?y), (?y, reach, ?z)"),
+    ]
+    tagged = spark.createDataFrame(
+        [("e1", "belongTo", "T/a"), ("e2", "belongTo", "T/b")],
+        "s string, p string, o string",
+    )
+    chain = parse_thinker(
+        """
+Define (T/`c`) {
+  R1: T/`a`
+}
+Define (T/`d`) {
+  R1: T/`c`
+}
+"""
+    )
     for call in (
         lambda: pagerank(tiny_edges, max_iter=6),
         lambda: personalized_pagerank(tiny_edges, [0, 5], max_iter=6),
@@ -334,6 +363,9 @@ def test_random_walks_release_their_caches(spark, tiny_edges):
         lambda: hits(tiny_edges, max_iter=3, broadcast_state=False),
         lambda: k_core(tiny_edges, k=2),
         lambda: connected_components(tiny_edges, algorithm="two-phase"),
+        lambda: concept_closure(isa),
+        lambda: infer(links, reach),
+        lambda: infer_thinker(tagged, chain),
     ):
         cached, checkpointed = persisted()
         call()

@@ -121,3 +121,62 @@ def test_observed_delta_matches_linf_delta(spark, tiny_edges, traced_supersteps,
     # ... with the scores of exactly that many fixed iterations
     fixed = _run(algo, tiny_edges, None, res.iterations)
     assert sorted(res.state.collect()) == sorted(fixed.state.collect())
+
+
+def test_reasoner_fixpoints_observe_new_fact_counts(spark, traced_supersteps, monkeypatch):
+    """concept_closure, thinker.infer and infer_thinker run their rounds
+    as run_pregel supersteps, and each superstep's observed delta is the
+    number of facts it added to the state."""
+    from __spark_entry__ import _THINKER_SCRIPT
+    from linkgraph.concepts import concept_closure
+    from linkgraph.thinker import infer, parse_rule
+    from linkgraph.thinker_dsl import run_thinker
+
+    results = []
+    traced = pregel.run_pregel
+
+    def keep(*args, **kw):
+        results.append(traced(*args, **kw))
+        return results[-1]
+
+    monkeypatch.setattr(pregel, "run_pregel", keep)
+
+    def deltas(call):
+        traced_supersteps.clear()
+        results.clear()
+        closure = call()
+        [res] = results
+        assert res.converged and len(traced_supersteps) == res.iterations
+        sizes = [s.count() for _, s in traced_supersteps] + [closure.count()]
+        observed = [m["delta"] for m in res.metrics]
+        assert observed == [b - a for a, b in zip(sizes, sizes[1:])]
+        return observed
+
+    isa = spark.createDataFrame(
+        [(f"c{i}", f"c{i+1}") for i in range(6)], "child string, parent string"
+    )
+    assert deltas(lambda: concept_closure(isa)) == [5, 4, 3, 2, 1, 0]
+
+    nodes = "abcdef"
+    links = spark.createDataFrame(
+        [(x, "link", y) for x, y in zip(nodes, nodes[1:])],
+        "s string, p string, o string",
+    )
+    reach = [
+        parse_rule("(?x, reach, ?y) <- (?x, link, ?y)"),
+        parse_rule("(?x, reach, ?z) <- (?x, link, ?y), (?y, reach, ?z)"),
+    ]
+    assert deltas(lambda: infer(links, reach)) == [5, 4, 3, 2, 1, 0]
+
+    # t2's script: Risk/high and Risk/watch in round 1, Flag/review
+    # (which reads Risk/high) in round 2, nothing in round 3
+    customers = [(1, "BUILDING", 6000), (2, "BUILDING", 9500), (3, "MACHINERY", 9500), (4, "BUILDING", 100)]
+    facts = spark.createDataFrame(
+        [
+            row
+            for c, seg, bal in customers
+            for row in ((str(c), "type", "Customer"), (str(c), "belongTo", f"Seg/{seg}"), (str(c), "acctbal", f"{bal:.1f}"))
+        ],
+        "s string, p string, o string",
+    )
+    assert deltas(lambda: run_thinker(_THINKER_SCRIPT, facts)) == [4, 2, 0]

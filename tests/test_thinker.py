@@ -68,3 +68,24 @@ def test_repeated_variable_in_atom(spark):
     assert {tuple(r) for r in find(closure, p="selfloop").collect()} == {
         ("a", "selfloop", "yes")
     }
+
+
+def test_max_iter_raises_instead_of_truncating(spark):
+    import pytest
+
+    nodes = "abcdef"
+    triples = spark.createDataFrame(
+        [(x, "link", y) for x, y in zip(nodes, nodes[1:])],
+        "s string, p string, o string",
+    )
+    rules = [
+        parse_rule("(?x, reach, ?y) <- (?x, link, ?y)"),
+        parse_rule("(?x, reach, ?z) <- (?x, link, ?y), (?y, reach, ?z)"),
+    ]
+    # the 5-link chain adds reach facts in 5 rounds; the 6th finds none
+    with pytest.raises(RuntimeError, match="thinker.infer"):
+        infer(triples, rules, max_iter=5)
+    closure = infer(triples, rules, max_iter=6)
+    assert {(r["s"], r["o"]) for r in find(closure, p="reach").collect()} == {
+        (x, y) for i, x in enumerate(nodes) for y in nodes[i + 1:]
+    }

@@ -192,6 +192,28 @@ Define (随访/`每周`) {
     assert ("p1", "随访/每周") in got
 
 
+
+def test_rule_chain_longer_than_max_iter_raises(med_facts):
+    # 很高危 in round 1, 每周 in round 2, 复查 in round 3, none in round 4
+    rules = parse_thinker(
+        """
+Define (危险水平分层/`很高危`) {
+  R1: 高血压分层/`临床并发症`
+}
+Define (随访/`每周`) {
+  R1: 危险水平分层/`很高危`
+}
+Define (随访/`复查`) {
+  R1: 随访/`每周`
+}
+"""
+    )
+    with pytest.raises(RuntimeError, match="infer_thinker"):
+        infer_thinker(med_facts, rules, max_iter=3)
+    closure = infer_thinker(med_facts, rules, max_iter=4)
+    got = {(r["s"], r["o"]) for r in closure.where("p='belongTo'").collect()}
+    assert ("p1", "随访/复查") in got
+
 def test_relation_rule_concept_object(spark):
     facts = spark.createDataFrame(
         [
