@@ -36,10 +36,7 @@ def main() -> None:
     p.add_argument("--damping", type=float, default=0.85)
     p.add_argument("--out", default=None, help="optional parquet output dir")
     p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--skew-salt", type=int, default=1)
     p.add_argument("--num-partitions", type=int, default=None, help="edge cache partitions (fix across scaling levels)")
-    p.add_argument("--broadcast-state", choices=["auto", "true", "false"], default="auto",
-                   help="force the broadcast or exchange physical plan (auto: by vertex count)")
     args = p.parse_args()
 
     # Respect whatever spark-submit configured (master, cores, partitions)
@@ -58,9 +55,7 @@ def main() -> None:
         damping=args.damping,
         tol=args.tol,
         max_iter=args.iters,
-        skew_salt=args.skew_salt,
         num_partitions=args.num_partitions,
-        broadcast_state=None if args.broadcast_state == "auto" else args.broadcast_state == "true",
         checkpoint_dir=args.checkpoint_dir,
         job_id="pagerank_job",
     )

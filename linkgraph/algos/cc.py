@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -40,15 +39,11 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 50,
     algorithm: str = "hash-min",
-    broadcast_state: bool | None = None,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     job_id: str = "cc",
     checkpoint_every: int = 5,
-    resume: bool = True,
     init_labels: DataFrame | None = None,
     prior_edges: DataFrame | None = None,
-    assume_additive: bool = False,
 ) -> pregel.PregelResult:
     """Returns state (vid, component) with component = min member vid.
 
@@ -69,24 +64,20 @@ def connected_components(
     vid) and no label-side post-hoc check can reject it.  The guard is
     therefore a PRECONDITION check, validated BEFORE any superstep runs
     (so no checkpoint written under ``job_id`` can ever hold poisoned
-    labels):
-
-      * ``prior_edges`` — the edge frame the ``init_labels`` run was
-        computed over.  One undirected-canonical anti-join (O(|E_old|),
-        short-circuited by limit(1)) proves old ⊆ new; on violation the
-        warm start is discarded with a warning and the run proceeds
-        COLD under the same ``job_id``.
-      * ``assume_additive=True`` — the caller certifies additivity
-        (e.g. an append-only crawl frontier) and skips the join.
-
-    Passing ``init_labels`` with neither raises ``ValueError`` — there
-    is no sound way to validate the seed after the fact.
+    labels): ``prior_edges`` is the edge frame the ``init_labels`` run
+    was computed over.  One undirected-canonical anti-join (O(|E_old|),
+    short-circuited by limit(1)) proves old ⊆ new; on violation the
+    warm start is discarded with a warning and the run proceeds COLD
+    under the same ``job_id``.  Passing ``init_labels`` without
+    ``prior_edges`` raises ``ValueError`` — there is no sound way to
+    validate the seed after the fact.
 
     Same physical strategy as pagerank (see docs/PLANS.md): the
     undirected edge frame is cached hash-partitioned by ``dst``; with a
     broadcastable state each superstep is BroadcastHashJoin -> exchange-
-    free min-aggregate -> co-partitioned merge-join update. Exchange
-    plan for huge V via ``broadcast_state=False``.
+    free min-aggregate -> co-partitioned merge-join update. Above
+    ``pregel.BROADCAST_STATE_MAX_VERTICES`` vertices the state is not
+    broadcast and the cache is re-keyed by ``src`` (the exchange plan).
 
     ``algorithm="two-phase"`` checkpoints under ``<job_id>-two-phase``.
     """
@@ -99,49 +90,44 @@ def connected_components(
         # must not resume each other
         job_id=f"{job_id}-two-phase" if algorithm == "two-phase" else job_id,
         checkpoint_every=checkpoint_every,
-        resume=resume,
     )
     if algorithm == "two-phase":
         return _star_contraction(edges, vertices, run)
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism
 
     if init_labels is not None:
-        if prior_edges is not None:
-            # precondition: every old undirected edge survives into the
-            # new graph.  Canonical (min,max) form so direction flips
-            # don't count as removals; limit(1) short-circuits the scan.
-            def _canon(e: DataFrame) -> DataFrame:
-                return e.select(
-                    F.least("src", "dst").alias("_u"),
-                    F.greatest("src", "dst").alias("_v"),
-                )
-
-            removed = (
-                _canon(prior_edges)
-                .join(_canon(edges), ["_u", "_v"], "left_anti")
-                .limit(1)
-                .count()
-            )
-            if removed:
-                import warnings
-
-                warnings.warn(
-                    "cc init_labels rejected: the delta is non-additive "
-                    "(at least one prior edge is gone, so a component may "
-                    "have split); running cold instead"
-                )
-                init_labels = None
-        elif not assume_additive:
+        if prior_edges is None:
             raise ValueError(
-                "connected_components(init_labels=...) needs either "
-                "prior_edges (the edge frame the labels were computed "
-                "over, to verify the delta is edge-additive) or "
-                "assume_additive=True (caller certifies an append-only "
-                "delta). A split caused by a removed edge cannot be "
-                "detected from the labels after the fact."
+                "connected_components(init_labels=...) needs prior_edges "
+                "(the edge frame the labels were computed over, to verify "
+                "the delta is edge-additive). A split caused by a removed "
+                "edge cannot be detected from the labels after the fact."
             )
+
+        # precondition: every old undirected edge survives into the new
+        # graph.  Canonical (min,max) form so direction flips don't
+        # count as removals; limit(1) short-circuits the scan.
+        def _canon(e: DataFrame) -> DataFrame:
+            return e.select(
+                F.least("src", "dst").alias("_u"),
+                F.greatest("src", "dst").alias("_v"),
+            )
+
+        removed = (
+            _canon(prior_edges)
+            .join(_canon(edges), ["_u", "_v"], "left_anti")
+            .limit(1)
+            .count()
+        )
+        if removed:
+            import warnings
+
+            warnings.warn(
+                "cc init_labels rejected: the delta is non-additive "
+                "(at least one prior edge is gone, so a component may "
+                "have split); running cold instead"
+            )
+            init_labels = None
 
     # build the (cached) undirected frame FIRST and derive the vertex
     # set from it (r6): the old order ran _undirected twice — once
@@ -153,29 +139,25 @@ def connected_components(
     # plan wants is RESHUFFLED FROM the dst cache (one cache-to-cache
     # exchange) rather than rebuilt from the raw edges — setup-only
     # cost, amortized by the loop's per-superstep savings.
-    part_key = "dst" if broadcast_state in (None, True) else "src"
-    und = _undirected(edges).repartition(num_partitions, part_key).persist()
+    und = _undirected(edges).repartition(num_partitions, "dst").persist()
     if vertices is None:
         verts = und.select(F.col("src").alias("vid")).distinct()
     else:
         verts = vertices.select("vid")
     verts = verts.persist()
-    n = verts.count()
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_VERTICES
-    if not broadcast_state and part_key == "dst":
-        # auto-detected huge graph: re-key the existing cache to src
+    broadcast_state = verts.count() <= pregel.BROADCAST_STATE_MAX_VERTICES
+    if not broadcast_state:
+        # huge graph: re-key the existing cache to src
         resrc = und.repartition(num_partitions, "src").persist()
         resrc.count()
         und.unpersist()
         und = resrc
     if init_labels is not None:
         # additivity already established above (prior_edges subset
-        # check or caller's assume_additive certificate).  One residual
-        # hygiene filter: a prior label naming a vid absent from the
-        # new graph (labels computed over a superset vertex set) would
-        # seed a component id that is not a member vid — drop it; the
-        # vertex falls back to its own vid.
+        # check).  One residual hygiene filter: a prior label naming a
+        # vid absent from the new graph (labels computed over a superset
+        # vertex set) would seed a component id that is not a member
+        # vid — drop it; the vertex falls back to its own vid.
         label_vids = verts.select(F.col("vid").alias("_lv"))
         prior = (
             init_labels.select("vid", F.col("component").alias("_prior"))

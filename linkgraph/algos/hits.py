@@ -19,10 +19,10 @@ norms are two scalar aggregates per iteration (the same driver-action
 budget as pagerank's dangling-mass sum), each over an
 already-checkpointed frame so nothing expensive executes twice.
 
-Above ``BROADCAST_STATE_MAX_VERTICES`` (or with ``broadcast_state=
-False``) the kernel switches to the exchange plan: because the two
-half-steps join the E rows on DIFFERENT keys (src for the auth sums,
-dst for the hub sums), the edge set is cached in BOTH orientations —
+Above ``pregel.BROADCAST_STATE_MAX_VERTICES`` vertices the kernel
+switches to the exchange plan: because the two half-steps join the E
+rows on DIFFERENT keys (src for the auth sums, dst for the hub sums),
+the edge set is cached in BOTH orientations —
 hash(src, P) and hash(dst, P) — so each half-step's state join is
 co-partitioned and only the V-row state plus the partially-aggregated
 sums ever shuffle. 2x edge cache is the price of never exchanging the
@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def hits(
@@ -50,12 +49,9 @@ def hits(
     *,
     max_iter: int = 20,
     tol: float | None = None,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     job_id: str = "hits",
     checkpoint_every: int = 5,
-    resume: bool = True,
-    broadcast_state: bool | None = None,
     init_state: DataFrame | None = None,
 ) -> pregel.PregelResult:
     """Returns state (vid, hub, auth), L2-normalized per iteration.
@@ -70,9 +66,7 @@ def hits(
     dominant-eigenvector fixed point is unchanged. Ignored when a
     checkpoint resume for this job_id exists (resume wins — it is the
     same run continuing)."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism
     e0 = edges.select("src", "dst").distinct()
     verts = (
         e0.select(F.col("src").alias("vid"))
@@ -96,8 +90,7 @@ def hits(
         return df
 
     try:
-        if broadcast_state is None:
-            broadcast_state = verts.count() <= BROADCAST_STATE_MAX_VERTICES
+        broadcast_state = verts.count() <= pregel.BROADCAST_STATE_MAX_VERTICES
         # broadcast plan: one dst-partitioned cache serves both half-steps
         # (the state side is broadcast, the auth groupBy(dst) is exchange-
         # free). Exchange plan: one cache per join orientation so neither
@@ -191,7 +184,6 @@ def hits(
             checkpoint_dir=checkpoint_dir,
             job_id=job_id,
             checkpoint_every=checkpoint_every,
-            resume=resume,
         )
     finally:
         if internal:

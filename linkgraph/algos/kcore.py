@@ -25,11 +25,9 @@ def k_core(
     k: int,
     *,
     max_iter: int = 30,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     job_id: str | None = None,
     checkpoint_every: int = 5,
-    resume: bool = True,
 ) -> pregel.PregelResult:
     """Returns state = (vid) rows of the k-core's surviving vertices.
 
@@ -39,9 +37,7 @@ def k_core(
     idempotent, so a resumed run is bit-identical to an uninterrupted
     one. A checkpoint written for another ``k`` is not resumed.
     ``job_id`` defaults to ``kcore<k>``. Self-loops are ignored."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism
     und = (
         edges.select("src", "dst")
         .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -76,7 +72,6 @@ def k_core(
         checkpoint_dir=checkpoint_dir,
         job_id=job_id or f"kcore{k}",
         checkpoint_every=checkpoint_every,
-        resume=resume,
     )
     core = res.state.select(F.col("src").alias("vid")).distinct()
     core = core.localCheckpoint(eager=True)

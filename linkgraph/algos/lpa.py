@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def label_propagation(
@@ -31,7 +30,6 @@ def label_propagation(
     checkpoint_dir: str | None = None,
     job_id: str = "lpa",
     checkpoint_every: int = 5,
-    resume: bool = True,
 ) -> pregel.PregelResult:
     """Returns state (vid, label).
 
@@ -48,8 +46,7 @@ def label_propagation(
     labels would silently change the answer on a grown graph rather
     than just the iteration count.
     """
-    spark = edges.sparkSession
-    num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism
     e = edges.select("src", "dst")
     und = (
         e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -63,7 +60,7 @@ def label_propagation(
     else:
         verts = vertices.select("vid")
     verts = verts.persist()
-    broadcast_state = verts.count() <= BROADCAST_STATE_MAX_VERTICES
+    broadcast_state = verts.count() <= pregel.BROADCAST_STATE_MAX_VERTICES
     init = verts.select("vid", F.col("vid").alias("label"))
 
     # changed-count collected as an observed metric of the superstep
@@ -105,7 +102,6 @@ def label_propagation(
             checkpoint_dir=checkpoint_dir,
             job_id=job_id,
             checkpoint_every=checkpoint_every,
-            resume=resume,
         )
         res.state = res.state.select("vid", "label")
         return res

@@ -42,12 +42,12 @@ Physical plan (tuned via .explain — see docs/PLANS.md):
     (``UnknownPartitioning(0)`` on Spark 4.1.2), so the state-update
     join adds ``Exchange hashpartitioning(vid)`` + Sort + SortMergeJoin
     each superstep (plans/r06/pagerank_superstep_after.txt).
-  * when V is too large to broadcast (the 10^12-doc regime),
-    ``broadcast_state=False`` switches to the exchange plan: edges stay
-    cached partitioned on ``src`` (join key), only the V-row state and
-    the partially-aggregated messages shuffle. Map-side combine + AQE
-    skew-join handle power-law in-degree; ``skew_salt > 1`` additionally
-    two-phase-aggregates the hot destinations explicitly.
+  * above ``pregel.BROADCAST_STATE_MAX_VERTICES`` vertices (the
+    10^12-doc regime) the kernel switches to the exchange plan: edges
+    stay cached partitioned on ``src`` (join key), only the V-row state
+    and the partially-aggregated messages shuffle. Map-side combine
+    (the partial sum below the message exchange) + AQE skew-join handle
+    power-law in-degree.
   * out-degree is folded INTO the state frame (vid, score, out_degree) —
     no per-iteration join against a separate degree table, and the
     vertex/url table is never touched inside the loop (the reference's
@@ -69,11 +69,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.ops import two_phase_agg
-
-# Above this vertex count the rank state is no longer broadcast
-# (driver/executor memory bound) and the kernel uses the exchange plan.
-BROADCAST_STATE_MAX_VERTICES = 20_000_000
 
 
 def pagerank(
@@ -83,13 +78,10 @@ def pagerank(
     tol: float | None = 1e-6,
     max_iter: int = 100,
     vertices: DataFrame | None = None,
-    skew_salt: int = 1,
-    broadcast_state: bool | None = None,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     job_id: str = "pagerank",
     checkpoint_every: int = 5,
-    resume: bool = True,
     init_scores: DataFrame | None = None,
 ) -> pregel.PregelResult:
     """Run PageRank over edges(src, dst). Returns state (vid, score).
@@ -115,9 +107,8 @@ def pagerank(
     return _random_walk(
         edges.select("src", "dst"), base_state, None,
         damping=damping, tol=tol, max_iter=max_iter, init_scores=init_scores,
-        skew_salt=skew_salt, broadcast_state=broadcast_state,
         num_partitions=num_partitions, checkpoint_dir=checkpoint_dir,
-        job_id=job_id, checkpoint_every=checkpoint_every, resume=resume,
+        job_id=job_id, checkpoint_every=checkpoint_every,
     )
 
 
@@ -128,8 +119,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     tol: float | None = 1e-6,
     max_iter: int = 100,
-    num_partitions: int | None = None,
-    broadcast_state: bool | None = None,
     init_scores: DataFrame | None = None,
     checkpoint_dir: str | None = None,
 ) -> pregel.PregelResult:
@@ -152,7 +141,6 @@ def personalized_pagerank(
     return _random_walk(
         edges.select("src", "dst"), _out_degrees(edges, F.lit(1)), seed_list,
         damping=damping, tol=tol, max_iter=max_iter, init_scores=init_scores,
-        broadcast_state=broadcast_state, num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir, job_id=f"ppr-{digest[:16]}",
     )
 
@@ -166,8 +154,6 @@ def weighted_pagerank(
     damping: float = 0.85,
     max_iter: int = 20,
     tol: float | None = None,
-    num_partitions: int | None = None,
-    broadcast_state: bool | None = None,
     init_scores: DataFrame | None = None,
     checkpoint_dir: str | None = None,
 ) -> pregel.PregelResult:
@@ -210,7 +196,6 @@ def weighted_pagerank(
     return _random_walk(
         frac, base_state, None,
         damping=damping, tol=tol, max_iter=max_iter, init_scores=init_scores,
-        broadcast_state=broadcast_state, num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir, job_id="wpagerank",
     )
 
@@ -242,13 +227,10 @@ def _random_walk(
     tol: float | None,
     max_iter: int,
     init_scores: DataFrame | None,
-    broadcast_state: bool | None,
-    num_partitions: int | None,
     checkpoint_dir: str | None,
     job_id: str,
-    skew_salt: int = 1,
+    num_partitions: int | None = None,
     checkpoint_every: int = 5,
-    resume: bool = True,
 ) -> pregel.PregelResult:
     """Power iteration over ``edges`` (src, dst[, frac]) from
     ``base_state`` (vid, out_degree, ...), teleporting to ``seeds``
@@ -273,8 +255,7 @@ def _random_walk(
             vid_type = base_state.schema["vid"].dataType.simpleString()
             empty = spark.createDataFrame([], f"vid {vid_type}, score double")
             return pregel.PregelResult(state=empty, iterations=0, converged=True)
-        if broadcast_state is None:
-            broadcast_state = n <= BROADCAST_STATE_MAX_VERTICES
+        broadcast_state = n <= pregel.BROADCAST_STATE_MAX_VERTICES
         # the E-row side is cached partitioned for its hot path (see the
         # module docstring)
         part_key = "dst" if broadcast_state else "src"
@@ -334,12 +315,7 @@ def _random_walk(
             joined = edges_df.join(active, edges_df["src"] == active["vid"]).select(
                 "dst", msg
             )
-            if skew_salt > 1:
-                sums = two_phase_agg(
-                    joined, "dst", {"msum": (F.sum, F.sum, "contrib")}, salt_buckets=skew_salt
-                )
-            else:
-                sums = joined.groupBy("dst").agg(F.sum("contrib").alias("msum"))
+            sums = joined.groupBy("dst").agg(F.sum("contrib").alias("msum"))
             newscore = (
                 teleport + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
             ).alias("score")
@@ -365,7 +341,6 @@ def _random_walk(
             checkpoint_dir=checkpoint_dir,
             job_id=job_id,
             checkpoint_every=checkpoint_every,
-            resume=resume,
         )
     finally:
         # the returned state is localCheckpoint-materialized; internal

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from linkgraph import pregel
 from linkgraph.pipeline import phash
 
 _STEP_MIX = 1_000_003
@@ -31,7 +32,6 @@ def random_walks(
     walk_length: int,
     seed: int = 7,
     starts: DataFrame | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(walk_id, step, vid) rows: one walk per start vertex (default:
     every vertex with an out-edge), ``walk_length`` transitions or until
@@ -40,12 +40,14 @@ def random_walks(
     Vertex ids must be integral (the portable neighbor-choice hash is
     integer arithmetic); run string-keyed graphs (e.g. host graphs)
     through ``normalize.assign_contiguous_ids`` first.
+
+    The ranked edge cache and the per-step frontier checkpoints are
+    released on return and on error; the returned frame is one
+    ``localCheckpoint``.
     """
     from pyspark.sql import types as T
 
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism
     if not isinstance(
         edges.schema["src"].dataType, (T.LongType, T.IntegerType, T.ShortType)
     ):
@@ -64,48 +66,54 @@ def random_walks(
         .repartition(num_partitions, "src")
         .persist()
     )
-    if starts is None:
-        starts = ranked.select(F.col("src").alias("vid")).distinct()
-    cur = starts.select(
-        F.col("vid").alias("walk_id"), F.col("vid").alias("vid")
-    )
-    out = cur.withColumn("step", F.lit(0))
-    for t in range(1, walk_length + 1):
-        # fresh per-step column names (cur derives from ranked after the
-        # first hop — reusing ranked's columns is an ambiguous self-join)
-        r_t = ranked.select(
-            F.col("src").alias(f"__s{t}__"),
-            F.col("dst").alias(f"__d{t}__"),
-            F.col("__rn__").alias(f"__r{t}__"),
-            F.col("__deg__").alias(f"__g{t}__"),
+    frontiers: list[DataFrame] = []
+    try:
+        if starts is None:
+            starts = ranked.select(F.col("src").alias("vid")).distinct()
+        cur = starts.select(
+            F.col("vid").alias("walk_id"), F.col("vid").alias("vid")
         )
-        # portable pseudo-random neighbor choice for (vertex, step);
-        # reduce vid mod P FIRST — raw 64-bit ids (hash vids) times the
-        # mixer would overflow int64 (phash discipline: stay < 2^60).
-        # pmod, not %: Spark's % keeps the dividend's sign, so a negative
-        # vid (raw 64-bit hash id) would yield a negative choice that
-        # matches no rank and silently kills the walk. pmod == % for
-        # non-negative operands, so existing oracles are unaffected.
-        x = F.pmod(
-            F.pmod(F.col("vid"), F.lit(phash.P)) * F.lit(_STEP_MIX) + F.lit(t),
-            F.lit(phash.P),
-        )
-        choice = F.pmod(
-            F.pmod(x * F.lit(a) + F.lit(b), F.lit(phash.P)), F.col(f"__g{t}__")
-        )
-        # checkpoint each frontier: union branches don't share subplans,
-        # so un-materialized steps would re-run the whole join chain per
-        # branch (O(L^2) joins) — same discipline as the other kernels
-        cur = (
-            cur.join(r_t, F.col("vid") == F.col(f"__s{t}__"))
-            .where(F.col(f"__r{t}__") == choice)
-            .select("walk_id", F.col(f"__d{t}__").alias("vid"))
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(cur.withColumn("step", F.lit(t)))
-    out = out.localCheckpoint(eager=True)
-    ranked.unpersist()
-    return out
+        out = cur.withColumn("step", F.lit(0))
+        for t in range(1, walk_length + 1):
+            # fresh per-step column names (cur derives from ranked after the
+            # first hop — reusing ranked's columns is an ambiguous self-join)
+            r_t = ranked.select(
+                F.col("src").alias(f"__s{t}__"),
+                F.col("dst").alias(f"__d{t}__"),
+                F.col("__rn__").alias(f"__r{t}__"),
+                F.col("__deg__").alias(f"__g{t}__"),
+            )
+            # portable pseudo-random neighbor choice for (vertex, step);
+            # reduce vid mod P FIRST — raw 64-bit ids (hash vids) times the
+            # mixer would overflow int64 (phash discipline: stay < 2^60).
+            # pmod, not %: Spark's % keeps the dividend's sign, so a negative
+            # vid (raw 64-bit hash id) would yield a negative choice that
+            # matches no rank and silently kills the walk. pmod == % for
+            # non-negative operands, so existing oracles are unaffected.
+            x = F.pmod(
+                F.pmod(F.col("vid"), F.lit(phash.P)) * F.lit(_STEP_MIX) + F.lit(t),
+                F.lit(phash.P),
+            )
+            choice = F.pmod(
+                F.pmod(x * F.lit(a) + F.lit(b), F.lit(phash.P)), F.col(f"__g{t}__")
+            )
+            # checkpoint each frontier: union branches don't share subplans,
+            # so un-materialized steps would re-run the whole join chain per
+            # branch (O(L^2) joins) — same discipline as the other kernels
+            cur = (
+                cur.join(r_t, F.col("vid") == F.col(f"__s{t}__"))
+                .where(F.col(f"__r{t}__") == choice)
+                .select("walk_id", F.col(f"__d{t}__").alias("vid"))
+                .localCheckpoint(eager=True)
+            )
+            frontiers.append(cur)
+            out = out.unionByName(cur.withColumn("step", F.lit(t)))
+        return out.localCheckpoint(eager=True)
+    finally:
+        # the returned frame no longer reads the frontiers
+        for f in frontiers:
+            pregel._release(f)
+        ranked.unpersist()
 
 
 def walk_sequences(walks: DataFrame) -> DataFrame:

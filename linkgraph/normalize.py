@@ -8,7 +8,7 @@ Reference parity:
   * 64-bit hashed ids mirror the reference's VertexId scheme (biz id ->
     hash64: /root/reference/reasoner/common/src/main/java/com/antgroup/openspg/reasoner/common/graph/vertex/impl/VertexId.java:30-32,
     Utils.hash64 at .../common/Utils.java:218-222) — we use xxhash64.
-  * the salted, hash-partitioned edge table is the Spark analog of the
+  * the hash-partitioned edge table is the Spark analog of the
     warehouse partitioner (/root/reference/reasoner/warehouse/warehouse-common/.../partition/BasePartitioner.java).
 
 Scale notes (100 TB design):
@@ -17,8 +17,8 @@ Scale notes (100 TB design):
     offsets (one tiny driver-side collect of partition sizes). This is
     the DataFrame equivalent of zipWithIndex and scales linearly.
   * dedup/degree computations are plain shuffles on the key they need;
-    high-degree (power-law) keys are handled by `salt_edges` +
-    two-phase aggregation in ops.two_phase_agg.
+    Spark's map-side partial aggregation collapses high-degree
+    (power-law) keys to one row per partition before the exchange.
 """
 
 from __future__ import annotations

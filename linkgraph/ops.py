@@ -8,8 +8,6 @@ execution: /root/reference/reasoner/runner/local-runner/.../rdg/LocalRDG.java):
   start_from_ids        Start (RDG seeds, LocalRDG.java:200-235)
   expand / expand_into  PatternScan/ExpandInto (RDG.scala:41,50; LocalRDG.java:238-333,499-610)
   var_len_expand        BoundedVarLenExpand (PhysicalPlanner unrolling)
-  two_phase_agg         Aggregate + AggregatePushDown skew form
-                        (RDG.scala:86; optimizer/rules/AggregatePushDown.scala)
   top_k / order_limit   OrderAndLimit incl. per-group top-k (RDG.scala:76)
   pattern_join          Join inner/left/full (RDG.scala:144, LocalRDG.java:1206-1311)
   optional              Optional → left outer (lube-logical Optional.scala:20)
@@ -185,41 +183,6 @@ def var_len_expand_paths(
             step = cur.withColumn("hops", F.lit(hop))
             out = step if out is None else out.unionByName(step)
     return out
-
-
-# --------------------------------------------------------------------------
-# aggregation
-# --------------------------------------------------------------------------
-
-
-def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, tuple],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe aggregation: salt the hot key, partially aggregate per
-    (key, salt), then finish per key.
-
-    ``aggs`` maps output name -> (partial_fn, final_fn, input_col), e.g.
-    ``{"s": (F.sum, F.sum, "x"), "c": (F.count, F.sum, "x")}``.
-
-    This is the explicit two-phase form the north rule requires for
-    power-law in-degree (hot-vertex) message aggregation; the reference's
-    analog is AggregatePushDown (pre-aggregate per root,
-    /root/reference/reasoner/lube-logical/.../optimizer/rules/AggregatePushDown.scala)
-    plus mergeable UDAFs (BaseUdaf.merge).
-    """
-    salted = df.withColumn(
-        "__salt__", F.pmod(F.xxhash64(F.col(key), F.spark_partition_id()), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy(key, "__salt__").agg(
-        *[pf(c).alias(f"__p_{name}__") for name, (pf, _, c) in aggs.items()]
-    )
-    final = partial.groupBy(key).agg(
-        *[ff(f"__p_{name}__").alias(name) for name, (_, ff, _c) in aggs.items()]
-    )
-    return final
 
 
 # --------------------------------------------------------------------------

@@ -26,6 +26,11 @@ from pyspark.sql import types as T
 
 from linkgraph.pipeline import phash
 
+# near_dedup resolves a pair set of at most this many pairs on the
+# driver (one collect + union-find) instead of on the Pregel kernel.
+# Read at call time, so a test can patch it to 0 to drive the kernel.
+SMALL_PAIRS_THRESHOLD = 1_000_000
+
 
 def _anchor_hot_buckets(
     bucketed: DataFrame,
@@ -509,7 +514,7 @@ def _driver_union_find(spark, pairs: DataFrame) -> DataFrame:
     """Collect a (small) pair frame and resolve clusters with a
     path-halving union-find; returns a broadcastable (__id__, __canon__)
     frame with __canon__ = min member id — the exact contract of the
-    distributed kernel. Only called under ``small_pairs_threshold``."""
+    distributed kernel. Only called under ``SMALL_PAIRS_THRESHOLD``."""
     import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -555,7 +560,6 @@ def near_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_iter: int = 50,
-    small_pairs_threshold: int = 1_000_000,
     **lsh_kwargs,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into canonical documents: the
@@ -595,13 +599,13 @@ def near_dedup(
     # the CC kernel and the id mapping both re-read it several times
     pairs = pairs.select("a", "b").persist()
     n_pairs = pairs.count()
-    if n_pairs <= small_pairs_threshold:
+    if n_pairs <= SMALL_PAIRS_THRESHOLD:
         # small-N fast path: a near-dup pair set that fits the driver
         # does not need a distributed fixed point — one collect plus a
         # union-find gives the identical (id, min-id-of-cluster) output
         # contract without the per-superstep scheduling floor that
         # dominates at demo scale. The 100 TB path (the Pregel kernel
-        # below) is untouched; threshold tunable per deployment.
+        # below) is untouched.
         clusters = _driver_union_find(docs.sparkSession, pairs)
         pairs.unpersist()
         return (

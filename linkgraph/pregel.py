@@ -44,6 +44,11 @@ from linkgraph.tables import part_rows, write_rows
 SuperstepFn = Callable[[DataFrame, DataFrame, int], DataFrame]
 DeltaFn = Callable[[DataFrame, DataFrame], float]
 
+# Above this vertex count the kernels no longer broadcast their V-row
+# state (driver/executor memory bound) and use their exchange plans.
+# Read at call time, so a test can patch it to drive the exchange plans.
+BROADCAST_STATE_MAX_VERTICES = 20_000_000
+
 
 @dataclass
 class PregelResult:
@@ -217,7 +222,6 @@ def run_pregel(
     checkpoint_dir: str | None = None,
     job_id: str = "pregel",
     checkpoint_every: int = 5,
-    resume: bool = True,
 ) -> PregelResult:
     """Run supersteps until ``delta <= tol`` or ``max_iter``.
 
@@ -241,6 +245,9 @@ def run_pregel(
     ``init_state`` itself) is released once the next state is
     materialized, its delta taken and any checkpoint saved; the returned
     state stays cached.
+
+    With a ``checkpoint_dir``, the run resumes from the latest committed
+    checkpoint under ``job_id`` whose input fingerprint matches.
     """
     spark = edges.sparkSession
     store = CheckpointStore(checkpoint_dir, job_id) if checkpoint_dir else None
@@ -253,10 +260,12 @@ def run_pregel(
         # hashes, sum of row hashes) over the edge frame — one cheap
         # columnar agg per RUN (the frame is cached by every caller). A
         # checkpoint under this job_id that was produced from a
-        # DIFFERENT edge set must not be resumed: its state is for
-        # another graph, and `latest()` could even out-step the fresh
-        # run and shadow it on a later resume — so a mismatch clears the
-        # stale checkpoints before starting. The decimal SUM keeps the
+        # DIFFERENT edge frame must not be resumed: its state is for
+        # another graph (or, where a kernel folds its parameters into
+        # the frame, as k_core does with k, for another run), and
+        # `latest()` could even out-step the fresh run and shadow it on
+        # a later resume — so a mismatch clears the stale checkpoints
+        # before starting. The decimal SUM keeps the
         # fingerprint multiplicity-aware (bit_xor alone cancels
         # duplicated rows: multisets {a,a,b} and {c,c,b} share count and
         # xor), and a checkpoint directory with NO stored fingerprint
@@ -277,17 +286,17 @@ def run_pregel(
         if stored != fingerprint and (
             stored is not None or store.latest() is not None
         ):
-            if resume and store.latest() is not None:
+            if store.latest() is not None:
                 import warnings
 
                 warnings.warn(
                     f"checkpoints under job_id={job_id!r} were produced "
-                    "from a different edge set (or one whose fingerprint "
-                    "is missing); ignoring and clearing them"
+                    "from different input (edges or kernel parameters), "
+                    "or their fingerprint is missing; ignoring and "
+                    "clearing them"
                 )
             store.clear()
         store.write_fingerprint(fingerprint)
-    if store and resume:
         last = store.latest()
         if last is not None:
             state, metrics = store.load(spark, last)

@@ -45,16 +45,6 @@ def test_pagerank_matches_oracle(tiny_edges, graph):
     assert top == 1
 
 
-def test_pagerank_two_phase_skew_agg_same_result(tiny_edges, graph):
-    edges, vertices = graph
-    base = pagerank(tiny_edges, tol=0.0, max_iter=5)
-    salted = pagerank(tiny_edges, tol=0.0, max_iter=5, skew_salt=8)
-    b = {r["vid"]: r["score"] for r in base.state.collect()}
-    s = {r["vid"]: r["score"] for r in salted.state.collect()}
-    for v in b:
-        assert math.isclose(b[v], s[v], rel_tol=1e-12, abs_tol=1e-12)
-
-
 def test_connected_components_hash_min(tiny_edges, graph):
     edges, vertices = graph
     expected = components_oracle(edges, vertices)
@@ -295,26 +285,37 @@ def test_weighted_pagerank_edge_cases(spark):
     assert res2.converged is False
 
 
-def test_random_walks_release_their_caches(spark, tiny_edges):
-    """Every frame pagerank, ppr, weighted_pagerank, hits, k_core,
-    two-phase cc, minhash_lsh_pairs and the reasoner's fixpoints
-    (concept_closure, thinker.infer, infer_thinker) cache is released
-    on return and on error. Superstep states are counted apart: each is a
-    localCheckpoint, whose RDD Spark persists and marks checkpointed.
-    run_pregel releases every superseded state, and the kernels release
-    their own intermediate checkpoints, so a call keeps at most one (the
-    returned state; minhash_lsh_pairs' materialized pairs)."""
+def test_random_walks_release_their_caches(spark, tiny_edges, monkeypatch):
+    """Every frame pagerank, ppr, weighted_pagerank, hits (both plans),
+    k_core, two-phase cc, random_walks, minhash_lsh_pairs and the
+    reasoner's fixpoints (concept_closure, thinker.infer,
+    infer_thinker) cache is released on return and on error. Superstep
+    states are counted apart: each is a localCheckpoint, whose RDD Spark
+    persists and marks checkpointed. run_pregel releases every
+    superseded state, and the kernels release their own intermediate
+    checkpoints, so a call keeps at most one (the returned state;
+    random_walks' walk rows; minhash_lsh_pairs' materialized pairs)."""
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
+    from linkgraph import pregel
     from linkgraph.algos import personalized_pagerank
     from linkgraph.algos.hits import hits
     from linkgraph.algos.kcore import k_core
     from linkgraph.algos.pagerank import weighted_pagerank
+    from linkgraph.algos.walks import random_walks
     from linkgraph.concepts import concept_closure
     from linkgraph.pipeline.dedup import minhash_lsh_pairs
     from linkgraph.thinker import infer, parse_rule
     from linkgraph.thinker_dsl import infer_thinker, parse_thinker
+
+    def exchange_plan(call):
+        def run():
+            with monkeypatch.context() as m:
+                m.setattr(pregel, "BROADCAST_STATE_MAX_VERTICES", 0)
+                call()
+
+        return run
 
     def persisted():
         rdds = [r.rdd() for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
@@ -360,9 +361,10 @@ Define (T/`d`) {
         lambda: minhash_lsh_pairs(docs).collect(),
         lambda: hits(tiny_edges, max_iter=6),
         lambda: hits(tiny_edges, max_iter=6, tol=1e-30),
-        lambda: hits(tiny_edges, max_iter=3, broadcast_state=False),
+        exchange_plan(lambda: hits(tiny_edges, max_iter=3)),
         lambda: k_core(tiny_edges, k=2),
         lambda: connected_components(tiny_edges, algorithm="two-phase"),
+        lambda: random_walks(tiny_edges, 3),
         lambda: concept_closure(isa),
         lambda: infer(links, reach),
         lambda: infer_thinker(tagged, chain),
@@ -413,48 +415,43 @@ def test_kcore_and_hits_resume(spark, tmp_path):
         assert abs(a[v][0] - b[v][0]) < 1e-12 and abs(a[v][1] - b[v][1]) < 1e-12
 
 
-def test_exchange_plan_matches_broadcast_plan(tiny_edges, spark):
-    """broadcast_state=False (the >20M-vertex exchange plan) must produce
-    the same state as the broadcast plan for hits/ppr/weighted-pagerank —
-    the same guarantee pagerank/cc/lpa already carry."""
-    import math
-
+def test_exchange_plan_matches_broadcast_plan(tiny_edges, spark, monkeypatch):
+    """Above pregel.BROADCAST_STATE_MAX_VERTICES (the >20M-vertex
+    regime; patched to 0 here) pagerank, ppr, weighted_pagerank, hits,
+    cc and lpa run their exchange plans, which must produce the state of
+    their broadcast plans: equal labels, and scores equal to 1e-12 (the
+    message sums add in another order, so a score can differ in its
+    last bit)."""
+    from linkgraph import pregel
     from linkgraph.algos import personalized_pagerank
     from linkgraph.algos.hits import hits
     from linkgraph.algos.pagerank import weighted_pagerank
-
-    b = personalized_pagerank(
-        tiny_edges, [0, 5], tol=0.0, max_iter=5, broadcast_state=True
-    )
-    x = personalized_pagerank(
-        tiny_edges, [0, 5], tol=0.0, max_iter=5, broadcast_state=False
-    )
-    bs = {r["vid"]: r["score"] for r in b.state.collect()}
-    xs = {r["vid"]: r["score"] for r in x.state.collect()}
-    assert bs.keys() == xs.keys()
-    for v in bs:
-        assert math.isclose(bs[v], xs[v], rel_tol=1e-12, abs_tol=1e-12)
-
-    hb = hits(tiny_edges, max_iter=3, broadcast_state=True)
-    hx = hits(tiny_edges, max_iter=3, broadcast_state=False)
-    hbs = {r["vid"]: (r["hub"], r["auth"]) for r in hb.state.collect()}
-    hxs = {r["vid"]: (r["hub"], r["auth"]) for r in hx.state.collect()}
-    assert hbs.keys() == hxs.keys()
-    for v in hbs:
-        assert math.isclose(hbs[v][0], hxs[v][0], rel_tol=1e-12, abs_tol=1e-12)
-        assert math.isclose(hbs[v][1], hxs[v][1], rel_tol=1e-12, abs_tol=1e-12)
 
     we = spark.createDataFrame(
         [(0, 1, 2.0), (0, 2, 1.0), (1, 2, 5.0), (2, 0, 1.0), (3, 0, 4.0)],
         "src bigint, dst bigint, weight double",
     )
-    wb = weighted_pagerank(we, max_iter=4, broadcast_state=True)
-    wx = weighted_pagerank(we, max_iter=4, broadcast_state=False)
-    wbs = {r["vid"]: r["score"] for r in wb.state.collect()}
-    wxs = {r["vid"]: r["score"] for r in wx.state.collect()}
-    assert wbs.keys() == wxs.keys()
-    for v in wbs:
-        assert math.isclose(wbs[v], wxs[v], rel_tol=1e-12, abs_tol=1e-12)
+    runs = {
+        "pagerank": lambda: pagerank(tiny_edges, tol=0.0, max_iter=5),
+        "ppr": lambda: personalized_pagerank(tiny_edges, [0, 5], tol=0.0, max_iter=5),
+        "wpagerank": lambda: weighted_pagerank(we, max_iter=4),
+        "hits": lambda: hits(tiny_edges, max_iter=3),
+        "cc": lambda: connected_components(tiny_edges),
+        "lpa": lambda: label_propagation(tiny_edges, max_iter=4),
+    }
+
+    def state(run):
+        return sorted(tuple(r) for r in run().state.collect())
+
+    broadcast = {name: state(run) for name, run in runs.items()}
+    monkeypatch.setattr(pregel, "BROADCAST_STATE_MAX_VERTICES", 0)
+    for name, run in runs.items():
+        exchange = state(run)
+        assert len(exchange) == len(broadcast[name]), name
+        for x, b in zip(exchange, broadcast[name]):
+            assert x[0] == b[0], name
+            for xv, bv in zip(x[1:], b[1:]):
+                assert math.isclose(xv, bv, rel_tol=1e-12, abs_tol=1e-12), (name, x, b)
 
 
 def test_random_walks_negative_vids(spark):
@@ -556,11 +553,6 @@ def test_cc_warm_start_incremental(spark):
     assert c == w
     assert set(c.values()) == {0}  # fully merged, canonical min vid
     assert warm.iterations < cold.iterations
-    # assume_additive certifies the delta without the prior edge frame
-    warm2 = connected_components(
-        grown, max_iter=100, init_labels=cold0.state, assume_additive=True
-    )
-    assert {r["vid"]: r["component"] for r in warm2.state.collect()} == c
     # re-seeding with the final labels converges immediately
     noop = connected_components(
         grown, max_iter=100, init_labels=cold.state, prior_edges=grown
@@ -588,15 +580,14 @@ def test_cc_warm_start_guards_non_additive_deltas(spark):
     label-side post-hoc check can reject the glued result — the guard
     is the PRECONDITION prior_edges ⊆ new edges, checked before any
     superstep runs; a violated precondition falls back to a cold run
-    (with a warning), and omitting prior_edges without assume_additive
-    is an error."""
+    (with a warning), and omitting prior_edges is an error."""
     import pytest as _pytest
 
     base = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "src bigint, dst bigint"
     )
     labels0 = connected_components(base, max_iter=50).state
-    # no prior edges, no certificate: refuse (unsound to proceed)
+    # no prior edges: refuse (unsound to proceed)
     with _pytest.raises(ValueError, match="prior_edges"):
         connected_components(base, max_iter=50, init_labels=labels0)
     # dropped-vertex delta: vertex 1 disappears (edge 1-2 removed) —

@@ -48,22 +48,6 @@ def test_order_limit_global(spark):
     assert got == [19, 18, 17]
 
 
-def test_two_phase_agg_equals_plain(spark):
-    rows = [(i % 3, float(i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "k int, x double")
-    plain = {
-        (r["k"]): (r["s"], r["c"])
-        for r in df.groupBy("k").agg(F.sum("x").alias("s"), F.count("x").alias("c")).collect()
-    }
-    salted = {
-        (r["k"]): (r["s"], r["c"])
-        for r in ops.two_phase_agg(
-            df, "k", {"s": (F.sum, F.sum, "x"), "c": (F.count, F.sum, "x")}, 8
-        ).collect()
-    }
-    assert plain == salted
-
-
 def test_joins_optional_semi_anti_union(spark):
     left = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, l string")
     right = spark.createDataFrame([(2, "x"), (3, "y")], "id int, r string")

@@ -248,7 +248,7 @@ def test_cosine_pairs_lsh_finds_planted_cluster(vectors):
     assert pairs <= brute
 
 
-def test_near_dedup_resolves_clusters(spark, docs):
+def test_near_dedup_resolves_clusters(spark, docs, monkeypatch):
     """Pairs -> connected components -> canonical: the transitive
     cluster {0,1,2} collapses to min id 0; singletons keep themselves;
     every input doc gets exactly one row."""
@@ -273,9 +273,10 @@ def test_near_dedup_resolves_clusters(spark, docs):
     assert got[0] == got[1] == got[2] == 0 and got[3] == 3
     # the distributed Pregel kernel (threshold 0 forces it) returns the
     # identical contract as the driver union-find fast path above
-    got_dist = {r["doc_id"]: r["canonical_id"] for r in
-                dedup.near_dedup(docs, pairs=pairs,
-                                 small_pairs_threshold=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "SMALL_PAIRS_THRESHOLD", 0)
+        got_dist = {r["doc_id"]: r["canonical_id"] for r in
+                    dedup.near_dedup(docs, pairs=pairs).collect()}
     assert got_dist == got
 
     # non-integral ids ride the hashed-vid path; canonical is still min ID
@@ -288,9 +289,9 @@ def test_near_dedup_resolves_clusters(spark, docs):
     assert got["url-0"] == got["url-1"] == "url-0"
     assert got["url-3"] == "url-3"
     # hashed-vid distributed path agrees with the string fast path too
+    monkeypatch.setattr(dedup, "SMALL_PAIRS_THRESHOLD", 0)
     got_dist = {r["doc_id"]: r["canonical_id"] for r in
-                dedup.near_dedup(sdocs, jaccard_threshold=0.5,
-                                 small_pairs_threshold=0).collect()}
+                dedup.near_dedup(sdocs, jaccard_threshold=0.5).collect()}
     assert got_dist == got
 
 

@@ -90,12 +90,14 @@ def test_small_dim_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def _random_walk_superstep_plan(monkeypatch, edges, **kw) -> str:
+def _random_walk_superstep_plan(monkeypatch, edges, *, exchange: bool) -> str:
     """``explain(simple)`` of the superstep frame pagerank's kernel
     builds, captured inside the real ``run_pregel`` loop while the
     kernel's caches are live. The second superstep is the steady state:
     the first is planned before the edge cache is filled, when Spark
-    does not yet know its partitioning."""
+    does not yet know its partitioning. ``exchange`` patches
+    ``pregel.BROADCAST_STATE_MAX_VERTICES`` to 0, so the kernel picks
+    its exchange plan."""
     from linkgraph import pregel
     from linkgraph.algos import pagerank
 
@@ -111,7 +113,9 @@ def _random_walk_superstep_plan(monkeypatch, edges, **kw) -> str:
         return run_pregel(e, init_state, step, delta_fn, **run_kw)
 
     monkeypatch.setattr(pregel, "run_pregel", capture)
-    pagerank(edges, max_iter=2, tol=None, num_partitions=4, **kw)
+    if exchange:
+        monkeypatch.setattr(pregel, "BROADCAST_STATE_MAX_VERTICES", 0)
+    pagerank(edges, max_iter=2, tol=None, num_partitions=4)
     return plans[1]
 
 
@@ -127,7 +131,7 @@ def test_pagerank_broadcast_superstep_message_agg_is_exchange_free(
     hash(dst, P); state broadcast; the message aggregation on dst adds NO
     exchange of the E-row stream — groupBy(dst) inherits the cache
     partitioning."""
-    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, broadcast_state=True)
+    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, exchange=False)
     assert "BroadcastHashJoin" in plan, plan
     assert "partial_sum(contrib" in plan, plan
     assert not _MSG_EXCHANGE.search(plan), plan
@@ -152,32 +156,16 @@ def test_minhash_signature_has_map_side_combine(spark):
 def test_pagerank_exchange_plan_partially_aggregates_before_shuffle(
     spark, tiny_edges, monkeypatch
 ):
-    """The exchange-plan superstep (pagerank broadcast_state=False, the
-    10^12-doc regime): messages groupBy(dst) over a src-partitioned edge
+    """The exchange-plan superstep (pagerank above
+    BROADCAST_STATE_MAX_VERTICES, the 10^12-doc regime): messages groupBy(dst) over a src-partitioned edge
     cache must show a PARTIAL HashAggregate below its exchange — the
     E-row stream collapses to ~|V| partial sums per partition before
     anything crosses the wire."""
-    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, broadcast_state=False)
+    plan = _random_walk_superstep_plan(monkeypatch, tiny_edges, exchange=True)
     exchange = _MSG_EXCHANGE.search(plan)
     assert exchange, plan
     # top-down print: the final agg's Exchange is ABOVE the partial agg
     assert exchange.start() < plan.index("partial_sum(contrib"), plan
-
-
-def test_two_phase_agg_is_two_exchanges_salted_then_keyed(spark):
-    """ops.two_phase_agg (the explicit hot-key path): phase 1 shuffles
-    on (key, salt) so a power-law hot key spreads over salt_buckets
-    reducers; phase 2 shuffles |keys|*salt rows only. Both phases also
-    map-side combine (partial_ functions below each exchange)."""
-    orders = load_table(spark, SF_DIR, "orders")
-    q = ops.two_phase_agg(
-        orders, "o_custkey", {"s": (F.sum, F.sum, "o_totalprice")}, salt_buckets=8
-    )
-    plan = plan_str(q)
-    assert n_exchanges(plan) == 2, plan
-    assert "__salt__" in plan
-    simple = plan_str(q, mode="simple")
-    assert simple.count("partial_sum") >= 2, simple
 
 
 def test_bucketed_join_no_exchange(spark, tmp_path):

@@ -100,7 +100,7 @@ def test_k_core_does_not_resume_another_k(spark, tmp_path):
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     e = spark.createDataFrame(k4 + [(3, 4), (4, 5), (3, 5)], "src bigint, dst bigint")
     k_core(e, k=3, job_id="x", checkpoint_dir=ckpt, checkpoint_every=1)
-    with pytest.warns(UserWarning, match="different edge set"):
+    with pytest.warns(UserWarning, match=r"different input \(edges or kernel parameters\)"):
         res = k_core(e, k=2, job_id="x", checkpoint_dir=ckpt, checkpoint_every=1)
     assert {r["vid"] for r in res.state.collect()} == set(range(6))
     assert res.metrics[0]["superstep"] == 1
@@ -179,13 +179,13 @@ def test_resume_rejects_checkpoints_from_different_input(spark, tiny_edges, tmp_
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         b = run(other, checkpoint_dir=ckpt, job_id="j", checkpoint_every=1)
-    assert any("different edge set" in str(x.message) for x in w)
+    assert any("different input" in str(x.message) for x in w)
     assert b == expected
     # same-input resume still works (fingerprint matches, no warning)
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
         c = run(other, checkpoint_dir=ckpt, job_id="j", checkpoint_every=1)
-    assert not any("different edge set" in str(x.message) for x in w2)
+    assert not any("different input" in str(x.message) for x in w2)
     assert c == expected
 
 
@@ -220,7 +220,7 @@ def test_resume_rejects_unfingerprinted_checkpoints(spark, tiny_edges, tmp_path)
         warnings.simplefilter("always")
         b = connected_components(other, max_iter=50, checkpoint_dir=ckpt,
                                  job_id="cc", checkpoint_every=1)
-    assert any("different edge set" in str(x.message) for x in w)
+    assert any("different input" in str(x.message) for x in w)
     assert {r["vid"]: r["component"] for r in b.state.collect()} == expected
 
 

@@ -224,10 +224,10 @@ V-row rank state is broadcast and probed by a BroadcastHashJoin feeding
 partial+final HashAggregate on `dst` (no Exchange); the state update is
 a co-partitioned merge join (hash(vid, P) state × hash(dst, P) sums —
 no Exchange, no per-superstep driver broadcast build). At 10^12-doc
-scale where V exceeds broadcast limits, `pagerank(broadcast_state=False)`
+scale where V exceeds `pregel.BROADCAST_STATE_MAX_VERTICES`, pagerank
 switches to the exchange plan (edges cached by `src`, only state +
-partially-aggregated messages shuffle) with optional `skew_salt`
-two-phase aggregation for power-law in-degree.
+partially-aggregated messages shuffle; map-side combine and AQE
+skew-join absorb power-law in-degree).
 
 ## Single-JVM ceiling (why N=2 vs 8, not 8 vs 32)
 
