@@ -191,36 +191,28 @@ def run_pipeline(
             raise RuntimeError(f"fail_after={name} (test hook)")
 
     def _extract() -> int:
-        from linkgraph.extract import extract_pages
+        from linkgraph.extract import extract_pages, extracted_edges
 
-        pages = spark.read.parquet(pages_path)
-        extracted = extract_pages(pages).persist()
-        extracted.select("url", "text").write.mode("overwrite").parquet(
-            f"{out}/text"
-        )
-        raw_edges = extracted.select(
-            F.col("url").alias("src_url"), F.explode("links").alias("link")
-        ).select(
-            "src_url",
-            F.col("link.href").alias("dst_url"),
-            F.col("link.anchor").alias("anchor"),
-        )
-        raw_edges.write.mode("overwrite").parquet(f"{out}/raw_edges")
-        extracted.unpersist()
+        extracted = extract_pages(spark.read.parquet(pages_path)).persist()
+        try:
+            extracted.select("url", "text").write.mode("overwrite").parquet(
+                f"{out}/text"
+            )
+            extracted_edges(extracted).write.mode("overwrite").parquet(
+                f"{out}/raw_edges"
+            )
+        finally:
+            extracted.unpersist()
         return committed_rows(f"{out}/text")
 
     def _normalize() -> int:
-        from linkgraph.normalize import build_edges, build_vertices, canonical_edges
+        from linkgraph.normalize import normalize_graph
 
-        canon = canonical_edges(spark.read.parquet(f"{out}/raw_edges")).persist()
-        vertices = build_vertices(canon).persist()
-        vertices.count()
-        edges = build_edges(canon, vertices, num_buckets=buckets)
-        vertices.write.mode("overwrite").parquet(f"{out}/vertices")
-        edges.write.mode("overwrite").parquet(f"{out}/edges")
-        canon.write.mode("overwrite").parquet(f"{out}/canon_edges")
-        canon.unpersist()
-        vertices.unpersist()
+        raw_edges = spark.read.parquet(f"{out}/raw_edges")
+        with normalize_graph(raw_edges, num_buckets=buckets) as (canon, vertices, edges):
+            vertices.write.mode("overwrite").parquet(f"{out}/vertices")
+            edges.write.mode("overwrite").parquet(f"{out}/edges")
+            canon.write.mode("overwrite").parquet(f"{out}/canon_edges")
         return committed_rows(f"{out}/edges")
 
     def _host_graph() -> int:

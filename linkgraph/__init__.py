@@ -11,8 +11,8 @@ Layout (SURVEY.md §7):
   normalize.py  url canonicalization, id assignment, edge/vertex tables
   pregel.py     the superstep kernel (join -> agg -> update -> checkpoint)
   algos/        pagerank, connected components, label propagation, triangles
-  ops.py        RDG-parity DataFrame operator layer (pattern scan, expand,
-                top-k, fold/unfold, optional, union, var-len expand, ...)
+  ops.py        RDG-parity DataFrame operator layer (expand, var-len
+                expand, top-k, optional, semi/anti, union, as-of join, ...)
   gql.py        GQL MATCH/RETURN front-end ($params, IN/LIKE/RLIKE)
   kgdsl.py      KGDSL native dialect (GraphStructure/Rule/Action, Define
                 derived predicates, Action DDL, multi-statement scripts)

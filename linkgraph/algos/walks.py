@@ -115,12 +115,3 @@ def random_walks(
             pregel._release(f)
         ranked.unpersist()
 
-
-def walk_sequences(walks: DataFrame) -> DataFrame:
-    """(walk_id, seq): reassemble step rows into ordered vid arrays."""
-    return walks.groupBy("walk_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("step", "vid"))),
-            lambda s: s["vid"],
-        ).alias("seq")
-    )

@@ -5,9 +5,6 @@ Parity:
     concept (isA) taxonomy so a pattern written against a general
     concept matches entities tagged with any of its specializations
     (/root/reference/reasoner/udf/src/main/java/com/antgroup/openspg/reasoner/udf/builtin/udtf/ConceptEdgeExpand.java:42-108).
-  EdgeToProperty rewrite — fold a to-concept/standard edge into a plain
-    vertex property so the hop disappears from the join plan
-    (/root/reference/reasoner/lube-logical/src/main/scala/com/antgroup/openspg/reasoner/lube/logical/optimizer/rules/EdgeToProperty.scala:40-70).
 
 Spark shapes: taxonomies are tiny relative to entity tables, so the
 closure computes in a handful of small-table self-joins, is broadcast
@@ -79,17 +76,3 @@ def concept_edge_expand(
         .distinct()
     )
 
-
-def edge_to_property(
-    entities: DataFrame,
-    edges: DataFrame,
-    out_col: str,
-    entity_col: str = "entity",
-    value_col: str = "concept",
-) -> DataFrame:
-    """EdgeToProperty rewrite: fold a to-concept edge into a vertex
-    property column (min value for determinism when an entity carries
-    several tags), turning a later pattern hop into a projection/filter
-    Catalyst can push into the scan."""
-    prop = edges.groupBy(entity_col).agg(F.min(value_col).alias(out_col))
-    return entities.join(F.broadcast(prop), entity_col, "left")

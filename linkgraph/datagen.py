@@ -267,96 +267,3 @@ def bench_edges_pandas(
         return df.drop_duplicates(ignore_index=True)
     return df.iloc[:n_edges].reset_index(drop=True)
 
-
-def demo_graph(spark, text: str):
-    """Demo-graph DSL -> PropertyGraph: the test-fixture loader analog of
-    the reference's MockLocalGraphLoader + DemoGraphParser
-    (/root/reference/reasoner/kgdsl-parser/src/main/scala/com/antgroup/openspg/reasoner/parser/DemoGraphParser.scala:43-97;
-    runner/local-runner/.../load/graph/AbstractLocalGraphLoader.java:26-36).
-
-    One definition per line::
-
-        alice [User, age=30]
-        bob [User]
-        alice -> bob [knows, since=2020]
-        # comments and blank lines ignored
-
-    `name [Label, k=v, ...]` defines a vertex; `a -> b [TYPE, k=v, ...]`
-    an edge. Unlisted endpoint names get the default label ``V``; values
-    parse as int, then float, then string. Returns a
-    :class:`linkgraph.gql.PropertyGraph` whose vertex tables carry
-    (vid, name, props...) with first-seen contiguous vids.
-    """
-    import re as _re
-
-    from linkgraph.gql import PropertyGraph
-
-    def _val(s: str):
-        s = s.strip()
-        for cast in (int, float):
-            try:
-                return cast(s)
-            except ValueError:
-                pass
-        return s.strip("'\"")
-
-    def _bracket(b: str | None) -> tuple[str | None, dict]:
-        if not b:
-            return None, {}
-        parts = [p.strip() for p in b.split(",") if p.strip()]
-        label, props = None, {}
-        for p in parts:
-            if "=" in p:
-                k, _, v = p.partition("=")
-                props[k.strip()] = _val(v)
-            elif label is None:
-                label = p
-        return label, props
-
-    verts: dict[str, tuple[str | None, dict]] = {}
-    edges: list[tuple[str, str, str | None, dict]] = []
-    edge_re = _re.compile(r"^(\w+)\s*->\s*(\w+)\s*(?:\[(.*)\])?$")
-    vert_re = _re.compile(r"^(\w+)\s*(?:\[(.*)\])?$")
-    for raw in text.splitlines():
-        line = raw.strip()
-        if not line or line.startswith("#"):
-            continue
-        m = edge_re.match(line)
-        if m:
-            rel, props = _bracket(m.group(3))
-            edges.append((m.group(1), m.group(2), rel, props))
-            for name in (m.group(1), m.group(2)):
-                verts.setdefault(name, (None, {}))
-            continue
-        m = vert_re.match(line)
-        if m:
-            label, props = _bracket(m.group(2))
-            verts[m.group(1)] = (label, props)
-            continue
-        raise ValueError(f"cannot parse demo-graph line: {raw!r}")
-
-    vid = {name: i for i, name in enumerate(verts)}
-    by_label: dict[str, list] = {}
-    for name, (label, props) in verts.items():
-        by_label.setdefault(label or "V", []).append((name, props))
-    vtables = {}
-    for label, rows in by_label.items():
-        keys = sorted({k for _, p in rows for k in p})
-        data = [
-            {"vid": vid[n], "name": n, **{k: p.get(k) for k in keys}}
-            for n, p in rows
-        ]
-        vtables[label] = spark.createDataFrame(data)
-
-    by_type: dict[str, list] = {}
-    for s, o, rel, props in edges:
-        by_type.setdefault(rel or "E", []).append((s, o, props))
-    etables = {}
-    for rel, rows in by_type.items():
-        keys = sorted({k for _, _, p in rows for k in p})
-        data = [
-            {"src": vid[s], "dst": vid[o], **{k: p.get(k) for k in keys}}
-            for s, o, p in rows
-        ]
-        etables[rel] = spark.createDataFrame(data)
-    return PropertyGraph(vtables, etables)

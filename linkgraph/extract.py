@@ -136,17 +136,13 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(_batches, EXTRACTED_SCHEMA)
 
 
-def extracted_text(pages: DataFrame) -> DataFrame:
-    """(url, text) — the byte-identical-per-url extraction output."""
-    return extract_pages(pages).select("url", "text")
-
-
-def extracted_edges(pages: DataFrame) -> DataFrame:
-    """(src_url, dst_url, anchor) — one row per hyperlink occurrence.
+def extracted_edges(extracted: DataFrame) -> DataFrame:
+    """``extract_pages`` output -> (src_url, dst_url, anchor), one row per
+    hyperlink occurrence.
 
     The explode stays JVM-side; only the parse is Python.
     """
-    exploded = extract_pages(pages).select(
+    exploded = extracted.select(
         F.col("url").alias("src_url"), F.explode("links").alias("link")
     )
     return exploded.select(

@@ -328,32 +328,6 @@ def register_udtf(name: str, *, replace: bool = False):
     return deco
 
 
-def register_agg(name: str, *, replace: bool = False):
-    """Decorator: register a named aggregate (must be a mergeable
-    Spark aggregate expression — partial/final capable, like the
-    reference's BaseUdaf contract)."""
-
-    def deco(fn: Callable[..., Column]) -> Callable[..., Column]:
-        if name in AGGREGATES and not replace:
-            raise ValueError(f"aggregate {name!r} already registered")
-        AGGREGATES[name] = fn
-        return fn
-
-    return deco
-
-
-def agg_if(agg: Callable[..., Column], cond: Column, col: Column) -> Column:
-    """AggIfOpExpr (conditional aggregation, Expr.scala:236)."""
-    return agg(F.when(cond, col))
-
-
-def trans_count_by_day(ts: Column, min_count: int = 1) -> tuple[Column, Column]:
-    """TransCountByDay.java:30-60 — bucket timestamps by day, count with a
-    threshold. Returns (group_expr, filter_on_count) to use in
-    groupBy(...).agg(F.count) + where."""
-    return F.date_trunc("day", ts), F.count(F.lit(1)) >= min_count
-
-
 # --------------------------------------------------------------------------
 # geo functions (builtin/udf/Geo*.java + udtf/GeoBufferAndConvert2S2CellId)
 #

@@ -585,7 +585,7 @@ def parse(text: str) -> Query:
 
 def _is_agg_fn(name: str) -> bool:
     """Aggregate-ness resolves against the live registry, so aggregates
-    added via functions.register_agg compose with the front-end."""
+    added to functions.AGGREGATES compose with the front-end."""
     from linkgraph.functions import AGGREGATES
 
     return name in AGGREGATES

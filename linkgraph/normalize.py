@@ -16,7 +16,7 @@ Scale notes (100 TB design):
     range-repartition by key, sort within partitions, add per-partition
     offsets (one tiny driver-side collect of partition sizes). This is
     the DataFrame equivalent of zipWithIndex and scales linearly.
-  * dedup/degree computations are plain shuffles on the key they need;
+  * dedup computations are plain shuffles on the key they need;
     Spark's map-side partial aggregation collapses high-degree
     (power-law) keys to one row per partition before the exchange.
 """
@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import posixpath
 from collections.abc import Iterator
+from contextlib import contextmanager
 from urllib.parse import urlsplit, urlunsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
@@ -64,10 +66,7 @@ def canonicalize_url(url: str) -> str:
     return urlunsplit((scheme, netloc, norm, parts.query, ""))
 
 
-from pyspark.sql import types as _T  # noqa: E402
-
-
-@F.pandas_udf(_T.StringType())
+@F.pandas_udf(T.StringType())
 def canonicalize_url_udf(urls: pd.Series) -> pd.Series:  # pragma: no cover
     return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
 
@@ -86,56 +85,60 @@ def canonical_edges(raw_edges: DataFrame) -> DataFrame:
     return e.groupBy("src_url", "dst_url").agg(F.min("anchor").alias("anchor"))
 
 
-def assign_contiguous_ids(
-    df: DataFrame, key: str, id_col: str = "vid", num_partitions: int | None = None
-) -> DataFrame:
-    """Assign contiguous 0..N-1 ids ordered by ``key`` — scalably.
+def assign_contiguous_ids(df: DataFrame, key: str, id_col: str = "vid") -> DataFrame:
+    """``(id_col, *df.columns)`` with contiguous 0..N-1 ids ordered by
+    ``key`` — scalably. The result comes back cached and filled; the
+    caller unpersists it.
 
     No global window (which would funnel all rows through one task):
     range-partition on key, sort within partitions, then add the
     cumulative partition offsets computed from per-partition counts (a
     tiny driver-side array). Deterministic: id == rank of key.
     """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    num_partitions = df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartitionByRange(num_partitions, F.col(key)).sortWithinPartitions(key)
     parted = parted.persist()
-    sizes = (
-        parted.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    counts = {r["pid"]: r["count"] for r in sizes}
-    offsets = []
-    acc = 0
-    for pid in range(num_partitions):
-        offsets.append(acc)
-        acc += counts.get(pid, 0)
+    try:
+        sizes = (
+            parted.select(F.spark_partition_id().alias("pid"))
+            .groupBy("pid")
+            .count()
+            .collect()
+        )
+        counts = {r["pid"]: r["count"] for r in sizes}
+        offsets = []
+        acc = 0
+        for pid in range(num_partitions):
+            offsets.append(acc)
+            acc += counts.get(pid, 0)
 
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in parted.schema.fields
-    )
-    out_schema += f", `{id_col}` bigint"
+        def _add_ids(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from pyspark import TaskContext
 
-    def _add_ids(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+            pid = TaskContext.get().partitionId()
+            base = offsets[pid]
+            seen = 0
+            for pdf in pdfs:
+                pdf = pdf.copy()
+                pdf[id_col] = range(base + seen, base + seen + len(pdf))
+                seen += len(pdf)
+                yield pdf
 
-        pid = TaskContext.get().partitionId()
-        base = offsets[pid]
-        seen = 0
-        for pdf in pdfs:
-            pdf = pdf.copy()
-            pdf[id_col] = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    result = parted.mapInPandas(_add_ids, out_schema)
-    return result
+        schema = T.StructType([T.StructField(id_col, T.LongType()), *parted.schema])
+        result = parted.mapInPandas(_add_ids, schema).persist()
+        try:
+            result.count()  # filled before the cache it reads goes
+        except BaseException:
+            result.unpersist()
+            raise
+        return result
+    finally:
+        parted.unpersist()
 
 
 def build_vertices(edges_urls: DataFrame) -> DataFrame:
-    """Distinct canonical urls -> vertices(vid, url, url_hash).
+    """Distinct canonical urls -> vertices(vid, url, url_hash), cached
+    and filled (see ``assign_contiguous_ids``).
 
     ``url_hash`` is the reference-style 64-bit hashed business id
     (VertexId.java:30-32 analog via xxhash64); ``vid`` is the contiguous
@@ -146,8 +149,9 @@ def build_vertices(edges_urls: DataFrame) -> DataFrame:
         .unionAll(edges_urls.select(F.col("dst_url").alias("url")))
         .distinct()
     )
-    verts = assign_contiguous_ids(urls, "url", "vid")
-    return verts.select("vid", "url", F.xxhash64("url").alias("url_hash"))
+    return assign_contiguous_ids(
+        urls.select("url", F.xxhash64("url").alias("url_hash")), "url", "vid"
+    )
 
 
 def build_edges(
@@ -176,69 +180,25 @@ def build_edges(
     return e.repartition(num_buckets, "src")
 
 
-def degrees(edges: DataFrame) -> DataFrame:
-    """(vid, degree) — undirected degree over the simple graph."""
-    und = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    return und.distinct().groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
-
-
+@contextmanager
 def normalize_graph(
-    raw_edges: DataFrame, all_urls: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Full normalization: raw url links -> (vertices, edges).
-
-    ``all_urls`` (a one-column ``url`` frame, e.g. ``pages.select("url")``)
-    additionally registers pages nobody links to/from as isolated
-    vertices — singleton components for CC/LPA (FIXTURES.md §2).
+    raw_edges: DataFrame, num_buckets: int | None = None
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+    """Raw url links -> ``(canon, vertices, edges)`` for a ``with`` block:
+    ``canonical_edges``, ``build_vertices`` and ``build_edges`` (hashed
+    into ``num_buckets``). ``canon`` and ``vertices`` are cached for the
+    block, since both edge joins and the caller read them, and released
+    when it exits, on error too.
     """
-    canon = canonical_edges(raw_edges)
-    if all_urls is not None:
-        extra = all_urls.select(canonicalize_url_udf("url").alias("url"))
-        urls = (
-            canon.select(F.col("src_url").alias("url"))
-            .unionAll(canon.select(F.col("dst_url").alias("url")))
-            .unionAll(extra)
-            .distinct()
-        )
-        vertices = assign_contiguous_ids(urls, "url", "vid").select(
-            "vid", "url", F.xxhash64("url").alias("url_hash")
-        ).persist()
-    else:
-        vertices = build_vertices(canon).persist()
-    vertices.count()  # materialize once; reused by both joins below
-    edges = build_edges(canon, vertices)
-    return vertices, edges
-
-
-def latest_snapshot(
-    pages: DataFrame,
-    key_col: str = "url",
-    version_col: str = "warc_ts",
-    as_of=None,
-) -> DataFrame:
-    """Latest version of each page at-or-before ``as_of`` (``None`` =
-    latest overall) — multi-version property semantics (KTMultiVersion,
-    /root/reference/reasoner/lube-api/src/main/scala/com/antgroup/openspg/reasoner/common/types/KgType.scala:72;
-    VertexVersionProperty.java:30): a crawl corpus carries many
-    (url, warc_ts) captures; a graph build reads one consistent snapshot.
-
-    One window over (key, version desc) — a single shuffle by key; feed
-    the result to ``normalize_graph(extracted_edges(...))`` for an
-    as-of-timestamp graph build.
-    """
-    from pyspark.sql import Window
-
-    df = pages if as_of is None else pages.where(F.col(version_col) <= F.lit(as_of))
-    w = Window.partitionBy(key_col).orderBy(F.col(version_col).desc())
-    return (
-        df.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") == 1)
-        .drop("__rn__")
-    )
+    canon = canonical_edges(raw_edges).persist()
+    vertices = None
+    try:
+        vertices = build_vertices(canon)
+        yield canon, vertices, build_edges(canon, vertices, num_buckets)
+    finally:
+        canon.unpersist()
+        if vertices is not None:
+            vertices.unpersist()
 
 
 def host_of(url_col) -> "F.Column":

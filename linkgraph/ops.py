@@ -5,16 +5,13 @@ Parity map (SURVEY.md §2.1; contract:
 /root/reference/reasoner/lube-physical/src/main/scala/com/antgroup/openspg/reasoner/lube/physical/rdg/RDG.scala;
 execution: /root/reference/reasoner/runner/local-runner/.../rdg/LocalRDG.java):
 
-  start_from_ids        Start (RDG seeds, LocalRDG.java:200-235)
-  expand / expand_into  PatternScan/ExpandInto (RDG.scala:41,50; LocalRDG.java:238-333,499-610)
+  expand                PatternScan (RDG.scala:41; LocalRDG.java:238-333)
   var_len_expand        BoundedVarLenExpand (PhysicalPlanner unrolling)
-  top_k / order_limit   OrderAndLimit incl. per-group top-k (RDG.scala:76)
-  pattern_join          Join inner/left/full (RDG.scala:144, LocalRDG.java:1206-1311)
+  top_k                 per-group OrderAndLimit (RDG.scala:76)
   optional              Optional → left outer (lube-logical Optional.scala:20)
   semi / anti           ExpandInto intersection pruning / Exists predicate
   pattern_union         PatternUnion (unimplemented in LocalRDG:1338 — we
                         choose unionByName + dropDuplicates)
-  fold / unfold         Fold/Unfold (RDG.scala:163,171; LocalRDG.java:1314-1360)
 
 Everything here lowers to Catalyst-native plans — predicate pushdown,
 column pruning, broadcast selection and AQE skew handling come for free
@@ -27,16 +24,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-# --------------------------------------------------------------------------
-# seeds
-# --------------------------------------------------------------------------
-
-
-def start_from_ids(spark, ids: Sequence, id_col: str = "vid") -> DataFrame:
-    """Start from an explicit id list (reference startIdList seeds)."""
-    return spark.createDataFrame([(i,) for i in ids], f"{id_col} bigint")
-
 
 # --------------------------------------------------------------------------
 # pattern growth
@@ -64,21 +51,6 @@ def expand(
     return joined.select(*keep, F.col(edge_dst).alias(out_col))
 
 
-def expand_into(
-    frontier: DataFrame,
-    edges: DataFrame,
-    bound: DataFrame,
-    on: str = "vid",
-    edge_src: str = "src",
-    edge_dst: str = "dst",
-    out_col: str = "vid",
-) -> DataFrame:
-    """Expand, then prune against already-bound vertices (intersection
-    semantics of KgGraph.expandAndPrune — a semi-join, not a re-match)."""
-    grown = expand(frontier, edges, on, edge_src, edge_dst, out_col)
-    return grown.join(bound, grown[out_col] == bound[on], "left_semi")
-
-
 def var_len_expand(
     frontier: DataFrame,
     edges: DataFrame,
@@ -92,11 +64,7 @@ def var_len_expand(
     cur = frontier.select(F.col(on).alias("start"), F.col(on).alias("vid"))
     out = cur.withColumn("hops", F.lit(0)) if lower == 0 else None
     for hop in range(1, upper + 1):
-        cur = (
-            cur.join(edges, cur["vid"] == edges["src"])
-            .select("start", F.col("dst").alias("vid"))
-            .dropDuplicates(["start", "vid"])
-        )
+        cur = expand(cur, edges).dropDuplicates(["start", "vid"])
         if hop >= lower:
             step = cur.withColumn("hops", F.lit(hop))
             out = step if out is None else out.unionByName(step)
@@ -190,15 +158,6 @@ def var_len_expand_paths(
 # --------------------------------------------------------------------------
 
 
-def order_limit(df: DataFrame, order_by: Sequence[Column], k: int = 100) -> DataFrame:
-    """Global top-k (reference default limit 100, RDG.scala:76).
-
-    orderBy+limit compiles to TakeOrderedAndProject — no global sort of
-    the full table, each partition keeps k then the driver merges.
-    """
-    return df.orderBy(*order_by).limit(k)
-
-
 def top_k(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column], k: int
 ) -> DataFrame:
@@ -214,20 +173,6 @@ def top_k(
 # --------------------------------------------------------------------------
 # joins / set ops
 # --------------------------------------------------------------------------
-
-
-def pattern_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Inner/LeftOuter/FullOuter RDG join (LocalRDG supported set,
-    LocalRDG.java:1200-1203)."""
-    assert how in ("inner", "left", "full"), f"unsupported join type {how}"
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, list(on), how)
 
 
 def optional(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
@@ -252,25 +197,6 @@ def pattern_union(*dfs: DataFrame, distinct: bool = True) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
     return out.dropDuplicates() if distinct else out
-
-
-# --------------------------------------------------------------------------
-# fold / unfold
-# --------------------------------------------------------------------------
-
-
-def fold(df: DataFrame, keys: Sequence[str], cols: Sequence[str], out: str = "path") -> DataFrame:
-    """Fold repeated rows into a deterministic (sorted) array of structs."""
-    return df.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(F.struct(*cols))).alias(out)
-    )
-
-
-def unfold(df: DataFrame, col: str) -> DataFrame:
-    """Inverse of fold: explode + flatten + dedup (LocalRDG.java:1314-1335)."""
-    exploded = df.withColumn("__e__", F.explode(col)).drop(col)
-    inner = exploded.select("*", "__e__.*").drop("__e__")
-    return inner.dropDuplicates()
 
 
 def linked_expand(

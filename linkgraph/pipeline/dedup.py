@@ -144,7 +144,7 @@ def minhash_signature(
     """(id, sig array<bigint>): sig[i] = min over the character
     k-shingles of the lowercased, space-normalized text of
     (a_i * x + b_i) mod P, x = portable polynomial shingle hash
-    (phash.char_hash — same family DuckDB reproduces for the oracle).
+    (phash.char_hash_sql — same family DuckDB reproduces for the oracle).
 
     Normalization stays a Catalyst expression (JVM regex and case
     mapping); hashing is one ``mapInArrow`` pass of ``phash.minhash_np``
@@ -474,40 +474,6 @@ def hamming_pairs(
     # |corpus| hashed rows in executor storage with no release handle
     sims.unpersist()
     return out
-
-
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard for given (a, b) pairs — the verify step
-    after LSH candidate generation."""
-    grams = docs.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(
-                        F.size(F.split(F.trim(F.col(text_col)), r"\s+")) - F.lit(n - 1),
-                        F.lit(1),
-                    ),
-                ),
-                lambda i: F.array_join(
-                    F.slice(F.split(F.trim(F.col(text_col)), r"\s+"), i, n), " "
-                ),
-            )
-        ).alias("grams"),
-    )
-    ga = grams.select(F.col("id").alias("a"), F.col("grams").alias("ga"))
-    gb = grams.select(F.col("id").alias("b"), F.col("grams").alias("gb"))
-    j = pairs.join(ga, "a").join(gb, "b")
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    union = F.size(F.array_union("ga", "gb")).cast("double")
-    return j.select("a", "b", (inter / union).alias("jaccard"))
 
 
 def _driver_union_find(spark, pairs: DataFrame) -> DataFrame:

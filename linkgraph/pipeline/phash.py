@@ -65,23 +65,13 @@ def _pow_base(j: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def char_hash(col: Column, k: int) -> Column:
-    """Polynomial hash of the first ``k`` characters (Spark side).
-
-    Positions past the end contribute 0 WITHOUT a branch: both engines
-    define substring-past-end = '' and ascii('') = 0 (verified), so
-    strings shorter than ``k`` hash consistently — and dropping the
-    per-char CASE guards shrinks whole-stage codegen ~3×.
-    """
-    total = F.lit(0).cast("long")
-    for j in range(k):
-        c = _pow_base(k - 1 - j)
-        total = total + F.ascii(F.substring(col, j + 1, 1)).cast("long") * F.lit(c)
-    return total % F.lit(P)
-
-
 def char_hash_sql(expr: str, k: int) -> str:
-    """DuckDB twin of :func:`char_hash` over SQL expression ``expr``."""
+    """Polynomial hash of the first ``k`` characters of SQL expression
+    ``expr`` (DuckDB), the shingle hash :func:`minhash_np` computes.
+
+    Positions past the end contribute 0 without a branch: substring past
+    the end is '' and ascii('') = 0, so strings shorter than ``k`` hash
+    consistently."""
     terms = []
     for j in range(k):
         c = _pow_base(k - 1 - j)
@@ -144,7 +134,7 @@ def combine_sql(exprs: list[str]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# numpy twins of the MinHash path (char_hash -> affine minima -> combine_sql)
+# numpy twins of the MinHash path (char_hash_sql -> affine minima -> combine_sql)
 # ---------------------------------------------------------------------------
 
 
@@ -153,17 +143,17 @@ def minhash_np(
 ) -> tuple[np.ndarray, np.ndarray]:
     """MinHash signatures of a batch of strings: ``(sig, valid)`` with
     ``sig[d, i]`` = min over the k-shingles of text ``d`` of
-    ``affine(char_hash(shingle, k), *coeffs[i])`` and ``valid[d]`` False
+    ``affine(char_hash_sql(shingle, k), *coeffs[i])`` and ``valid[d]`` False
     for a null text (its ``sig`` row is that of ``''``; callers emit
     nulls).
 
-    Exactly the Column form's semantics: characters are code points
+    Exactly the SQL form's semantics: characters are code points
     (UTF-32, so an astral character is one position), positions past
     the end count as 0, and a text shorter than ``k`` (``''`` included)
     has exactly one shingle. Each text is laid out followed by ``k``
     zero code points, so one rolling polynomial over the whole batch
     gives every shingle hash; a NUL character hashes as 0 either way.
-    Intermediates match char_hash's int64 bounds (< 2^55, then < 2^60
+    Intermediates match char_hash_sql's int64 bounds (< 2^55, then < 2^60
     after the affine step)."""
     filled = pc.fill_null(texts, "")
     n_docs = len(filled)

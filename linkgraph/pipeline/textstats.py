@@ -1,5 +1,5 @@
 """Text analysis operators: token counting, quality scoring, language ID,
-document fingerprinting. All pure Catalyst expressions (JVM-side)."""
+chunking and line dedup. All pure Catalyst expressions (JVM-side)."""
 
 from __future__ import annotations
 
@@ -151,13 +151,6 @@ def repetition_stats(
             / F.greatest(F.col("n_2grams"), F.lit(1))
         ).alias("max_2gram_frac"),
     )
-
-
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, fp bigint) — order-independent-normalized content fingerprint:
-    xxhash64 of the whitespace-normalized lowercase text."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    return docs.select(F.col(id_col), F.xxhash64(norm).alias("fp"))
 
 
 def quality_filter(

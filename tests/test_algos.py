@@ -207,7 +207,14 @@ def test_k_core_peeling(spark):
 
 
 def test_random_walks_deterministic_and_dead_ends(spark):
-    from linkgraph.algos.walks import random_walks, walk_sequences
+    from linkgraph.algos.walks import random_walks
+
+    def sequences(walks):
+        steps = sorted((r["walk_id"], r["step"], r["vid"]) for r in walks.collect())
+        seqs = {}
+        for wid, _step, vid in steps:
+            seqs.setdefault(wid, []).append(vid)
+        return seqs
 
     e = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 4), (3, 4)], "src bigint, dst bigint"
@@ -215,7 +222,7 @@ def test_random_walks_deterministic_and_dead_ends(spark):
     w1 = {(r["walk_id"], r["step"], r["vid"]) for r in random_walks(e, 3).collect()}
     w2 = {(r["walk_id"], r["step"], r["vid"]) for r in random_walks(e, 3).collect()}
     assert w1 == w2  # seeded determinism across runs
-    seqs = {r["walk_id"]: r["seq"] for r in walk_sequences(random_walks(e, 3)).collect()}
+    seqs = sequences(random_walks(e, 3))
     # every walk starts at its id and follows real edges until a dead end
     edges = {(1, 2), (1, 3), (2, 4), (3, 4)}
     for wid, seq in seqs.items():
@@ -224,7 +231,7 @@ def test_random_walks_deterministic_and_dead_ends(spark):
             assert (a, b) in edges
         assert seq[-1] == 4  # all paths sink at the dead end
     # a different seed can choose differently somewhere
-    alt = {r["walk_id"]: r["seq"] for r in walk_sequences(random_walks(e, 3, seed=3)).collect()}
+    alt = sequences(random_walks(e, 3, seed=3))
     assert set(alt) == set(seqs)
     assert alt != seqs  # the seed actually steers choices on this fixture
 

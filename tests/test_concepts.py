@@ -1,6 +1,6 @@
 from pyspark.sql import functions as F
 
-from linkgraph.concepts import concept_closure, concept_edge_expand, edge_to_property
+from linkgraph.concepts import concept_closure, concept_edge_expand
 
 
 def test_concept_closure(spark):
@@ -36,19 +36,6 @@ def test_concept_edge_expand_and_filter(spark):
         for r in concept_edge_expand(bt, isa, target_concepts=["dog"]).collect()
     }
     assert only_dogs == {1, 2}
-
-
-def test_edge_to_property(spark):
-    ents = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "entity bigint, name string")
-    tags = spark.createDataFrame(
-        [(1, "zebra"), (1, "apple"), (2, "dog")], "entity bigint, concept string"
-    )
-    got = {
-        (r["entity"], r["tag"])
-        for r in edge_to_property(ents, tags, "tag").collect()
-    }
-    # deterministic min on multi-tag; untagged entity keeps NULL (left join)
-    assert got == {(1, "apple"), (2, "dog"), (3, None)}
 
 
 def test_concept_closure_depth_guard(spark):

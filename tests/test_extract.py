@@ -2,9 +2,9 @@
 
 from linkgraph.extract import (
     extract_links,
+    extract_pages,
     extract_text,
     extracted_edges,
-    extracted_text,
 )
 from linkgraph.normalize import canonicalize_url
 
@@ -41,14 +41,14 @@ def test_extract_links_resolution():
 
 def test_spark_extracted_text_byte_identical(tiny_pages):
     pages, _plan = tiny_pages
-    got = {r["url"]: r["text"] for r in extracted_text(pages).collect()}
+    got = {r["url"]: r["text"] for r in extract_pages(pages).collect()}
     expected = {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
     assert got == expected  # byte-identical per url
 
 
 def test_spark_extracted_edges_match_plan(tiny_pages):
     pages, plan = tiny_pages
-    raw = extracted_edges(pages).collect()
+    raw = extracted_edges(extract_pages(pages)).collect()
     got = {
         (canonicalize_url(r["src_url"]), canonicalize_url(r["dst_url"]))
         for r in raw

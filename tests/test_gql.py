@@ -229,36 +229,6 @@ def test_pinned_root_same_result(g):
     assert auto == forced and auto == {(1, 2), (1, 3), (2, 3)}
 
 
-def test_demo_graph_dsl(spark):
-    from linkgraph.datagen import demo_graph
-
-    g2 = demo_graph(
-        spark,
-        """
-        # tiny social graph
-        alice [User, age=30]
-        bob [User, age=25]
-        corp [Org]
-        alice -> bob [knows, since=2020]
-        bob -> corp [works_at]
-        alice -> corp [works_at]
-        """,
-    )
-    got = {
-        (r["n"], r["o"])
-        for r in compile_query(
-            "MATCH (u:User)-[e:works_at]->(c:Org) WHERE u.age < 28 "
-            "RETURN u.name AS n, c.name AS o",
-            g2,
-        ).collect()
-    }
-    assert got == {("bob", "corp")}
-    both = compile_query(
-        "MATCH (u:User)-[e:works_at]->(c:Org) RETURN count(*) AS n", g2
-    ).collect()[0]["n"]
-    assert both == 2
-
-
 def test_varlen_from_dst_pinned_root(g):
     """A var-len edge reached from its dst side walks reversed edges and
     flips the path back to forward orientation."""
@@ -277,18 +247,18 @@ def test_varlen_from_dst_pinned_root(g):
 
 
 def test_registered_agg_composes_with_gql(g):
-    from linkgraph.functions import register_agg
+    from linkgraph.functions import AGGREGATES
 
-    @register_agg("sum_sq_gql_test", replace=True)
-    def sum_sq(c):
-        return F.sum(c * c)
-
-    got = {
-        (r["a"], r["ss"])
-        for r in compile_query(
-            "MATCH (a)-[e]->(b) RETURN a AS a, sum_sq_gql_test(b.vid) AS ss", g
-        ).collect()
-    }
+    AGGREGATES["sum_sq_gql_test"] = lambda c: F.sum(c * c)
+    try:
+        got = {
+            (r["a"], r["ss"])
+            for r in compile_query(
+                "MATCH (a)-[e]->(b) RETURN a AS a, sum_sq_gql_test(b.vid) AS ss", g
+            ).collect()
+        }
+    finally:
+        del AGGREGATES["sum_sq_gql_test"]
     assert got == {(1, 13), (2, 25), (3, 16), (4, 25)}
 
 

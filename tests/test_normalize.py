@@ -1,6 +1,6 @@
 from pyspark.sql import functions as F
 
-from linkgraph.extract import extracted_edges
+from linkgraph.extract import extract_pages, extracted_edges
 from linkgraph.normalize import (
     assign_contiguous_ids,
     canonicalize_url,
@@ -24,51 +24,38 @@ def test_canonicalize_url_cases():
 
 def test_assign_contiguous_ids(spark):
     df = spark.createDataFrame([(w,) for w in "delta alpha echo bravo charlie".split()], "k string")
-    out = assign_contiguous_ids(df, "k", "vid", num_partitions=3).collect()
-    got = {r["k"]: r["vid"] for r in out}
+    ids = assign_contiguous_ids(df, "k", "vid")
+    try:
+        # the session's default parallelism spreads the 5 keys over
+        # several range partitions, so the offsets are exercised
+        assert ids.rdd.getNumPartitions() > 1
+        assert ids.columns == ["vid", "k"]
+        got = {r["k"]: r["vid"] for r in ids.collect()}
+    finally:
+        ids.unpersist()
     assert got == {"alpha": 0, "bravo": 1, "charlie": 2, "delta": 3, "echo": 4}
 
 
 def test_normalize_graph_end_to_end(spark, tiny_pages):
     pages, plan = tiny_pages
-    raw = extracted_edges(pages)
-    vertices, edges = normalize_graph(raw)
-    # vertex set = endpoints of the expected canonical edge set
-    exp_urls = {u for e in plan.edge_urls() for u in e}
-    assert {r["url"] for r in vertices.collect()} == exp_urls
-    vids = [r["vid"] for r in vertices.orderBy("vid").collect()]
-    assert vids == list(range(len(exp_urls)))  # contiguous 0..V-1
-    # edge set matches the plan exactly after id mapping
-    url_of = {r["vid"]: r["url"] for r in vertices.collect()}
-    got = {(url_of[r["src"]], url_of[r["dst"]]) for r in edges.collect()}
-    assert got == plan.edge_urls()
-    # no self loops, no duplicates
-    assert edges.where(F.col("src") == F.col("dst")).count() == 0
-    assert edges.count() == edges.select("src", "dst").distinct().count()
+    raw = extracted_edges(extract_pages(pages))
+    with normalize_graph(raw, num_buckets=3) as (canon, vertices, edges):
+        # vertex set = endpoints of the expected canonical edge set
+        exp_urls = {u for e in plan.edge_urls() for u in e}
+        rows = vertices.collect()
+        assert {r["url"] for r in rows} == exp_urls
+        # contiguous 0..V-1 in url order
+        assert [r["vid"] for r in sorted(rows, key=lambda r: r["url"])] == list(
+            range(len(exp_urls))
+        )
+        assert all(r["url_hash"] is not None for r in rows)
+        assert {(r["src_url"], r["dst_url"]) for r in canon.collect()} == plan.edge_urls()
+        # edge set matches the plan exactly after id mapping
+        url_of = {r["vid"]: r["url"] for r in rows}
+        got = {(url_of[r["src"]], url_of[r["dst"]]) for r in edges.collect()}
+        assert got == plan.edge_urls()
+        assert edges.rdd.getNumPartitions() == 3
+        # no self loops, no duplicates
+        assert edges.where(F.col("src") == F.col("dst")).count() == 0
+        assert edges.count() == edges.select("src", "dst").distinct().count()
 
-
-def test_latest_snapshot_multi_version(spark):
-    import datetime as dt
-
-    from linkgraph.normalize import latest_snapshot
-
-    t = lambda d: dt.datetime(2024, 1, d)  # noqa: E731
-    pages = spark.createDataFrame(
-        [
-            ("a", t(1), "a-v1"),
-            ("a", t(5), "a-v2"),
-            ("a", t(9), "a-v3"),
-            ("b", t(3), "b-v1"),
-        ],
-        "url string, warc_ts timestamp, html string",
-    )
-    latest = {r["url"]: r["html"] for r in latest_snapshot(pages).collect()}
-    assert latest == {"a": "a-v3", "b": "b-v1"}
-    asof = {
-        r["url"]: r["html"]
-        for r in latest_snapshot(pages, as_of=t(6)).collect()
-    }
-    assert asof == {"a": "a-v2", "b": "b-v1"}
-    # as_of before any capture of a url -> that url absent from the snapshot
-    early = {r["url"] for r in latest_snapshot(pages, as_of=t(2)).collect()}
-    assert early == {"a"}

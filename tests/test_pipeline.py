@@ -54,13 +54,6 @@ def test_simhash_near_for_near_dups(docs):
     assert hamming(got[0], got[2]) < hamming(got[0], got[3])
 
 
-def test_ngram_jaccard(spark, docs):
-    pairs = spark.createDataFrame([(0, 1), (0, 3)], "a bigint, b bigint")
-    got = {(r["a"], r["b"]): r["jaccard"] for r in dedup.ngram_jaccard(docs, pairs).collect()}
-    assert got[(0, 1)] == 1.0
-    assert got[(0, 3)] < 0.1
-
-
 def test_text_stats(docs):
     got = {r["doc_id"]: r for r in textstats.text_stats(docs).collect()}
     assert got[0]["n_tokens"] == 25
@@ -73,15 +66,6 @@ def test_lang_id(docs):
     assert got[0] == "en"
     assert got[4] == "de"
     assert got[5] == "es"
-
-
-def test_fingerprint_whitespace_invariant(spark):
-    df = spark.createDataFrame(
-        [(0, "Hello  World"), (1, "hello world"), (2, "other")],
-        "doc_id bigint, text string",
-    )
-    got = {r["doc_id"]: r["fp"] for r in textstats.fingerprint(df).collect()}
-    assert got[0] == got[1] != got[2]
 
 
 @pytest.fixture(scope="module")

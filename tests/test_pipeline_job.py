@@ -174,27 +174,56 @@ def test_independent_stages_overlap(spark, pages_dir, tmp_path):
             assert done[dep]["finished_at"] <= _window(done[stage])[0] + 1e-3, done
 
 
+def _caches(spark) -> int:
+    """DataFrame caches alive in the session: persistent RDDs that are
+    not local checkpoints (those go only when JVM GC runs)."""
+    rdds = [r.rdd() for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
+    return sum(1 for r in rdds if not r.isCheckpointed())
+
+
 def test_failed_stage_stops_only_its_dependents(spark, pages_dir, tmp_path, monkeypatch):
     """normalize raising leaves host_graph and PageRank unstarted, while
     dedup and resolve run to their end and commit; the rerun resumes
-    without recomputing them."""
+    without recomputing them. Neither pass leaves a cache behind."""
     import linkgraph.normalize
 
     def broken(*args, **kwargs):
         raise ArithmeticError("normalize broke")
 
     out = str(tmp_path / "run7")
+    before = _caches(spark)
     monkeypatch.setattr(linkgraph.normalize, "build_edges", broken)
     with pytest.raises(ArithmeticError, match="normalize broke"):
         run_pipeline(spark, pages_dir, out, pagerank_iters=3)
+    assert _caches(spark) == before
     with open(os.path.join(out, "_manifest.json")) as f:
         m1 = json.load(f)["completed"]
     assert set(m1) == {"extract", "dedup", "resolve"}
 
     monkeypatch.undo()
     manifest = run_pipeline(spark, pages_dir, out, pagerank_iters=3)
+    assert _caches(spark) == before
     assert set(manifest["completed"]) == set(STAGES)
     for stage in m1:
         assert manifest["completed"][stage]["finished_at"] == m1[stage]["finished_at"]
     rows = spark.read.parquet(f"{out}/metrics").collect()
     assert sorted(r["stage"] for r in rows) == sorted(STAGES)
+
+
+def test_failed_extract_releases_its_cache(spark, pages_dir, tmp_path, monkeypatch):
+    """extract's raw-edge write failing after its text write filled the
+    parsed-pages cache still releases that cache."""
+    from pyspark.sql import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+
+    def broken(self, path, *args, **kwargs):
+        if path.endswith("/raw_edges"):
+            raise ArithmeticError("raw_edges write broke")
+        return write(self, path, *args, **kwargs)
+
+    before = _caches(spark)
+    monkeypatch.setattr(DataFrameWriter, "parquet", broken)
+    with pytest.raises(ArithmeticError, match="raw_edges write broke"):
+        run_pipeline(spark, pages_dir, str(tmp_path / "run8"), pagerank_iters=3)
+    assert _caches(spark) == before

@@ -59,7 +59,7 @@ def test_scan_prunes_columns_and_pushes_filters(spark):
 
 def test_global_topk_is_take_ordered_not_full_sort(spark):
     orders = load_table(spark, SF_DIR, "orders")
-    q = ops.order_limit(orders, [F.col("o_totalprice").desc()], k=10)
+    q = orders.orderBy(F.col("o_totalprice").desc()).limit(10)
     plan = plan_str(q)
     assert "TakeOrderedAndProject" in plan
     # no Sort operator node anywhere — TakeOrderedAndProject keeps k

@@ -78,23 +78,18 @@ def test_phash_cross_engine_parity_random_unicode(spark):
     ]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)], "i int, s string")
     got = {
-        r["i"]: (r["ch"], r["th"])
-        for r in df.select(
-            "i",
-            phash.char_hash(F.col("s"), 7).alias("ch"),
-            phash.token_hash(F.col("s")).alias("th"),
-        ).collect()
+        r["i"]: r["th"]
+        for r in df.select("i", phash.token_hash(F.col("s")).alias("th")).collect()
     }
     con = duckdb.connect()
-    ch = phash.char_hash_sql("s", 7)
     th = phash.token_hash_sql("s")
     for i, s in enumerate(samples):
-        row = con.execute(f"SELECT {ch}, {th} FROM (SELECT ? AS s)", [s]).fetchone()
-        assert got[i] == (row[0], row[1]), f"mismatch on {s!r}"
+        row = con.execute(f"SELECT {th} FROM (SELECT ? AS s)", [s]).fetchone()
+        assert got[i] == row[0], f"mismatch on {s!r}"
 
     # the numpy MinHash kernel, run by Spark over Arrow batches, against
     # a big-int Python reference and the DuckDB replica of the Catalyst
-    # form (shingles -> char_hash -> affine minima -> band fold)
+    # form (shingles -> char_hash_sql -> affine minima -> band fold)
     k, num_hashes, bands = 7, 16, 4
     coeffs = phash.seeded_coeffs(num_hashes, 7)
     sigs = {

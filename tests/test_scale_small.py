@@ -14,7 +14,7 @@ import pytest
 
 from linkgraph.algos import connected_components, pagerank, triangle_count
 from linkgraph.datagen import pages_spark
-from linkgraph.extract import extracted_edges, extracted_text
+from linkgraph.extract import extract_pages, extracted_edges
 from linkgraph.normalize import normalize_graph
 from tests.oracles import components_oracle, pagerank_oracle, triangles_oracle
 
@@ -29,29 +29,27 @@ N = 2000
 @pytest.fixture(scope="module")
 def built(spark):
     pages, plan = pages_spark(spark, n=N, seed=42)
-    pages = pages.persist()
-    vertices, edges = normalize_graph(
-        extracted_edges(pages), all_urls=pages.select("url")
-    )
-    vertices, edges = vertices.persist(), edges.persist()
-    return pages, plan, vertices, edges
+    extracted = extract_pages(pages).persist()
+    with normalize_graph(extracted_edges(extracted)) as (_canon, vertices, edges):
+        yield pages, extracted, plan, vertices, edges
+    extracted.unpersist()
 
 
 def test_full_pipeline_text_and_graph(built):
-    pages, plan, vertices, edges = built
+    pages, extracted, plan, vertices, edges = built
     # byte-identical extraction at scale
-    got = {r["url"]: r["text"] for r in extracted_text(pages).collect()}
+    got = {r["url"]: r["text"] for r in extracted.collect()}
     exp = {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
     assert got == exp
-    # vertex set = every page (incl. isolated singletons); edge set exact
-    assert vertices.count() == N
+    # vertex set = the endpoints of the planned edges; edge set exact
     url_of = {r["vid"]: r["url"] for r in vertices.collect()}
+    assert set(url_of.values()) == {u for e in plan.edge_urls() for u in e}
     got_edges = {(url_of[r["src"]], url_of[r["dst"]]) for r in edges.collect()}
     assert got_edges == plan.edge_urls()
 
 
 def test_algorithms_at_scale(built):
-    _pages, plan, vertices, edges = built
+    _pages, _extracted, plan, vertices, edges = built
     url_vid = {r["url"]: r["vid"] for r in vertices.collect()}
     vid_of = lambda v: url_vid[plan.url(v)]  # noqa: E731
     oracle_edges = {(vid_of(a), vid_of(b)) for a, b in plan.edge_vids()}
@@ -67,7 +65,8 @@ def test_algorithms_at_scale(built):
     sizes = sorted(
         (list(got_cc.values()).count(c) for c in set(got_cc.values())), reverse=True
     )
-    assert sizes[0] > N * 0.5 and sizes.count(1) >= 1  # giant + singletons
+    # giant component; isolated pages are not vertices, so no singletons
+    assert sizes[0] > N * 0.5 and 1 not in sizes
 
     pr_exp, _ = pagerank_oracle(oracle_edges, oracle_verts, tol=1e-6, max_iter=200)
     got_pr = {
